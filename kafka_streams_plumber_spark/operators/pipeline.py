@@ -195,13 +195,9 @@ class Pipeline:
 
 
 def _py_udf(fn, schema):
-    """Row-Python UDF, Arrow-serialized when the runtime supports it
-    (SPARK-40307): same per-row semantics, much cheaper JVM<->Python
-    transfer than pickle."""
-    try:
-        return F.udf(fn, schema, useArrow=True)
-    except TypeError:  # runtime without the useArrow kwarg
-        return F.udf(fn, schema)
+    """Row-Python UDF, Arrow-serialized (SPARK-40307): same per-row
+    semantics, much cheaper JVM<->Python transfer than pickle."""
+    return F.udf(fn, schema, useArrow=True)
 
 
 def _parse_ddl(ddl: str) -> DataType:

@@ -11,12 +11,15 @@ everywhere it exists because this fallback is a row-at-a-time UDF.
 
 The codec is driven by the same parsed schema model as conform()
 (sources/avsc.py), so union branch order and enum symbol order are
-preserved exactly.
+preserved exactly. Data from another writer schema decodes through a
+plan from sources/avsc.resolve: the writer model plus two plan nodes.
 """
 
 from __future__ import annotations
 
 import struct
+from collections.abc import Callable
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import types as T
@@ -57,6 +60,28 @@ def _zigzag_decode(buf: bytes, pos: int) -> tuple[int, int]:
             break
         shift += 7
     return (acc >> 1) ^ -(acc & 1), pos
+
+
+# ---------------------------------------------------------------------------
+# resolution plan nodes (built by sources/avsc.resolve)
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class Promote:
+    """Decode the writer primitive, then apply a spec promotion."""
+
+    writer: Any
+    convert: Callable[[Any], Any]
+
+
+@dataclass(frozen=True)
+class ReadRecord:
+    """Writer-ordered (reader name or None to skip, plan) ``steps`` filling
+    a reader-ordered ``template`` that holds reader-only defaults."""
+
+    steps: tuple[tuple[str | None, Any], ...]
+    template: dict
 
 
 # ---------------------------------------------------------------------------
@@ -173,6 +198,16 @@ def decode_value(buf: bytes, pos: int, schema: Any) -> tuple[Any, int]:
         for f in schema.fields:
             out[f.name], pos = decode_value(buf, pos, f.type)
         return out, pos
+    if isinstance(schema, Promote):
+        v, pos = decode_value(buf, pos, schema.writer)
+        return schema.convert(v), pos
+    if isinstance(schema, ReadRecord):
+        out = dict(schema.template)
+        for name, plan in schema.steps:
+            v, pos = decode_value(buf, pos, plan)
+            if name is not None:
+                out[name] = v
+        return out, pos
     raise NotImplementedError(f"avro decode: {schema!r}")
 
 
@@ -180,6 +215,16 @@ def encode_record(v: Any, schema: Record) -> bytes:
     return encode_value(v, schema)
 
 
-def decode_record(buf: bytes, schema: Record) -> dict:
-    out, _ = decode_value(bytes(buf), 0, schema)
+def decode_record(buf: bytes, schema: Any) -> dict:
+    """Decode one whole payload with ``schema`` (a writer model or a
+    resolution plan); ValueError when it is truncated or has bytes left
+    over."""
+    buf = bytes(buf)
+    try:
+        out, pos = decode_value(buf, 0, schema)
+    except (IndexError, struct.error) as e:
+        raise ValueError(f"avro payload truncated or corrupt: {e}") from e
+    if pos != len(buf):
+        why = "truncated" if pos > len(buf) else f"{len(buf) - pos} trailing bytes"
+        raise ValueError(f"avro payload: {why}")
     return out

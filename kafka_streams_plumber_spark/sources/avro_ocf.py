@@ -13,15 +13,15 @@ no fastavro/avro-python3 dependency:
 - blocks: zigzag-long record count + byte size, payload (``null`` or
   ``deflate`` codec), then the sync marker again (corruption check);
 - records: sources/avro_codec.decode_value against the file's WRITER
-  schema (parsed by sources/avsc.parse_avsc).
+  schema (parsed by sources/avsc.parse_avsc), or against its resolution
+  plan when a reader schema is given.
 
-Schema evolution follows the reader/writer resolution already shipped
-for the streaming gate: ``read_avro_ocf(reader_schema=...)`` runs
-sources/avsc.assert_can_read (promotions, by-name match + defaults,
-enum symbols, union fan-out) against EVERY file's writer schema before
-decoding, then projects decoded records onto the reader's field names
-(reader-only fields take their declared defaults) — the refuse-to-start
-discipline extended to batch file ingestion.
+Schema evolution uses the same resolver as the streaming gate and the
+registry decoder: ``read_avro_ocf(reader_schema=...)`` resolves EVERY
+file's writer schema against the reader with sources/avsc.resolve
+(promotions, by-name match + defaults at any depth, enum symbols, union
+fan-out) before decoding, and a file the reader cannot read is refused —
+the refuse-to-start discipline extended to batch file ingestion.
 
 Scale design: one task per archive via ``binaryFile`` + mapInPandas
 (the sources/warc.py pattern) — OCF blocks are sequential within a
@@ -36,7 +36,7 @@ from __future__ import annotations
 
 import json
 import zlib
-from typing import Any, Iterator
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -45,20 +45,16 @@ from kafka_streams_plumber_spark.sources.avro_codec import (
     decode_value,
 )
 from kafka_streams_plumber_spark.sources.avsc import (
-    assert_can_read,
     avsc_to_struct,
     parse_avsc,
+    read_plan,
 )
 
 OCF_MAGIC = b"Obj\x01"
 
 
-def _read_long(buf: bytes, pos: int) -> tuple[int, int]:
-    return _zigzag_decode(buf, pos)
-
-
 def _read_bytes(buf: bytes, pos: int) -> tuple[bytes, int]:
-    n, pos = _read_long(buf, pos)
+    n, pos = _zigzag_decode(buf, pos)
     return buf[pos : pos + n], pos + n
 
 
@@ -70,13 +66,13 @@ def parse_ocf_header(raw: bytes) -> tuple[dict, bytes, int]:
     pos = 4
     meta: dict[str, bytes] = {}
     while True:
-        count, pos = _read_long(raw, pos)
+        count, pos = _zigzag_decode(raw, pos)
         if count == 0:
             break
         if count < 0:
             # negative count blocks carry an extra byte-size long
             count = -count
-            _, pos = _read_long(raw, pos)
+            _, pos = _zigzag_decode(raw, pos)
         for _ in range(count):
             k, pos = _read_bytes(raw, pos)
             v, pos = _read_bytes(raw, pos)
@@ -87,22 +83,27 @@ def parse_ocf_header(raw: bytes) -> tuple[dict, bytes, int]:
     return meta, sync, pos + 16
 
 
-def parse_ocf_bytes(raw: bytes) -> tuple[dict, Iterator[dict]]:
+def parse_ocf_bytes(
+    raw: bytes, reader: object = None
+) -> tuple[dict, Iterator[dict]]:
     """Parse a whole OCF byte string: returns (writer schema JSON dict,
-    iterator of decoded record dicts). Raises on structural corruption
-    (bad magic, sync mismatch, unsupported codec, truncated block)."""
+    iterator of decoded record dicts, in ``reader`` model shape if given).
+    Raises on an unreadable writer and on structural corruption (bad
+    magic, sync mismatch, unsupported codec, truncated block)."""
     meta, sync, pos = parse_ocf_header(raw)
     schema_json = json.loads(meta["avro.schema"].decode("utf-8"))
     codec = meta.get("avro.codec", b"null").decode("utf-8")
     if codec not in ("null", "deflate"):
         raise ValueError(f"unsupported OCF codec: {codec}")
-    writer = parse_avsc(schema_json)
+    plan = parse_avsc(schema_json)
+    if reader is not None:
+        plan = read_plan(reader, plan)
 
     def records() -> Iterator[dict]:
         p = pos
         while p < len(raw):
-            count, p2 = _read_long(raw, p)
-            size, p2 = _read_long(raw, p2)
+            count, p2 = _zigzag_decode(raw, p)
+            size, p2 = _zigzag_decode(raw, p2)
             data = raw[p2 : p2 + size]
             if len(data) != size:
                 raise ValueError("truncated OCF block")
@@ -114,20 +115,12 @@ def parse_ocf_bytes(raw: bytes) -> tuple[dict, Iterator[dict]]:
                 data = zlib.decompress(data, -15)
             dpos = 0
             for _ in range(count):
-                rec, dpos = decode_value(data, dpos, writer)
+                rec, dpos = decode_value(data, dpos, plan)
                 yield rec
             if dpos != len(data):
                 raise ValueError("OCF block has trailing bytes")
 
     return schema_json, records()
-
-
-def _reader_defaults(reader_json: dict) -> dict[str, Any]:
-    out = {}
-    for f in reader_json.get("fields", []):
-        if "default" in f:
-            out[f["name"]] = f["default"]
-    return out
 
 
 def read_avro_ocf(
@@ -144,18 +137,14 @@ def read_avro_ocf(
     with nulls + ``_corrupt=True`` so ingestion can dead-letter them —
     unless ``strict=True``, which raises task-side instead).
 
-    Every file's embedded writer schema is checked with the full
-    resolution rules (sources/avsc.assert_can_read) BEFORE decoding;
-    decoded records are projected onto the reader's field names with
-    reader defaults filling fields the writer lacks.
+    Every file's embedded writer schema is resolved against the reader
+    (sources/avsc.resolve) BEFORE decoding, and records decode straight
+    into reader shape: reader defaults fill fields the writer lacks, at
+    any depth.
     """
-    if isinstance(reader_schema, str):
-        reader_json = json.loads(reader_schema)
-    else:
-        reader_json = reader_schema
-    struct = avsc_to_struct(reader_json)
+    reader = parse_avsc(reader_schema)
+    struct = avsc_to_struct(reader_schema)
     names = [f.name for f in struct.fields]
-    defaults = _reader_defaults(reader_json)
 
     from pyspark.sql import types as T
 
@@ -179,16 +168,10 @@ def read_avro_ocf(
                 # that would double-count on reprocessing.
                 file_rows = []
                 try:
-                    raw = bytes(content)
-                    writer_json, recs = parse_ocf_bytes(raw)
-                    assert_can_read(reader_json, writer_json)
-                    for rec in recs:
-                        row = {
-                            n: rec.get(n, defaults.get(n)) for n in names
-                        }
-                        row["_path"] = p
-                        row["_corrupt"] = False
-                        file_rows.append(row)
+                    for rec in parse_ocf_bytes(bytes(content), reader)[1]:
+                        rec["_path"] = p
+                        rec["_corrupt"] = False
+                        file_rows.append(rec)
                 except Exception:
                     if strict:
                         raise

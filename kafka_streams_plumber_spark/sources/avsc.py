@@ -16,11 +16,13 @@ No Avro library needed: .avsc is plain JSON.
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import types as T
 
 from kafka_streams_plumber_spark.operators.conform import (
+    NO_DEFAULT,
     Array,
     Enum,
     Field,
@@ -28,6 +30,7 @@ from kafka_streams_plumber_spark.operators.conform import (
     Union,
     spark_type,
 )
+from kafka_streams_plumber_spark.sources.avro_codec import Promote, ReadRecord
 
 _PRIMITIVES: dict[str, T.DataType] = {
     "boolean": T.BooleanType(),
@@ -70,7 +73,12 @@ def _parse(node: Any, named: dict[str, object]) -> object:
         t = node["type"]
         if t == "record":
             fields = tuple(
-                Field(f["name"], _parse(f["type"], named)) for f in node["fields"]
+                Field(
+                    f["name"],
+                    _parse(f["type"], named),
+                    default=f.get("default", NO_DEFAULT),
+                )
+                for f in node["fields"]
             )
             rec = Record(fields, name=node.get("name", "record"))
             named[node.get("name", "record")] = rec
@@ -97,144 +105,172 @@ def avsc_to_struct(schema: str | dict) -> T.StructType:
 
 
 # -------------------------------------------------------------------------
-# Schema-resolution compatibility (Avro spec "Schema Resolution")
+# Schema resolution (Avro spec "Schema Resolution")
 # -------------------------------------------------------------------------
 
-#: writer -> reader promotions the Avro spec allows on read.
-_PROMOTIONS: set[tuple[str, str]] = {
-    ("int", "long"),
-    ("int", "float"),
-    ("int", "double"),
-    ("long", "float"),
-    ("long", "double"),
-    ("float", "double"),
-    ("string", "bytes"),
-    ("bytes", "string"),
+#: writer -> reader promotions the Avro spec allows on read, with the
+#: conversion of the decoded value (None: the Python value already fits).
+_PROMOTIONS: dict[tuple[str, str], Callable[[Any], Any] | None] = {
+    ("int", "long"): None,
+    ("int", "float"): float,
+    ("int", "double"): float,
+    ("long", "float"): float,
+    ("long", "double"): float,
+    ("float", "double"): None,
+    ("string", "bytes"): str.encode,
+    ("bytes", "string"): bytes.decode,
+}
+
+_TYPE_NAMES = {Record: "record", Enum: "enum", Array: "array", Union: "union"} | {
+    type(t): name for name, t in _PRIMITIVES.items()
 }
 
 
-def _norm(node: Any) -> Any:
-    """Unwrap {"type": "int"}-style wrappers; decode JSON text."""
-    if isinstance(node, str):
-        stripped = node.strip()
-        if stripped.startswith(("{", "[", '"')):
-            return _norm(json.loads(stripped))
-        return stripped
-    if (
-        isinstance(node, dict)
-        and isinstance(node.get("type"), str)
-        and node["type"] in _PRIMITIVES
-        and "logicalType" not in node
-    ):
-        return node["type"]
-    return node
+def _type_name(model: object) -> str:
+    return _TYPE_NAMES.get(type(model), "?")
 
 
-def _kind(node: Any) -> str:
-    if isinstance(node, str):
-        return node
-    if isinstance(node, list):
-        return "union"
-    return node.get("type", "?")
+def _default_value(value: Any, model: object) -> Any:
+    """A field's JSON ``default`` as the value a decode of ``model``
+    yields (a union default belongs to its first branch)."""
+    if isinstance(model, Union):
+        return _default_value(value, model.branches[0])
+    if isinstance(model, Record):
+        return {
+            f.name: _default_value(value.get(f.name, f.default), f.type)
+            for f in model.fields
+        }
+    if isinstance(model, Array):
+        return [_default_value(v, model.element) for v in value]
+    if isinstance(model, T.BinaryType):
+        return value.encode("latin-1")  # spec: bytes defaults are code points
+    if isinstance(model, (T.FloatType, T.DoubleType)):
+        return float(value)
+    return value
+
+
+def resolve(
+    reader: object, writer: object, path: str = "$", null_fill: bool = False
+) -> tuple[object, list[str]]:
+    """Resolve ``writer`` data against ``reader`` (parsed models) into
+    ``(plan, problems)``. sources/avro_codec decodes writer bytes with
+    ``plan`` into reader-shaped values; it is the writer model itself
+    wherever nothing changes. ``problems`` lists every path-tagged reason
+    the writer cannot be read; the plan is usable only when it is empty.
+
+    - primitives: equal, or a spec-listed writer->reader promotion
+      (int->long/float/double, long->float/double, float->double,
+      string<->bytes);
+    - records: fields matched BY NAME; a reader field missing from the
+      writer needs a ``default``, which the plan fills in (``null_fill``
+      fills a field without one with null instead, conform's rule for an
+      absent field); writer-only fields are skipped;
+    - enums: every writer symbol must exist in the reader's symbol set;
+    - arrays: item schemas must resolve;
+    - unions: every writer branch must resolve against SOME reader
+      branch (a non-union writer is the one-branch case, and the reader
+      branch of the same type wins over a promotion; a non-union reader
+      must accept every writer branch).
+    """
+    if isinstance(writer, Union):
+        plans, probs = [], []
+        for i, branch in enumerate(writer.branches):
+            plan, bad = resolve(reader, branch, f"{path}[w-union:{i}]", null_fill)
+            if bad:
+                probs.append(
+                    f"{path}: writer union branch {_type_name(branch)!r}"
+                    " has no compatible reader branch"
+                )
+            plans.append(plan)
+        if probs or all(p is b for p, b in zip(plans, writer.branches)):
+            return writer, probs
+        return Union(tuple(plans)), []
+
+    wk = _type_name(writer)
+    if isinstance(reader, Union):
+        for branch in sorted(reader.branches, key=lambda b: _type_name(b) != wk):
+            plan, bad = resolve(branch, writer, path, null_fill)
+            if not bad:
+                return plan, []
+        return writer, [f"{path}: writer {wk!r} matches no branch of the reader union"]
+
+    rk = _type_name(reader)
+    if rk in _PRIMITIVES and wk in _PRIMITIVES:
+        if rk == wk:
+            return writer, []
+        if (wk, rk) not in _PROMOTIONS:
+            return writer, [f"{path}: writer {wk!r} cannot promote to reader {rk!r}"]
+        convert = _PROMOTIONS[wk, rk]
+        return (writer if convert is None else Promote(writer, convert)), []
+
+    if rk != wk:
+        return writer, [f"{path}: reader is {rk!r} but writer is {wk!r}"]
+
+    if rk == "array":
+        plan, probs = resolve(reader.element, writer.element, f"{path}.items", null_fill)
+        return (writer if plan is writer.element else Array(plan)), probs
+
+    if rk == "enum":
+        missing = [s for s in writer.symbols if s not in set(reader.symbols)]
+        if missing:
+            return writer, [f"{path}: writer enum symbols {missing} absent from reader"]
+        return writer, []
+
+    if rk == "record":
+        w_fields = writer.field_map()
+        plans: dict[str, object] = {}
+        probs = []
+        for rf in reader.fields:
+            if rf.name in w_fields:
+                plans[rf.name], bad = resolve(
+                    rf.type, w_fields[rf.name].type, f"{path}.{rf.name}", null_fill
+                )
+                probs.extend(bad)
+            elif rf.default is NO_DEFAULT and not null_fill:
+                probs.append(
+                    f"{path}.{rf.name}: reader field absent from writer and"
+                    " has no default"
+                )
+        same_layout = [f.name for f in reader.fields] == [f.name for f in writer.fields]
+        if probs or (
+            same_layout and all(plans[f.name] is f.type for f in writer.fields)
+        ):
+            return writer, probs
+        template = {
+            rf.name: None
+            if rf.name in plans or rf.default is NO_DEFAULT
+            else _default_value(rf.default, rf.type)
+            for rf in reader.fields
+        }
+        steps = tuple(
+            (f.name, plans[f.name]) if f.name in plans else (None, f.type)
+            for f in writer.fields
+        )
+        return ReadRecord(steps, template), []
+
+    raise UnsupportedAvroType(f"cannot resolve avro type {rk!r}")
+
+
+def read_plan(reader: object, writer: object, null_fill: bool = False) -> object:
+    """:func:`resolve`'s plan, or ValueError listing every problem."""
+    plan, probs = resolve(reader, writer, "$", null_fill)
+    if probs:
+        raise ValueError(
+            "reader schema cannot read writer data:\n  " + "\n  ".join(probs)
+        )
+    return plan
 
 
 def schema_incompatibilities(
     reader: str | dict | list, writer: str | dict | list, path: str = "$"
 ) -> list[str]:
     """Why data written with ``writer`` can NOT be read as ``reader`` —
-    empty list means compatible. The pre-flight every consumer upgrade
-    needs BEFORE deploying against a live topic: the registry tells you
-    what producers wrote; this tells you whether your reader schema
-    survives it (the reference's Avro bridge decodes with the writer
-    schema and conforms afterward, so an incompatible evolution
-    otherwise only surfaces as runtime drops).
-
-    Implements the Avro spec's Schema Resolution rules over exactly the
-    type surface this engine supports (records, unions, enums, arrays,
-    primitives):
-
-    - primitives: equal, or a spec-listed writer->reader promotion
-      (int->long/float/double, long->float/double, float->double,
-      string<->bytes);
-    - records: fields matched BY NAME; a reader field missing from the
-      writer needs a ``default``; writer-only fields are ignored;
-    - enums: every writer symbol must exist in the reader's symbol set;
-    - arrays: item schemas must resolve;
-    - unions: every writer branch must resolve against SOME reader
-      branch (a non-union writer is the one-branch case; a non-union
-      reader must accept every writer branch).
-
-    Messages carry a JSON-path-ish location so a deep mismatch inside a
-    nested record points at the exact field.
-    """
-    r, w = _norm(reader), _norm(writer)
-
-    # union handling first: writer union fans out, reader union catches
-    if isinstance(w, list):
-        probs: list[str] = []
-        for i, branch in enumerate(w):
-            if schema_incompatibilities(r, branch, f"{path}[w-union:{i}]"):
-                probs.append(
-                    f"{path}: writer union branch {_kind(_norm(branch))!r}"
-                    " has no compatible reader branch"
-                )
-        return probs
-    if isinstance(r, list):
-        for branch in r:
-            if not schema_incompatibilities(branch, w, path):
-                return []
-        return [
-            f"{path}: writer {_kind(w)!r} matches no branch of the"
-            " reader union"
-        ]
-
-    rk, wk = _kind(r), _kind(w)
-    if rk in _PRIMITIVES and wk in _PRIMITIVES:
-        if rk == wk or (wk, rk) in _PROMOTIONS:
-            return []
-        return [f"{path}: writer {wk!r} cannot promote to reader {rk!r}"]
-
-    if rk != wk:
-        return [f"{path}: reader is {rk!r} but writer is {wk!r}"]
-
-    if rk == "array":
-        return schema_incompatibilities(
-            r["items"], w["items"], f"{path}.items"
-        )
-
-    if rk == "enum":
-        missing = [s for s in w["symbols"] if s not in set(r["symbols"])]
-        if missing:
-            return [
-                f"{path}: writer enum symbols {missing} absent from reader"
-            ]
-        return []
-
-    if rk == "record":
-        w_fields = {f["name"]: f for f in w["fields"]}
-        probs = []
-        for rf in r["fields"]:
-            name = rf["name"]
-            if name in w_fields:
-                probs.extend(
-                    schema_incompatibilities(
-                        rf["type"], w_fields[name]["type"], f"{path}.{name}"
-                    )
-                )
-            elif "default" not in rf:
-                probs.append(
-                    f"{path}.{name}: reader field absent from writer and"
-                    " has no default"
-                )
-        return probs
-
-    raise UnsupportedAvroType(f"cannot check compatibility for {rk!r}")
+    empty list means compatible: :func:`resolve`'s problem list, the
+    pre-flight every consumer upgrade needs BEFORE deploying against a
+    live topic (the registry tells you what producers wrote)."""
+    return resolve(parse_avsc(reader), parse_avsc(writer), path)[1]
 
 
 def assert_can_read(reader: str | dict, writer: str | dict) -> None:
     """Raise ValueError listing every incompatibility (empty = return)."""
-    probs = schema_incompatibilities(reader, writer)
-    if probs:
-        raise ValueError(
-            "reader schema cannot read writer data:\n  " + "\n  ".join(probs)
-        )
+    read_plan(parse_avsc(reader), parse_avsc(writer))

@@ -19,7 +19,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from kafka_streams_plumber_spark.operators.conform import spark_type
-from kafka_streams_plumber_spark.sources.avsc import parse_avsc
+from kafka_streams_plumber_spark.operators.pipeline import _py_udf
+from kafka_streams_plumber_spark.sources.avsc import parse_avsc, read_plan
 
 _U64 = 1 << 64
 _I64_MAX = (1 << 63) - 1
@@ -212,76 +213,42 @@ def _py_avro_decode(payload: Column, wt: WireType) -> Column:
     def _dec(b, _model=model):
         return None if b is None else decode_record(b, _model)
 
-    return _arrow_udf(_dec, out_type)(payload)
+    return _py_udf(_dec, out_type)(payload)
 
 
 def registry_decode(col: Column, wt: WireType, registry) -> Column:
     """Decode Confluent-framed avro with PER-RECORD writer-schema
     resolution (GenericAvroSerializer.scala:9-73 semantics): read the
     4-byte embedded id, fetch that writer schema through ``registry``
-    (cached per executor — one round-trip per distinct id, not per row),
-    decode with the WRITER schema, then reconcile the result onto the
-    pinned READER schema (``wt``) by field name: missing fields null,
-    unknown fields dropped.
+    and resolve it against the pinned READER schema (``wt``) with
+    sources/avsc.resolve, once per distinct id per executor; records then
+    decode straight into reader shape. Reader-only fields without a
+    default null-fill, as conform does; any other problem raises.
 
     Python decode by necessity — ``from_avro`` has no per-record schema
-    hook — but Arrow-batched (see :func:`_arrow_udf`), so only the codec
-    call itself is per-record, not the serialization. Use it only for
-    heterogeneous topics; homogeneous topics take the JVM path in
-    :func:`decode`.
+    hook — but Arrow-batched, so only the codec call itself is
+    per-record, not the serialization. Use it only for heterogeneous
+    topics; homogeneous topics take the JVM path in :func:`decode`.
     """
-    from kafka_streams_plumber_spark.operators.conform import Array, Record, Union
     from kafka_streams_plumber_spark.sources.avro_codec import decode_record
 
     reader = wt.model
     out_type = spark_type(reader)
 
-    def _reconcile(v, wmodel, rmodel):
-        if v is None:
-            return None
-        if isinstance(rmodel, Record):
-            wmap = wmodel.field_map() if isinstance(wmodel, Record) else {}
-            src = v if isinstance(v, dict) else {}
-            return {
-                f.name: _reconcile(
-                    src.get(f.name),
-                    wmap[f.name].type if f.name in wmap else None,
-                    f.type,
-                )
-                for f in rmodel.fields
-            }
-        if isinstance(rmodel, Array):
-            welem = wmodel.element if isinstance(wmodel, Array) else None
-            return [_reconcile(x, welem, rmodel.element) for x in v]
-        if isinstance(rmodel, Union):
-            # unions reconcile against the first structured branch; scalar
-            # branches pass through untouched
-            for b in rmodel.non_null:
-                if isinstance(b, (Record, Array)):
-                    wb = None
-                    if isinstance(wmodel, Union):
-                        wb = next(
-                            (x for x in wmodel.non_null if type(x) is type(b)), None
-                        )
-                    return _reconcile(v, wb or wmodel, b)
-            return v
-        return v
-
-    def _dec(b, _registry=registry, _reader=reader, _cache={}):  # noqa: B006
+    def _dec(b, _registry=registry, _reader=reader, _plans={}):  # noqa: B006
         if b is None:
             return None
         b = bytes(b)
         if len(b) < 5 or b[0] != 0:
             raise ValueError("not a Confluent-framed avro message")
         sid = int.from_bytes(b[1:5], "big")
-        entry = _cache.get(sid)
-        if entry is None:
-            wmodel = parse_avsc(_registry.schema_by_id(sid))
-            entry = _cache[sid] = wmodel
-        rec = decode_record(b[5:], entry)
-        return _reconcile(rec, entry, _reader)
+        plan = _plans.get(sid)
+        if plan is None:
+            writer = parse_avsc(_registry.schema_by_id(sid))
+            plan = _plans[sid] = read_plan(_reader, writer, null_fill=True)
+        return decode_record(b[5:], plan)
 
-    return _arrow_udf(_dec, out_type)(col)
+    return _py_udf(_dec, out_type)(col)
 
 
 def _py_avro_encode(col: Column, wt: WireType) -> Column:
@@ -296,14 +263,4 @@ def _py_avro_encode(col: Column, wt: WireType) -> Column:
         # path); encode_record accepts both
         return None if v is None else encode_record(v, _model)
 
-    return _arrow_udf(_enc, T.BinaryType())(col)
-
-
-def _arrow_udf(fn, out_type):
-    """F.udf with Arrow batch transfer when this build supports it
-    (Spark >= 3.5), plain pickled UDF otherwise. Identical null/struct
-    semantics either way — useArrow changes only the wire format."""
-    try:
-        return F.udf(fn, out_type, useArrow=True)
-    except TypeError:
-        return F.udf(fn, out_type)
+    return _py_udf(_enc, T.BinaryType())(col)

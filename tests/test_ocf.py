@@ -68,14 +68,22 @@ def test_read_avro_ocf_end_to_end(spark, tmp_path):
 
 
 def test_read_avro_ocf_schema_evolution(spark, tmp_path):
-    # writer lacks `lang` (reader default fills it) and has an extra
-    # field `junk` (dropped by the by-name projection)
+    # writer lacks `lang` and the nested `meta.rev` (reader defaults fill
+    # them) and has an extra field `junk` (skipped by the by-name match)
+    def meta(*extra):
+        return {
+            "type": "record",
+            "name": "Meta",
+            "fields": [{"name": "src", "type": "string"}, *extra],
+        }
+
     writer = {
         "type": "record",
         "name": "Doc",
         "fields": [
             {"name": "id", "type": "long"},
             {"name": "junk", "type": "string"},
+            {"name": "meta", "type": meta()},
         ],
     }
     reader = {
@@ -84,17 +92,20 @@ def test_read_avro_ocf_schema_evolution(spark, tmp_path):
         "fields": [
             {"name": "id", "type": "long"},
             {"name": "lang", "type": "string", "default": "und"},
+            {"name": "meta", "type": meta({"name": "rev", "type": "long", "default": 0})},
         ],
     }
     d = tmp_path / "evo"
     d.mkdir()
-    recs = [{"id": 1, "junk": "x"}, {"id": 2, "junk": "y"}]
+    recs = [
+        {"id": 1, "junk": "x", "meta": {"src": "a"}},
+        {"id": 2, "junk": "y", "meta": {"src": "b"}},
+    ]
     (d / "w.avro").write_bytes(write_ocf_bytes(recs, writer))
     rows = read_avro_ocf(spark, str(d), reader).collect()
-    assert sorted((r["id"], r["lang"]) for r in rows) == [
-        (1, "und"),
-        (2, "und"),
-    ]
+    assert sorted(
+        (r["id"], r["lang"], r["meta"]["src"], r["meta"]["rev"]) for r in rows
+    ) == [(1, "und", "a", 0), (2, "und", "b", 0)]
 
 
 def test_read_avro_ocf_incompatible_writer_dead_letters(spark, tmp_path):

@@ -217,9 +217,10 @@ def test_plumber_job_resolves_plain_avro(spark):
 def test_registry_decode_schema_evolution_matrix(spark):
     """VERDICT r9 item 6: the hard per-record-writer-id cases the
     sandbox can't reach through the driver gate — field REORDER,
-    spec-listed type PROMOTIONS (int->long, float->double), and enum
-    SYMBOL ADDITION across three writer ids in ONE topic, all decoded
-    against the pinned latest reader. The runtime reconciliation must
+    spec-listed type PROMOTIONS (int->long, float->double,
+    string->bytes), enum SYMBOL ADDITION and a reader-only field with a
+    non-null DEFAULT across three writer ids in ONE topic, all decoded
+    against the pinned latest reader. The runtime resolution must
     agree with the assert_can_read pre-flight: every writer the
     pre-flight accepts decodes losslessly by field NAME (order,
     width, and symbol set free to differ), and the evolutions the
@@ -236,6 +237,7 @@ def test_registry_decode_schema_evolution_matrix(spark):
                 {"name": "a", "type": "int"},  # promotes to long
                 {"name": "e", "type": enum_ab},
                 {"name": "x", "type": "float"},  # promotes to double
+                {"name": "t", "type": "string"},  # promotes to bytes
             ],
         }
     )
@@ -248,12 +250,13 @@ def test_registry_decode_schema_evolution_matrix(spark):
                 {"name": "b", "type": ["null", "string"]},
                 {"name": "e", "type": enum_ab},
                 {"name": "x", "type": "double"},
+                {"name": "t", "type": "string"},
             ],
         }
     )
     # same field set as the reader, REORDERED (avro layout is
     # positional, so a reorder changes the byte stream) + the added
-    # enum symbol
+    # enum symbol; w1 and w2 lack `lang` (the reader default fills it)
     w3 = json.dumps(
         {
             "type": "record",
@@ -262,6 +265,8 @@ def test_registry_decode_schema_evolution_matrix(spark):
                 {"name": "x", "type": "double"},
                 {"name": "e", "type": enum_abc},
                 {"name": "b", "type": ["null", "string"]},
+                {"name": "lang", "type": "string"},
+                {"name": "t", "type": "bytes"},
                 {"name": "a", "type": "long"},
             ],
         }
@@ -279,6 +284,8 @@ def test_registry_decode_schema_evolution_matrix(spark):
                 },  # absent from w1: null-fills (default makes it legal)
                 {"name": "e", "type": enum_abc},
                 {"name": "x", "type": "double"},
+                {"name": "lang", "type": "string", "default": "und"},
+                {"name": "t", "type": "bytes"},
             ],
         }
     )
@@ -300,28 +307,47 @@ def test_registry_decode_schema_evolution_matrix(spark):
     id1 = reg.register("m-value", w1)
     id2 = reg.register("m-value", w2)
     id3 = reg.register("m-value", w3)
+    id_bad = reg.register("m-value", bad_enum)
     rid = reg.register("m-value", reader)
     wt = resolve_registry_type(parse_type("avro"), reg, "m-value")
     assert wt.schema_id == rid
 
     rows = [
-        (_framed(id1, w1, {"a": 7, "e": "A", "x": 1.5}),),
-        (_framed(id2, w2, {"a": 8, "b": "x", "e": "B", "x": 2.25}),),
-        (_framed(id3, w3, {"x": 3.5, "e": "C", "b": "y", "a": 9}),),
+        (_framed(id1, w1, {"a": 7, "e": "A", "x": 1.5, "t": "p"}),),
+        (_framed(id2, w2, {"a": 8, "b": "x", "e": "B", "x": 2.25, "t": "q"}),),
+        (
+            _framed(
+                id3,
+                w3,
+                {"x": 3.5, "e": "C", "b": "y", "lang": "en", "t": b"r", "a": 9},
+            ),
+        ),
     ]
     df = spark.createDataFrame(
         rows, T.StructType([T.StructField("value", T.BinaryType())])
     )
     out = df.select(decode(F.col("value"), wt, registry=reg).alias("v"))
     got = {
-        (r["v"]["a"], r["v"]["b"], r["v"]["e"], r["v"]["x"])
+        (
+            r["v"]["a"], r["v"]["b"], r["v"]["e"], r["v"]["x"],
+            r["v"]["lang"], bytes(r["v"]["t"]),
+        )
         for r in out.collect()
     }
     # w1: int 7 widened to long, missing b null-filled, float 1.5 is
-    # exact in binary32 so the promotion is lossless; w3: the reorder
-    # reconciles by name, not position
+    # exact in binary32 so the promotion is lossless, string t promoted
+    # to bytes, missing lang takes the reader default; w3: the reorder
+    # resolves by name, not position
     assert got == {
-        (7, None, "A", 1.5),
-        (8, "x", "B", 2.25),
-        (9, "y", "C", 3.5),
+        (7, None, "A", 1.5, "und", b"p"),
+        (8, "x", "B", 2.25, "und", b"q"),
+        (9, "y", "C", 3.5, "en", b"r"),
     }
+    # ...and the decoder refuses the writer the pre-flight rejects
+    bad = spark.createDataFrame(
+        [(_framed(id_bad, bad_enum, {"x": 0.0, "e": "D", "b": None,
+                                     "lang": "", "t": b"", "a": 0}),)],
+        T.StructType([T.StructField("value", T.BinaryType())]),
+    )
+    with pytest.raises(Exception, match="absent from reader"):
+        bad.select(decode(F.col("value"), wt, registry=reg)).collect()

@@ -28,8 +28,12 @@ def f(name, typ, **kw):
 
 
 def test_identical_schemas_compatible():
-    s = rec(f("a", "long"), f("b", "string"))
-    assert schema_incompatibilities(s, s) == []
+    ev = {"type": "enum", "name": "ev", "symbols": ["A", "B"]}
+    for s in [
+        rec(f("a", "long"), f("b", "string")),
+        rec(f("e", ev), f("again", "ev")),  # named-type reference
+    ]:
+        assert schema_incompatibilities(s, s) == []
 
 
 def test_primitive_promotions_allowed():

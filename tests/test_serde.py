@@ -6,6 +6,7 @@ import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import Row
 
+from kafka_streams_plumber_spark.sources.avro_codec import decode_record, encode_record
 from kafka_streams_plumber_spark.sources.serde import (
     WireType,
     decode,
@@ -88,6 +89,17 @@ def test_avro_confluent_framing_roundtrip(spark):
         decode(F.col("b"), wt, confluent_framing=True).alias("v")
     ).collect()[0].v
     assert out == Row(name="x", n=1)
+
+
+def test_avro_decode_record_rejects_trailing_and_truncated_payloads():
+    model = WireType("avro", DEMO_AVSC).model
+    body = encode_record({"name": "roel", "n": 14}, model)
+    assert decode_record(body, model) == {"name": "roel", "n": 14}
+    with pytest.raises(ValueError, match="trailing"):
+        decode_record(body + b"\x00", model)
+    for cut in range(len(body)):
+        with pytest.raises(ValueError, match="truncated"):
+            decode_record(body[:cut], model)
 
 
 def test_spark_type_of():
