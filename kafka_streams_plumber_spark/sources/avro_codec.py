@@ -4,10 +4,9 @@ string, bytes, enum, array, record, union.
 
 Implements the Avro 1.x binary encoding spec directly (zigzag varints,
 little-endian IEEE floats, length-prefixed strings, block-encoded
-arrays, index-prefixed unions). Used as the serde fallback when the JVM
-``spark-avro`` module is not on the classpath (this container ships
-pyspark without it); the JVM ``from_avro``/``to_avro`` path is preferred
-everywhere it exists because this fallback is a row-at-a-time UDF.
+arrays, index-prefixed unions). It is the one Avro codec of the wire
+path: sources/serde.py runs it in its decode and encode UDFs, one record
+at a time, and the OCF reader decodes container blocks with it.
 
 The codec is driven by the same parsed schema model as conform()
 (sources/avsc.py), so union branch order and enum symbol order are

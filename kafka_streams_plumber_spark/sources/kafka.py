@@ -6,9 +6,9 @@ Scale notes: the Kafka source parallelism follows topic partitions (use
 ``minPartitions`` to fan out wider than the partition count); the
 pipeline itself is stateless per-record, so there is no shuffle anywhere
 between source and sink — the whole job is map-only and scales linearly
-with executors. Checkpointing + Kafka's transactional producer give
-exactly-once sink semantics, strictly stronger than the reference's
-at-least-once (SURVEY §2.6).
+with executors. The Kafka sink is at-least-once, like the reference
+(SURVEY §2.6): a batch replayed after a crash is written again.
+Exactly-once output across a restart is ROADMAP aim 3.
 """
 
 from __future__ import annotations
@@ -89,34 +89,18 @@ def kafka_sink_options(
 
 def kafka_source(
     spark: SparkSession,
+    options: dict[str, str],
     *,
-    brokers: str,
-    topic: str,
     key_type: WireType,
     value_type: WireType,
     confluent_framing: bool = False,
-    starting_offsets: str = "earliest",
-    options: dict[str, str] | None = None,
-    streaming: bool = True,
     registry=None,
 ) -> DataFrame:
-    """Subscribe to one topic and decode to a typed (key, value) frame.
-
-    ``streaming=False`` gives the batch variant (spark.read) over the
-    same decode logic — used by the golden harness and backfills.
-    ``registry`` (a SchemaRegistryClient) enables per-record writer-
-    schema resolution for registry-resolved avro types.
-    """
-    reader = spark.readStream if streaming else spark.read
-    r = reader.format("kafka")
-    for k, v in kafka_source_options(
-        brokers=brokers,
-        topic=topic,
-        starting_offsets=starting_offsets,
-        options=options,
-    ).items():
-        r = r.option(k, v)
-    raw = r.load()
+    """Stream one topic with the :func:`kafka_source_options` map
+    ``options`` and decode to a typed (key, value) frame. ``registry`` (a
+    SchemaRegistryClient) enables per-record writer-schema resolution
+    for registry-resolved avro types."""
+    raw = spark.readStream.format("kafka").options(**options).load()
     return raw.select(
         decode(
             F.col("key"),
@@ -135,35 +119,17 @@ def kafka_source(
 
 def kafka_sink(
     df: DataFrame,
+    options: dict[str, str],
     *,
-    brokers: str,
-    topic: str,
     key_type: WireType,
     value_type: WireType,
-    checkpoint: str,
     confluent_framing: bool = False,
-    schema_id: int | None = None,
-    options: dict[str, str] | None = None,
-    trigger: str | None = None,
 ):
     """Encode a (key, value) frame to wire format and start the streaming
-    write. Returns the StreamingQuery (callers own .stop())."""
+    write with the :func:`kafka_sink_options` map ``options``. Returns
+    the StreamingQuery (callers own .stop())."""
     encoded = df.select(
-        encode(
-            F.col("key"), key_type, confluent_framing=confluent_framing, schema_id=schema_id
-        ).alias("key"),
-        encode(
-            F.col("value"),
-            value_type,
-            confluent_framing=confluent_framing,
-            schema_id=schema_id,
-        ).alias("value"),
+        encode(F.col("key"), key_type, confluent_framing=confluent_framing).alias("key"),
+        encode(F.col("value"), value_type, confluent_framing=confluent_framing).alias("value"),
     )
-    w = encoded.writeStream.format("kafka")
-    for k, v in kafka_sink_options(
-        brokers=brokers, topic=topic, checkpoint=checkpoint, options=options
-    ).items():
-        w = w.option(k, v)
-    if trigger:
-        w = w.trigger(processingTime=trigger)
-    return w.start()
+    return encoded.writeStream.format("kafka").options(**options).start()

@@ -12,12 +12,11 @@ two levels:
   ``{topic}-value`` / ``{topic}-key``) and pins it as the READER schema —
   this is what types the column.
 - **Executor side, per schema id**: heterogeneous topics (old producers
-  still writing previous versions) carry different writer ids; the
-  pure-Python decode path resolves each id through the same client
-  (per-worker LRU-cached — one registry round-trip per (worker, id),
-  NOT per record) and reconciles writer records onto the reader schema
-  by field name. The JVM ``from_avro`` path has no per-record schema
-  hook, so it is only used when the topic is homogeneous.
+  still writing previous versions) carry different writer ids; the avro
+  decode UDF (sources/serde.py) resolves each id through the same client
+  (cached per worker — one registry round-trip per (worker, id), NOT per
+  record) and reconciles writer records onto the reader schema by field
+  name.
 
 The HTTP client is stdlib ``urllib`` (the registry API is plain
 JSON-over-HTTP); :class:`FakeSchemaRegistry` is the injectable in-memory

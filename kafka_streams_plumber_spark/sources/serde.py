@@ -3,8 +3,10 @@ columns — parity with the reference's MappingType serde layer
 (TypeConversions.scala:12-35, GenericAvroSerializer.scala:9-73).
 
 Four wire types (SURVEY.md §1.2): long (8-byte big-endian), string
-(UTF-8), avro (Confluent-framed, schema from .avsc), void (always NULL).
-All decode/encode paths are pure column expressions.
+(UTF-8), avro (schema from .avsc or the registry, optionally
+Confluent-framed), void (always NULL). long, string and void are column
+expressions. Avro is one Arrow-batched Python UDF each way over
+sources/avro_codec.py; the UDF also strips or adds the Confluent header.
 
 Type strings parse exactly like the reference CLI (`string`,
 `long`, `avro=file.avsc`, `avro`, `void` — TypeConversions.scala:42-51):
@@ -62,7 +64,7 @@ def resolve_registry_type(wt: WireType, registry, subject: str) -> WireType:
     ``{topic}-key``). Driver-side, once per job — the resolved schema
     types the DataFrame column; per-record WRITER schemas are still
     resolved by embedded id on the decode path (see
-    :func:`registry_decode`). No-op for non-avro / already-pinned types.
+    :func:`_avro_decode`). No-op for non-avro / already-pinned types.
     """
     if wt.kind != "avro" or wt.avsc is not None:
         return wt
@@ -82,7 +84,10 @@ def decode(
     confluent_framing: bool = False,
     registry=None,
 ) -> Column:
-    """binary column -> typed column."""
+    """binary column -> typed column. Avro payloads carry the Confluent
+    header when ``confluent_framing`` is set or the type is
+    registry-resolved; a ``registry`` then resolves each record's writer
+    id for a registry-resolved type."""
     if wt.kind == "void":
         return F.lit(None)
     if wt.kind == "string":
@@ -101,20 +106,12 @@ def decode(
                 "avro without =file.avsc needs a schema registry; "
                 "pass avro=file.avsc or resolve_registry_type() first"
             )
-        if wt.registry_resolved and registry is not None:
-            # registry-encoded topics may be heterogeneous (old writer
-            # ids still in flight) -> per-record writer resolution
-            return registry_decode(col, wt, registry)
-        payload = col
-        if confluent_framing or wt.registry_resolved:
-            # Confluent wire format: magic byte 0x00 + 4-byte schema id
-            # (GenericAvroSerializer.scala:30-40) — strip the 5-byte header
-            payload = F.expr(f"substring({_name(col)}, 6, length({_name(col)}) - 5)")
-        if _jvm_avro_available():
-            from pyspark.sql.avro.functions import from_avro
-
-            return from_avro(payload, wt.avsc)
-        return _py_avro_decode(payload, wt)
+        return _avro_decode(
+            col,
+            wt,
+            framed=confluent_framing or wt.registry_resolved,
+            registry=registry if wt.registry_resolved else None,
+        )
     raise AssertionError(wt.kind)
 
 
@@ -135,19 +132,12 @@ def encode(col: Column, wt: WireType, *, confluent_framing: bool = False,
                 "avro output needs a schema: avro=file.avsc, or plain "
                 "avro resolved through resolve_registry_type()"
             )
-        if _jvm_avro_available():
-            from pyspark.sql.avro.functions import to_avro
-
-            body = to_avro(col, wt.avsc)
-        else:
-            body = _py_avro_encode(col, wt)
+        header = None
         if confluent_framing or wt.registry_resolved:
             # registry-resolved types frame with their registered id
-            # (GenericAvroSerializer.scala:30-40)
             sid = schema_id if schema_id is not None else (wt.schema_id or 0)
-            header = F.unhex(F.lpad(F.hex(F.lit(sid)), 8, "0"))
-            return F.concat(F.unhex(F.lit("00")), header, body)
-        return body
+            header = _confluent_header(sid)
+        return _avro_encode(col, wt, header)
     raise AssertionError(wt.kind)
 
 
@@ -163,104 +153,81 @@ def spark_type_of(wt: WireType):
     return spark_type(wt.model)
 
 
-def _name(col: Column) -> str:
-    # column name for embedding in a SQL expr fragment
-    return col._jc.toString()  # noqa: SLF001
+def _confluent_header(schema_id: int) -> bytes:
+    """Confluent wire format: magic byte 0x00 + 4-byte big-endian schema
+    id (GenericAvroSerializer.scala:30-40)."""
+    return b"\x00" + schema_id.to_bytes(4, "big")
 
 
-_JVM_AVRO: bool | None = None
+def _unframe(b: bytes) -> tuple[int, bytes]:
+    """(schema id, avro body) of a Confluent-framed message."""
+    if len(b) < 5 or b[0] != 0:
+        raise ValueError("not a Confluent-framed avro message")
+    return int.from_bytes(b[1:5], "big"), b[5:]
 
 
-def _jvm_avro_available() -> bool:
-    """True when the spark-avro datasource module is on the JVM classpath
-    (the AVRO_NOT_LOADED error only surfaces at analysis time, so probe
-    the class eagerly and cache). This pyspark build ships without it;
-    real clusters usually add org.apache.spark:spark-avro via packages."""
-    global _JVM_AVRO
-    if _JVM_AVRO is None:
-        try:
-            from pyspark.sql import SparkSession
-            from pyspark.sql.avro.functions import to_avro
+def _avro_decode(col: Column, wt: WireType, *, framed: bool, registry) -> Column:
+    """The avro decode UDF: spec-correct pure-Python codec
+    (sources/avro_codec.py), Arrow-batched (useArrow), so only the codec
+    call is per-record, not the serialization. (A struct-returning
+    pandas_udf cannot represent a NULL struct row, which a Kafka
+    tombstone requires, so the Arrow scalar UDF is the vectorization.)
 
-            spark = SparkSession.getActiveSession()
-            if spark is None:
-                return False  # don't cache a session-less probe
-            # the only reliable probe is evaluating the function once:
-            # AVRO_NOT_LOADED surfaces at analysis, not at class load
-            spark.range(1).select(
-                to_avro(F.struct(F.lit(1).alias("a")))
-            ).collect()
-            _JVM_AVRO = True
-        except Exception:
-            _JVM_AVRO = False
-    return _JVM_AVRO
-
-
-def _py_avro_decode(payload: Column, wt: WireType) -> Column:
-    """Fallback when the JVM spark-avro module is absent (this container):
-    spec-correct pure-Python codec (sources/avro_codec.py). Arrow-batched
-    (useArrow): the per-record decode is inherently Python, but batches
-    move over Arrow instead of per-row pickle — the 10-100x serde
-    overhead is gone. (A struct-returning pandas_udf cannot represent a
-    NULL struct row, which a Kafka tombstone requires, so the Arrow
-    scalar UDF is the correct vectorization here.) Prefer the JVM
-    spark-avro path on real clusters."""
-    from kafka_streams_plumber_spark.sources.avro_codec import decode_record
-
-    model = wt.model
-    out_type = spark_type(model)
-
-    def _dec(b, _model=model):
-        return None if b is None else decode_record(b, _model)
-
-    return _py_udf(_dec, out_type)(payload)
-
-
-def registry_decode(col: Column, wt: WireType, registry) -> Column:
-    """Decode Confluent-framed avro with PER-RECORD writer-schema
-    resolution (GenericAvroSerializer.scala:9-73 semantics): read the
-    4-byte embedded id, fetch that writer schema through ``registry``
-    and resolve it against the pinned READER schema (``wt``) with
-    sources/avsc.resolve, once per distinct id per executor; records then
-    decode straight into reader shape. Reader-only fields without a
-    default null-fill, as conform does; any other problem raises.
-
-    Python decode by necessity — ``from_avro`` has no per-record schema
-    hook — but Arrow-batched, so only the codec call itself is
-    per-record, not the serialization. Use it only for heterogeneous
-    topics; homogeneous topics take the JVM path in :func:`decode`.
-    """
+    The closure is picked here, once per plan, so unframed payloads pay
+    nothing per record for framing. Framed payloads lose their header
+    through :func:`_unframe`. With a ``registry`` each writer id is
+    resolved against the pinned reader schema (``wt``) with
+    sources/avsc.resolve, once per id per executor process
+    (GenericAvroSerializer.scala:9-73 semantics); reader-only fields
+    without a default null-fill, as conform does; any other problem
+    raises."""
     from kafka_streams_plumber_spark.sources.avro_codec import decode_record
 
     reader = wt.model
-    out_type = spark_type(reader)
+    if not framed:
 
-    def _dec(b, _registry=registry, _reader=reader, _plans={}):  # noqa: B006
-        if b is None:
-            return None
-        b = bytes(b)
-        if len(b) < 5 or b[0] != 0:
-            raise ValueError("not a Confluent-framed avro message")
-        sid = int.from_bytes(b[1:5], "big")
-        plan = _plans.get(sid)
-        if plan is None:
-            writer = parse_avsc(_registry.schema_by_id(sid))
-            plan = _plans[sid] = read_plan(_reader, writer, null_fill=True)
-        return decode_record(b[5:], plan)
+        def _dec(b, _model=reader):
+            return None if b is None else decode_record(b, _model)
 
-    return _py_udf(_dec, out_type)(col)
+    elif registry is None:
+
+        def _dec(b, _model=reader):
+            return None if b is None else decode_record(_unframe(b)[1], _model)
+
+    else:
+
+        def _dec(b, _registry=registry, _reader=reader, _plans={}):  # noqa: B006
+            if b is None:
+                return None
+            sid, body = _unframe(b)
+            plan = _plans.get(sid)
+            if plan is None:
+                writer = parse_avsc(_registry.schema_by_id(sid))
+                plan = _plans[sid] = read_plan(_reader, writer, null_fill=True)
+            return decode_record(body, plan)
+
+    return _py_udf(_dec, spark_type(reader))(col)
 
 
-def _py_avro_encode(col: Column, wt: WireType) -> Column:
+def _avro_encode(col: Column, wt: WireType, header: bytes | None) -> Column:
+    """The avro encode UDF; ``header`` (a Confluent header) prefixes
+    every payload when given, chosen once per plan like
+    :func:`_avro_decode`'s framing."""
     from pyspark.sql import types as T
 
     from kafka_streams_plumber_spark.sources.avro_codec import encode_record
 
     model = wt.model
+    # struct input arrives as Row (pickled path) or dict (Arrow path);
+    # encode_record accepts both
+    if header is None:
 
-    def _enc(v, _model=model):
-        # struct input arrives as Row (pickled path) or dict (Arrow
-        # path); encode_record accepts both
-        return None if v is None else encode_record(v, _model)
+        def _enc(v, _model=model):
+            return None if v is None else encode_record(v, _model)
+
+    else:
+
+        def _enc(v, _model=model, _header=header):
+            return None if v is None else _header + encode_record(v, _model)
 
     return _py_udf(_enc, T.BinaryType())(col)

@@ -20,7 +20,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from kafka_streams_plumber_spark.operators.conform import conform
 from kafka_streams_plumber_spark.operators.pipeline import Pipeline
-from kafka_streams_plumber_spark.sources.kafka import kafka_sink, kafka_source
+from kafka_streams_plumber_spark.sources.kafka import (
+    kafka_sink,
+    kafka_sink_options,
+    kafka_source,
+    kafka_source_options,
+)
 from kafka_streams_plumber_spark.sources.serde import (
     WireType,
     resolve_registry_type,
@@ -150,19 +155,14 @@ class PlumberJob:
 
     def streaming_plan_spec(self) -> dict:
         """Broker-free description of the streaming plan :meth:`run`
-        will start: the exact source/sink DataSource option maps (the
-        pure builders kafka_source/kafka_sink consume) plus the
+        will start: the source/sink DataSource option maps, which
+        :meth:`run` hands kafka_source/kafka_sink as they are, plus the
         decoded/encoded Spark types. This is how the ``-i``/``-o``
         topic path is exercised past argument parsing in environments
         with no broker and no kafka connector jar — the dry-run builds
         it, and pytest asserts on it. Factory transports (the pluggable
         source_factory/sink_factory) report the factory instead of
         Kafka options."""
-        from kafka_streams_plumber_spark.sources.kafka import (
-            kafka_sink_options,
-            kafka_source_options,
-        )
-
         spec: dict[str, Any] = {
             "key_in": spark_type_of(self.input_key).simpleString(),
             "value_in": spark_type_of(self.input_value).simpleString(),
@@ -198,24 +198,22 @@ class PlumberJob:
 
     def run(self, *, dry_run: bool = False, await_termination: bool = True):
         """Verify, then start the streaming query (or exit on dry_run,
-        mirroring the -D flag, Plumber.scala:53-55). The dry run also
-        constructs the full streaming plan spec so bad topic/option
-        wiring surfaces before any deploy."""
+        mirroring the -D flag, Plumber.scala:53-55). Both build the
+        streaming plan spec first, and the query starts with its option
+        maps, so bad topic/option wiring surfaces before any deploy."""
         self.preflight()
+        spec = self.streaming_plan_spec()
         if dry_run:
-            return self.streaming_plan_spec()
+            return spec
         if self.source_factory is not None:
             src = self.source_factory(self.spark)
         else:
             src = kafka_source(
                 self.spark,
-                brokers=self.brokers,
-                topic=self.source_topic,
+                spec["source"]["options"],
                 key_type=self.input_key,
                 value_type=self.input_value,
                 confluent_framing=self.confluent_framing,
-                starting_offsets=self.starting_offsets,
-                options=self.kafka_options,
                 registry=self.registry,
             )
         out = self._transformed(src)
@@ -224,11 +222,9 @@ class PlumberJob:
         else:
             query = kafka_sink(
                 out,
-                brokers=self.brokers,
-                topic=self.sink_topic,
+                spec["sink"]["options"],
                 key_type=self.output_key,
                 value_type=self.output_value,
-                checkpoint=self.checkpoint,
                 confluent_framing=self.confluent_framing,
             )
         # graceful shutdown (Plumber.scala:79-83)

@@ -308,6 +308,66 @@ def test_dry_run_builds_kafka_plan_spec(spark, tmp_path, monkeypatch):
     assert spec["key_in"] == "string" and spec["value_out"] == "string"
 
 
+def test_run_starts_kafka_with_the_dry_run_options(spark, tmp_path, monkeypatch):
+    """run() starts the Kafka source and sink with the option maps the
+    dry run reports, so a -p client config (security.protocol) reaches
+    the producer as well as the consumer. The DataSource readers and
+    writers are stubbed at the option calls — no broker, no kafka jar."""
+    from pyspark.sql.streaming.readwriter import DataStreamReader, DataStreamWriter
+
+    from kafka_streams_plumber_spark.streaming import runner
+
+    props = _write(
+        tmp_path,
+        "run.properties",
+        "bootstrap.servers=broker1:9092\nsecurity.protocol=SASL_SSL\n",
+    )
+    raw = spark.readStream.format("rate").load().selectExpr(
+        "cast(cast(value as string) as binary) as key",
+        "cast(cast(value as string) as binary) as value",
+    )
+    handed = {"source": {}, "sink": {}}
+
+    def recorder(side):
+        def option(self, k, v):
+            handed[side][k] = v
+            return self
+
+        def options(self, **kw):
+            handed[side].update(kw)
+            return self
+
+        return option, options
+
+    class Query:
+        def awaitTermination(self):
+            pass
+
+    for cls, side in ((DataStreamReader, "source"), (DataStreamWriter, "sink")):
+        option, options = recorder(side)
+        monkeypatch.setattr(cls, "option", option)
+        monkeypatch.setattr(cls, "options", options)
+    monkeypatch.setattr(DataStreamReader, "load", lambda self, *a, **kw: raw)
+    monkeypatch.setattr(DataStreamWriter, "start", lambda self, *a, **kw: Query())
+    monkeypatch.setattr(runner.signal, "signal", lambda *a: None)
+    jobs = []
+    orig_run = runner.PlumberJob.run
+
+    def capture_run(self, **kw):
+        jobs.append(self)
+        return orig_run(self, **kw)
+
+    monkeypatch.setattr(runner.PlumberJob, "run", capture_run)
+    argv = _argv(tmp_path, _write(tmp_path, "t_ok3.py", TEST_OK))
+    argv.remove("-D")
+    rc = main(argv + ["-p", props, "--checkpoint", str(tmp_path / "ckpt")])
+    assert rc == 0
+    spec = jobs[0].streaming_plan_spec()
+    assert handed["sink"]["kafka.security.protocol"] == "SASL_SSL"
+    assert handed["sink"] == spec["sink"]["options"]
+    assert handed["source"] == spec["source"]["options"]
+
+
 def test_kafka_options_allowlists():
     """ADVICE r6: dotted CONNECTOR options must pass un-prefixed and
     dot-free CLIENT configs must gain the kafka. prefix — the naive

@@ -89,6 +89,16 @@ def test_avro_confluent_framing_roundtrip(spark):
         decode(F.col("b"), wt, confluent_framing=True).alias("v")
     ).collect()[0].v
     assert out == Row(name="x", n=1)
+    # a column name that is not a bare SQL identifier frames the same way
+    spaced = enc.withColumnRenamed("b", "kafka value")
+    out = spaced.select(
+        decode(F.col("kafka value"), wt, confluent_framing=True).alias("v")
+    ).collect()[0].v
+    assert out == Row(name="x", n=1)
+    # a file-pinned type checks the magic byte as the registry path does
+    bad = spark.createDataFrame([(b"\x01" + raw[1:],)], "b binary")
+    with pytest.raises(Exception, match="not a Confluent-framed avro message"):
+        bad.select(decode(F.col("b"), wt, confluent_framing=True)).collect()
 
 
 def test_avro_decode_record_rejects_trailing_and_truncated_payloads():
@@ -102,9 +112,21 @@ def test_avro_decode_record_rejects_trailing_and_truncated_payloads():
             decode_record(body[:cut], model)
 
 
-def test_spark_type_of():
+UNION_ENUM_AVSC = """
+{"type":"record","name":"U","fields":[
+  {"name":"u","type":["null","int","string","double"]},
+  {"name":"e","type":{"type":"enum","name":"E","symbols":["A","B"]}}]}
+"""
+
+
+def test_spark_type_of(spark):
     from pyspark.sql import types as T
 
     assert spark_type_of(WireType("long")) == T.LongType()
     assert spark_type_of(WireType("string")) == T.StringType()
     assert isinstance(spark_type_of(WireType("avro", DEMO_AVSC)), T.StructType)
+    # the golden gate types its fixtures with spark_type_of: the decoded
+    # column must have exactly that type, N-way unions and enums included
+    wt = WireType("avro", UNION_ENUM_AVSC)
+    b = spark.range(1).select(F.lit(b"").alias("b"))
+    assert b.select(decode(F.col("b"), wt)).schema[0].dataType == spark_type_of(wt)
