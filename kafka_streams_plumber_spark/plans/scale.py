@@ -105,6 +105,11 @@ def inline_table(
     round-trips via escaping, a float via repr (shortest round-trip
     form; the exact-decimal intermediate casts to the identical
     double).
+
+    ``rows`` must not be empty: ``VALUES`` cannot express a zero-row
+    table. That is why ``operators/diff.py`` (the schema-issue frame of
+    two identical schemas) and ``streaming/upsert.py`` (the empty
+    snapshot before the first batch) keep ``spark.createDataFrame``.
     """
     import math as _math
 

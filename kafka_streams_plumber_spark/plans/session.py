@@ -72,7 +72,7 @@ def get_spark(
         .config("spark.driver.memory", driver_mem)
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or int(cpus) if str(cpus).isdigit() else 32),
+            str(shuffle_partitions or (int(cpus) if cpus.isdigit() else 32)),
         )
     )
     for k, v in RUNTIME_CONF.items():

@@ -53,6 +53,7 @@ from kafka_streams_plumber_spark.operators.conform import (
     conform_column,
 )
 from kafka_streams_plumber_spark.operators.pipeline import Pipeline, to_kv
+from kafka_streams_plumber_spark.plans.scale import inline_table
 from kafka_streams_plumber_spark.plans.session import load_tables
 
 from pyspark.sql import types as T
@@ -2381,7 +2382,8 @@ def q_range(spark, sf_dir):
 
     e = load_tables(spark, sf_dir)["events"]
     tiers = F.broadcast(
-        e.sparkSession.createDataFrame(
+        inline_table(
+            spark,
             [("low", 0.0, 50.0), ("mid", 50.0, 200.0), ("high", 200.0, 1e6)],
             "tier string, lo double, hi double",
         )
@@ -5179,7 +5181,7 @@ def q_blocklist(spark, sf_dir):
 
     d = load_tables(spark, sf_dir)["documents"]
     hosts = d.select("doc_id", url_host(_synth_url()).alias("host"))
-    bl = spark.createDataFrame([("example.com",)], ["domain"])
+    bl = inline_table(spark, [("example.com",)], "domain string")
     return filter_blocklist(hosts, bl)
 
 
@@ -5958,9 +5960,7 @@ def q_bm25(spark, sf_dir):
     decontamination lookups. Scores rounded to 6dp BEFORE ranking so
     float-sum association order cannot flip mathematically-tied docs."""
     docs = load_tables(spark, sf_dir)["documents"]
-    qdf = spark.createDataFrame(
-        _BM25_QUERIES, "query_id long, query_text string"
-    )
+    qdf = inline_table(spark, _BM25_QUERIES, "query_id long, query_text string")
     out = bm25_topk(docs, qdf, k=10)
     return out.select(
         "query_id", "doc_id", "score", F.col("rank").cast("long").alias("rank")
@@ -7070,7 +7070,7 @@ def q_rrf(spark, sf_dir):
     Fusion touches only the two top-k-per-query legs (tiny frames), so
     its cost is independent of corpus size."""
     docs = load_tables(spark, sf_dir)["documents"]
-    qdf = spark.createDataFrame(_BM25_QUERIES, "query_id long, query_text string")
+    qdf = inline_table(spark, _BM25_QUERIES, "query_id long, query_text string")
     from kafka_streams_plumber_spark.operators.retrieval import bm25_topk as _bm
 
     bm = _bm(docs, qdf, k=10)
@@ -7213,7 +7213,7 @@ def q_ir_metrics(spark, sf_dir):
     corpus size; the ideal DCG is an in-expression aggregate over
     sequence(1, min(n_rel, k))."""
     docs = load_tables(spark, sf_dir)["documents"]
-    qdf = spark.createDataFrame(_BM25_QUERIES, "query_id long, query_text string")
+    qdf = inline_table(spark, _BM25_QUERIES, "query_id long, query_text string")
     from kafka_streams_plumber_spark.operators.retrieval import bm25_topk as _bm
 
     ranking = _bm(docs, qdf, k=10)

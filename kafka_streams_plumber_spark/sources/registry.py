@@ -7,7 +7,7 @@ message, and TypeConversions.scala:22, which admits ``avro`` with no
 Spark needs a FIXED column type per DataFrame, so resolution happens at
 two levels:
 
-- **Driver side, once per job**: :func:`resolve_reader_schema` fetches
+- **Driver side, once per job**: ``serde.resolve_registry_type`` fetches
   the subject's latest schema (Confluent TopicNameStrategy:
   ``{topic}-value`` / ``{topic}-key``) and pins it as the READER schema —
   this is what types the column.
@@ -15,8 +15,8 @@ two levels:
   still writing previous versions) carry different writer ids; the avro
   decode UDF (sources/serde.py) resolves each id through the same client
   (cached per worker — one registry round-trip per (worker, id), NOT per
-  record) and reconciles writer records onto the reader schema by field
-  name.
+  record) and decodes writer records through the writer→reader plan of
+  ``avsc.read_plan``, built once per id.
 
 The HTTP client is stdlib ``urllib`` (the registry API is plain
 JSON-over-HTTP); :class:`FakeSchemaRegistry` is the injectable in-memory

@@ -3,6 +3,8 @@ hot keys; bucketed tables join with zero exchanges."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -138,6 +140,39 @@ def test_register_views_sql_surface(spark):
         "SELECT max(unix_millis(ts)) AS m FROM events"
     ).collect()[0]
     assert row["m"] > 0
+
+
+@pytest.mark.parametrize(
+    "cpus, requested, expected",
+    [("8", None, "8"), ("8", 4, "4"), ("*", None, "32"), ("*", 4, "4")],
+)
+def test_get_spark_shuffle_partitions(monkeypatch, cpus, requested, expected):
+    """An explicit shuffle_partitions wins whatever SPARK_GRAFT_CPUS
+    holds. A fake builder records the confs, so no session starts."""
+    from kafka_streams_plumber_spark.plans import session
+
+    confs = {}
+
+    class Builder:
+        def appName(self, _name):
+            return self
+
+        def master(self, master):
+            confs["master"] = master
+            return self
+
+        def config(self, key, value):
+            confs[key] = value
+            return self
+
+        def getOrCreate(self):
+            return SimpleNamespace(conf=SimpleNamespace(set=lambda k, v: None))
+
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=Builder()))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+    session.get_spark(shuffle_partitions=requested)
+    assert confs["master"] == f"local[{cpus}]"
+    assert confs["spark.sql.shuffle.partitions"] == expected
 
 
 def test_compact_files_reduces_file_count_preserves_rows(spark, tmp_path):

@@ -16,10 +16,10 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import best_of  # noqa: E402
 from kafka_streams_plumber_spark.plans.session import get_spark  # noqa: E402
 from kafka_streams_plumber_spark.queries import QUERIES  # noqa: E402
 
@@ -196,15 +196,9 @@ MAX_SF = {
 
 
 def t_run(spark, name: str, sf: str) -> float:
-    best = float("inf")
-    for _ in range(2):
-        # time construction too: iterative queries (pagerank, kmeans)
-        # do their rounds eagerly at plan-build time via localCheckpoint
-        t0 = time.time()
-        df = QUERIES[name](spark, sf)
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
-    return best
+    # time construction too: iterative queries (pagerank, kmeans) do
+    # their rounds eagerly at plan-build time via localCheckpoint
+    return best_of(lambda: QUERIES[name](spark, sf), 2, include_construction=True)
 
 
 def main() -> None:

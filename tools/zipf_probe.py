@@ -23,10 +23,10 @@ import bisect
 import os
 import random
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import best_of  # noqa: E402
 from kafka_streams_plumber_spark.plans.session import get_spark  # noqa: E402
 
 VOCAB = 10_000
@@ -89,11 +89,8 @@ def main() -> None:
         ).cache()
         frames[label].count()  # materialize the cache before timing
 
-    def timed(make):
-        t0 = time.time()
-        df = make()
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
+    def timed(build):
+        return round(best_of(build, 3, include_construction=True), 3)
 
     results = {}
     for op, make in () if section == "semantic" else (
@@ -104,8 +101,8 @@ def main() -> None:
         make(frames["sf0.01-equiv"]).write.format("noop").mode(
             "overwrite"
         ).save()
-        small = min(timed(lambda: make(frames["sf0.01-equiv"])) for _ in range(3))
-        big = min(timed(lambda: make(frames["sf0.1-equiv"])) for _ in range(3))
+        small = timed(lambda: make(frames["sf0.01-equiv"]))
+        big = timed(lambda: make(frames["sf0.1-equiv"]))
         n_pairs = make(frames["sf0.1-equiv"]).count()
         ratio = round(big / small, 1) if small else None
         results[op] = (small, big, ratio, n_pairs)
@@ -257,9 +254,8 @@ def main() -> None:
         emb.count()
         planes, cand = lsh_candidate_volume(emb, n)
 
-        def run():
-            t0 = time.time()
-            out = embedding_dup_pairs(
+        def pairs():
+            return embedding_dup_pairs(
                 emb,
                 id_col="vec_id",
                 vec_col="v",
@@ -267,11 +263,10 @@ def main() -> None:
                 threshold=0.8,
                 target_bucket_size=64,
             )
-            npairs = out.count()
-            return round(time.time() - t0, 3), npairs
 
-        run()  # warmup
-        wall, npairs = min(run() for _ in range(2))
+        best_of(pairs, 1, include_construction=True)  # warmup
+        wall = round(best_of(pairs, 2, include_construction=True), 3)
+        npairs = pairs().count()
         sem[label] = (planes, cand, wall, npairs)
         print(
             f"semantic_auto random-vec {label} ({n} docs): planes={planes} "
