@@ -4,9 +4,15 @@ string, bytes, enum, array, record, union.
 
 Implements the Avro 1.x binary encoding spec directly (zigzag varints,
 little-endian IEEE floats, length-prefixed strings, block-encoded
-arrays, index-prefixed unions). It is the one Avro codec of the wire
-path: sources/serde.py runs it in its decode and encode UDFs, one record
-at a time, and the OCF reader decodes container blocks with it.
+arrays, index-prefixed unions). The wire path's default codec is the
+Java one (jvm/AvroCodec.java, over Spark's Avro jar); this one is its
+fallback in sources/serde.py (no javac, or a registry-resolved decode),
+the encoder tests and fixtures build payloads with, and the OCF reader's
+block decoder. Both give values the same Spark shape: a ``[null, T]``
+union is a nullable T and an N-way union a struct with one slot per
+non-null branch (conform's struct of branches), and both fail with the
+same reasons: truncated payloads, trailing bytes, and NULL in a field
+that does not allow it.
 
 The codec is driven by the same parsed schema model as conform()
 (sources/avsc.py), so union branch order and enum symbol order are
@@ -28,6 +34,7 @@ from kafka_streams_plumber_spark.operators.conform import (
     Enum,
     Record,
     Union,
+    branch_name,
 )
 
 # ---------------------------------------------------------------------------
@@ -88,14 +95,77 @@ class ReadRecord:
 # ---------------------------------------------------------------------------
 
 
+class NullValueError(ValueError):
+    """NULL where the schema does not allow it, worded as Avro's
+    GenericDatumWriter words it; ``path`` grows as the error unwinds."""
+
+    def __init__(self, kind: str, path: str = ""):
+        super().__init__(kind, path)
+        self.kind, self.path = kind, path
+
+    def __str__(self) -> str:
+        return f"null value for (non-nullable) {self.kind} at {self.path}"
+
+
+def _kind(schema: Any) -> str:
+    return {Record: "record", Enum: "enum", Array: "array"}.get(type(schema)) or branch_name(schema)
+
+
+#: id(union) -> (union, its slots); holding the union keeps its id unique
+_SLOTS: dict[int, tuple[Union, tuple[str | None, ...]]] = {}
+
+
+def _slots(union: Union) -> tuple[str | None, ...]:
+    """Per branch of an N-way union, its slot in the struct of branches
+    (None for the null branch); empty for a ``[null, T]`` union, whose
+    value is a nullable T, and for resolution plans, whose branches
+    decode as the writer wrote them. Worked out once per union model,
+    not once per record."""
+    hit = _SLOTS.get(id(union))
+    if hit is None or hit[0] is not union:
+        nn = union.non_null
+        slots = (
+            ()
+            if len(nn) < 2 or any(isinstance(b, (Promote, ReadRecord)) for b in nn)
+            else tuple(None if isinstance(b, T.NullType) else branch_name(b) for b in union.branches)
+        )
+        hit = _SLOTS[id(union)] = (union, slots)
+    return hit[1]
+
+
+def _branch_struct(v: Any, slots: tuple[str | None, ...]) -> bool:
+    """Whether ``v`` is a struct of branches (a dict or Row with exactly
+    the slot names) rather than a bare branch value."""
+    keys = v.keys() if isinstance(v, dict) else getattr(v, "__fields__", None)
+    return keys is not None and set(keys) == set(filter(None, slots))
+
+
+def _getter(v: Any) -> Callable[[str], Any]:
+    """Field lookup by name on a dict, a Row or an object."""
+    if isinstance(v, dict):
+        return v.get
+    if hasattr(v, "__fields__"):
+        return lambda k, _row=v: _row[k] if k in _row.__fields__ else None
+    return lambda k, _o=v: getattr(_o, k, None)
+
+
 def encode_value(v: Any, schema: Any) -> bytes:
     if isinstance(schema, T.NullType):
         return b""
     if isinstance(schema, Union):
+        slots = _slots(schema)
+        if slots and _branch_struct(v, slots):  # the first set branch is written
+            get = _getter(v)
+            for i, name in enumerate(slots):
+                if name is not None and (x := get(name)) is not None:
+                    return _zigzag_encode(i) + encode_value(x, schema.branches[i])
+            v = None
         for i, branch in enumerate(schema.branches):
             if _branch_accepts(v, branch):
                 return _zigzag_encode(i) + encode_value(v, branch)
         raise ValueError(f"no union branch for {v!r}")
+    if v is None:
+        raise NullValueError(_kind(schema))
     if isinstance(schema, T.BooleanType):
         return b"\x01" if v else b"\x00"
     if isinstance(schema, (T.IntegerType, T.LongType)):
@@ -117,20 +187,22 @@ def encode_value(v: Any, schema: Any) -> bytes:
         out = b""
         if items:
             out += _zigzag_encode(len(items))
-            for item in items:
-                out += encode_value(item, schema.element)
+            for i, item in enumerate(items):
+                try:
+                    out += encode_value(item, schema.element)
+                except NullValueError as e:
+                    e.path = f"[{i}]{e.path}"
+                    raise
         return out + _zigzag_encode(0)
     if isinstance(schema, Record):
         out = b""
-        get = (
-            v.get
-            if isinstance(v, dict)
-            else (lambda k, _row=v: _row[k] if k in _row.__fields__ else None)
-            if hasattr(v, "__fields__")
-            else (lambda k, _o=v: getattr(_o, k, None))
-        )
+        get = _getter(v)
         for f in schema.fields:
-            out += encode_value(get(f.name), f.type)
+            try:
+                out += encode_value(get(f.name), f.type)
+            except NullValueError as e:
+                e.path = f".{f.name}{e.path}"
+                raise
         return out
     raise NotImplementedError(f"avro encode: {schema!r}")
 
@@ -164,7 +236,11 @@ def decode_value(buf: bytes, pos: int, schema: Any) -> tuple[Any, int]:
         return None, pos
     if isinstance(schema, Union):
         idx, pos = _zigzag_decode(buf, pos)
-        return decode_value(buf, pos, schema.branches[idx])
+        v, pos = decode_value(buf, pos, schema.branches[idx])
+        slots = _slots(schema)
+        if slots and v is not None:
+            v = {**dict.fromkeys(filter(None, slots)), slots[idx]: v}
+        return v, pos
     if isinstance(schema, T.BooleanType):
         return buf[pos] == 1, pos + 1
     if isinstance(schema, (T.IntegerType, T.LongType)):
@@ -211,7 +287,13 @@ def decode_value(buf: bytes, pos: int, schema: Any) -> tuple[Any, int]:
 
 
 def encode_record(v: Any, schema: Record) -> bytes:
-    return encode_value(v, schema)
+    """Encode one payload; :class:`NullValueError` names the path
+    (``Rec.field[i]...``) of a NULL the schema does not allow."""
+    try:
+        return encode_value(v, schema)
+    except NullValueError as e:
+        e.path = f"{getattr(schema, 'name', '')}{e.path}"
+        raise
 
 
 def decode_record(buf: bytes, schema: Any) -> dict:
@@ -222,8 +304,9 @@ def decode_record(buf: bytes, schema: Any) -> dict:
     try:
         out, pos = decode_value(buf, 0, schema)
     except (IndexError, struct.error) as e:
-        raise ValueError(f"avro payload truncated or corrupt: {e}") from e
-    if pos != len(buf):
-        why = "truncated" if pos > len(buf) else f"{len(buf) - pos} trailing bytes"
-        raise ValueError(f"avro payload: {why}")
+        raise ValueError("avro payload truncated or corrupt") from e
+    if pos > len(buf):
+        raise ValueError("avro payload truncated or corrupt")
+    if pos < len(buf):
+        raise ValueError(f"avro payload: {len(buf) - pos} trailing bytes")
     return out

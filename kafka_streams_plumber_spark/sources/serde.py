@@ -5,8 +5,17 @@ columns — parity with the reference's MappingType serde layer
 Four wire types (SURVEY.md §1.2): long (8-byte big-endian), string
 (UTF-8), avro (schema from .avsc or the registry, optionally
 Confluent-framed), void (always NULL). long, string and void are column
-expressions. Avro is one Arrow-batched Python UDF each way over
-sources/avro_codec.py; the UDF also strips or adds the Confluent header.
+expressions. Avro is one Java UDF each way (jvm/AvroCodec.java, built and
+registered by kafka_streams_plumber_spark.jvm), which also checks and
+strips, or prepends, the Confluent header: the wire path never leaves the
+JVM. The Arrow-batched Python UDF over sources/avro_codec.py runs in two
+cases only: when the Java codec cannot be built (no javac or no Avro jar
+in Spark's jars; a warning says so), and for the registry-resolved decode,
+whose writer ids are looked up per record through the Python
+SchemaRegistryClient. The Java functions are registered in the Spark
+session active on the thread that builds the plan, so build and run an
+Avro plan on that session; with no active session a warning is logged
+and the Python codec runs.
 
 Type strings parse exactly like the reference CLI (`string`,
 `long`, `avro=file.avsc`, `avro`, `void` — TypeConversions.scala:42-51):
@@ -132,12 +141,11 @@ def encode(col: Column, wt: WireType, *, confluent_framing: bool = False,
                 "avro output needs a schema: avro=file.avsc, or plain "
                 "avro resolved through resolve_registry_type()"
             )
-        header = None
+        sid = None
         if confluent_framing or wt.registry_resolved:
             # registry-resolved types frame with their registered id
             sid = schema_id if schema_id is not None else (wt.schema_id or 0)
-            header = _confluent_header(sid)
-        return _avro_encode(col, wt, header)
+        return _avro_encode(col, wt, sid)
     raise AssertionError(wt.kind)
 
 
@@ -167,23 +175,29 @@ def _unframe(b: bytes) -> tuple[int, bytes]:
 
 
 def _avro_decode(col: Column, wt: WireType, *, framed: bool, registry) -> Column:
-    """The avro decode UDF: spec-correct pure-Python codec
-    (sources/avro_codec.py), Arrow-batched (useArrow), so only the codec
-    call is per-record, not the serialization. (A struct-returning
-    pandas_udf cannot represent a NULL struct row, which a Kafka
-    tombstone requires, so the Arrow scalar UDF is the vectorization.)
+    """The avro decode: the Java UDF (see the module docstring) unless a
+    ``registry`` resolves writer ids or the Java codec is unavailable.
 
-    The closure is picked here, once per plan, so unframed payloads pay
-    nothing per record for framing. Framed payloads lose their header
-    through :func:`_unframe`. With a ``registry`` each writer id is
-    resolved against the pinned reader schema (``wt``) with
-    sources/avsc.resolve, once per id per executor process
-    (GenericAvroSerializer.scala:9-73 semantics); reader-only fields
-    without a default null-fill, as conform does; any other problem
-    raises."""
+    The fallback is the pure-Python codec (sources/avro_codec.py) as an
+    Arrow-batched UDF (useArrow), so only the codec call is per-record,
+    not the serialization. (A struct-returning pandas_udf cannot
+    represent a NULL struct row, which a Kafka tombstone requires, so the
+    Arrow scalar UDF is the vectorization.) Its closure is picked here,
+    once per plan, so unframed payloads pay nothing per record for
+    framing. Framed payloads lose their header through :func:`_unframe`.
+    With a ``registry`` each writer id is resolved against the pinned
+    reader schema (``wt``) with sources/avsc.resolve, once per id per
+    executor process (GenericAvroSerializer.scala:9-73 semantics);
+    reader-only fields without a default null-fill, as conform does; any
+    other problem raises."""
+    from kafka_streams_plumber_spark import jvm
     from kafka_streams_plumber_spark.sources.avro_codec import decode_record
 
     reader = wt.model
+    if registry is None:
+        name = jvm.avro_function("decode", wt.avsc, spark_type(reader))
+        if name is not None:
+            return F.call_function(name, col, F.lit(wt.avsc), F.lit(framed))
     if not framed:
 
         def _dec(b, _model=reader):
@@ -209,25 +223,30 @@ def _avro_decode(col: Column, wt: WireType, *, framed: bool, registry) -> Column
     return _py_udf(_dec, spark_type(reader))(col)
 
 
-def _avro_encode(col: Column, wt: WireType, header: bytes | None) -> Column:
-    """The avro encode UDF; ``header`` (a Confluent header) prefixes
-    every payload when given, chosen once per plan like
+def _avro_encode(col: Column, wt: WireType, schema_id: int | None) -> Column:
+    """The avro encode: the Java UDF, or the Python codec's UDF when the
+    Java codec is unavailable. ``schema_id``, when given, frames every
+    payload with its Confluent header, chosen once per plan like
     :func:`_avro_decode`'s framing."""
     from pyspark.sql import types as T
 
+    from kafka_streams_plumber_spark import jvm
     from kafka_streams_plumber_spark.sources.avro_codec import encode_record
 
+    name = jvm.avro_function("encode", wt.avsc, T.BinaryType())
+    if name is not None:
+        return F.call_function(name, col, F.lit(wt.avsc), F.lit(schema_id).cast("int"))
     model = wt.model
     # struct input arrives as Row (pickled path) or dict (Arrow path);
     # encode_record accepts both
-    if header is None:
+    if schema_id is None:
 
         def _enc(v, _model=model):
             return None if v is None else encode_record(v, _model)
 
     else:
 
-        def _enc(v, _model=model, _header=header):
+        def _enc(v, _model=model, _header=_confluent_header(schema_id)):
             return None if v is None else _header + encode_record(v, _model)
 
     return _py_udf(_enc, T.BinaryType())(col)
