@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kafka_streams_plumber_spark.plans.scale import reuse_barrier
+from kafka_streams_plumber_spark.plans.scale import inline_table, reuse_barrier
 
 
 def funnel(
@@ -204,12 +204,9 @@ def funnel(
     counts = allu.groupBy("stage").agg(
         F.count_distinct(F.col(u)).alias("users")
     )
-    spine = None
-    for i, step in enumerate(steps):
-        row = spark.range(1).select(
-            F.lit(i + 1).alias("stage"), F.lit(step).alias("step")
-        )
-        spine = row if spine is None else spine.unionAll(row)
+    spine = inline_table(
+        spark, [(i + 1, s) for i, s in enumerate(steps)], "stage int, step string"
+    )
     return (
         spine.join(counts, "stage", "left")
         .select(

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_streams_plumber_spark.plans.scale import inline_table
+
 #: Field separator / NULL sentinel for the row digest. Unit separator +
 #: a tag no real column value contains, so (NULL, "") and ("", NULL)
 #: hash differently.
@@ -204,8 +206,8 @@ def audit_schema_drift(
         if old_types[c] != new_types[c]:
             issues.append((c, "type_changed", old_types[c], new_types[c]))
 
-    schema_issues = spark.createDataFrame(
-        issues, "column string, issue string, old_value string, new_value string"
+    schema_issues = inline_table(
+        spark, issues, "column string, issue string, old_value string, new_value string"
     )
 
     shared = sorted(set(old_types) & set(new_types))

@@ -4086,7 +4086,7 @@ def chi2_gof(
     # parallelized the k-row spine into a defaultParallelism-slice RDD,
     # and its FOUR plan references each ran a 32-task ExistingRDD scan
     # stage — ~2 s of task-launch overhead for 5 rows at sf0.1 (r12
-    # profile). A VALUES table folds at compile time instead.
+    # profile). A LocalRelation folds at planning time instead.
     from kafka_streams_plumber_spark.plans.scale import inline_table
 
     spine = inline_table(
@@ -4354,7 +4354,7 @@ def qq_table(
     from kafka_streams_plumber_spark.plans.scale import inline_table
 
     spine = inline_table(
-        df.sparkSession, [(i, p) for i, p in enumerate(ps)], "_i int, p double"
+        df.sparkSession, [(i, float(p)) for i, p in enumerate(ps)], "_i int, p double"
     )
     qa = F.array(*[F.col(f"_a{i}") for i in range(len(ps))])
     qb = F.array(*[F.col(f"_b{i}") for i in range(len(ps))])

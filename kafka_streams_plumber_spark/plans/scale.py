@@ -18,8 +18,15 @@ These are the two knobs AQE cannot always turn for you at 100 TB:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    StructType,
+    _make_type_verifier,
+    _parse_datatype_string,
+)
 
 
 def ensure_parallelism(df: DataFrame, *, multiple: int = 1) -> DataFrame:
@@ -85,65 +92,39 @@ def reuse_barrier(df: DataFrame) -> DataFrame:
 
 
 def inline_table(
-    spark: SparkSession, rows: list[tuple], schema: str
+    spark: SparkSession, rows: list[tuple], schema: str | StructType
 ) -> DataFrame:
-    """A small literal frame as a TRUE LocalRelation (SQL ``VALUES``
-    inline table), instead of ``spark.createDataFrame`` — which in
-    PySpark parallelizes even a 5-row list into an RDD of
-    ``defaultParallelism`` slices. Every reference to such a spine then
-    runs a full ``Scan ExistingRDD`` stage (32 near-empty tasks per
-    reference at local[32]; q_gof executed FOUR of them, ~2 s of pure
-    task-launch overhead for 5 rows), and none of the optimizer's
-    local-relation folding (ConvertToLocalRelation) can fire. A VALUES
-    table folds into the plan at compile time — zero stages, zero
-    tasks, and joins against it can collapse entirely.
+    """A small literal frame as a true ``LocalRelation``: the package's
+    only way to turn Python rows into a DataFrame.
 
-    ``schema`` is the usual DDL string ("name type, ..."). Values may
-    be str, bool, int, float (finite) or None; each column is wrapped
-    in an explicit CAST to its declared type, so literal-typing quirks
-    (bare 0.1 parsing as DECIMAL) cannot shift a value — a string
-    round-trips via escaping, a float via repr (shortest round-trip
-    form; the exact-decimal intermediate casts to the identical
-    double).
+    ``schema`` is a DDL string (nested types included) or a
+    ``StructType``. Each row first passes PySpark's type verifier, the
+    check a row-list ``createDataFrame`` runs, so a wrong type or a None
+    in a non-nullable field raises, nested ones too. The rows then reach
+    the JVM as one Arrow table, which Spark keeps as a ``LocalRelation``
+    below ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default). No RDD, no Python worker, no job: the optimizer folds the
+    frame and the deterministic operators on it into one
+    ``LocalTableScan`` at planning time (ConvertToLocalRelation), and
+    joins against it can collapse. A row-list ``createDataFrame`` would
+    instead parallelize even 5 rows into ``defaultParallelism`` slices
+    and scan them in a stage per plan reference.
 
-    ``rows`` must not be empty: ``VALUES`` cannot express a zero-row
-    table. That is why ``operators/diff.py`` (the schema-issue frame of
-    two identical schemas) and ``streaming/upsert.py`` (the empty
-    snapshot before the first batch) keep ``spark.createDataFrame``.
+    Zero rows keep the schema; strings, binary, NaN and subnormal floats
+    round-trip exactly.
     """
-    import math as _math
-
-    fields = []
-    for part in schema.split(","):
-        name, _, typ = part.strip().partition(" ")
-        fields.append((name.strip(), typ.strip()))
-    assert fields and all(t for _, t in fields), f"bad schema: {schema}"
-
-    def lit(v) -> str:
-        if v is None:
-            return "NULL"
-        if isinstance(v, bool):
-            return "TRUE" if v else "FALSE"
-        if isinstance(v, str):
-            return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
-        if isinstance(v, int):
-            return str(v)
-        if isinstance(v, float):
-            assert _math.isfinite(v), f"non-finite literal: {v}"
-            return repr(v)
-        raise TypeError(f"unsupported inline_table literal: {type(v)}")
-
-    values = ",".join(
-        "(" + ",".join(lit(v) for v in row) + ")" for row in rows
+    struct = (
+        _parse_datatype_string(schema) if isinstance(schema, str) else schema
     )
-    cols = ",".join(
-        f"CAST(c{i} AS {typ}) AS {name}"
-        for i, (name, typ) in enumerate(fields)
+    check_row = _make_type_verifier(struct)
+    for row in rows:
+        check_row(row)
+    arrow = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [[] for _ in arrow]
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(columns, arrow)], schema=arrow
     )
-    names = ",".join(f"c{i}" for i in range(len(fields)))
-    return spark.sql(
-        f"SELECT {cols} FROM (VALUES {values}) AS _vals({names})"
-    )
+    return spark.createDataFrame(table, struct)
 
 
 def truncate_lineage(

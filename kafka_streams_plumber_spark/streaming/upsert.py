@@ -35,6 +35,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from kafka_streams_plumber_spark.operators.cdc import apply_changes
+from kafka_streams_plumber_spark.plans.scale import inline_table
 
 
 def _versions(snapshot_path: str) -> list[int]:
@@ -68,9 +69,7 @@ def upsert_batch_fn(
         if prior:
             snap = spark.read.parquet(f"{snapshot_path}/v={max(prior)}")
         else:
-            snap = spark.createDataFrame(
-                [], batch_df.select(*snap_cols).schema
-            )
+            snap = inline_table(spark, [], batch_df.select(*snap_cols).schema)
         folded = apply_changes(
             snap,
             batch_df,

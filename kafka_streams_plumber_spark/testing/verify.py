@@ -14,9 +14,14 @@ Parity surface (SURVEY.md §2.5, §3 entry point 2):
   start the production job, exactly like Plumber.scala:41-50.
 
 This works because a Pipeline is a source-agnostic ``DataFrame ->
-DataFrame`` function: the identical logical plan runs on
-``spark.createDataFrame(fixtures)`` here and on the Kafka stream in
-production ("same plan, batch fixtures").
+DataFrame`` function: the identical logical plan runs on the Kafka
+stream in production and here on the fixtures as a ``LocalRelation``
+(``plans.scale.inline_table``). Catalyst folds that plan at planning
+time into one ``LocalTableScan``, evaluated by its interpreter rather
+than generated code, so a gate over a pipeline without Python steps
+launches no Spark job. ``tests/test_scale.py`` pins the fold for the
+reference examples and that the unfolded (codegen) plan returns the
+same rows.
 """
 
 from __future__ import annotations
@@ -25,6 +30,8 @@ from typing import Any
 
 from pyspark.sql import Row, SparkSession
 from pyspark.sql.types import DataType, StructField, StructType, _parse_datatype_string
+
+from kafka_streams_plumber_spark.plans.scale import inline_table
 
 
 class VerificationError(AssertionError):
@@ -91,13 +98,12 @@ def verify(
 ) -> None:
     """Run ``pipeline`` over fixture ``inputs`` and require it to
     reproduce ``expected`` (same count, deep-equal records, in order —
-    per-partition order is what Kafka guarantees and the fixture frame is
-    a single partition). Raises VerificationError on any mismatch.
+    per-partition order is what Kafka guarantees). Raises
+    VerificationError on any mismatch.
     """
     schema = _schema(key_schema, value_schema)
     rows = [tuple(fx) if len(schema) == 2 else (fx[1],) for fx in inputs]
-    df = spark.createDataFrame(rows, schema).coalesce(1)
-    out = pipeline(df)
+    out = pipeline(inline_table(spark, rows, schema))
     got = [(r["key"], r["value"]) for r in out.collect()]
 
     if len(got) != len(expected):

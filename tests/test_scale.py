@@ -1,8 +1,10 @@
 """Scale-plan helpers: salted joins preserve join semantics and spread
-hot keys; bucketed tables join with zero exchanges."""
+hot keys; bucketed tables join with zero exchanges; inline_table builds
+literal frames that fold at planning time, which the golden gate uses."""
 
 from __future__ import annotations
 
+import pathlib
 from types import SimpleNamespace
 
 import pytest
@@ -11,6 +13,7 @@ from pyspark.sql import functions as F
 from kafka_streams_plumber_spark.plans.inspect import shuffle_count
 from kafka_streams_plumber_spark.plans.scale import (
     bucketed_table,
+    inline_table,
     salted_join,
     write_bucketed,
 )
@@ -290,3 +293,192 @@ def test_idempotent_write_replay_and_rewrite(spark, tmp_path):
     assert not os.path.exists(out + "__old")
     with open(os.path.join(out, "_JOB_TOKEN")) as f:
         assert f.read() == "run-2"
+
+
+# --- inline_table: the package's one literal-frame builder -----------------
+
+
+def test_inline_table_nested_types_round_trip(spark):
+    """Nested columns from a DDL string, not all of whose commas
+    separate columns."""
+    from pyspark.sql import Row
+
+    df = inline_table(
+        spark,
+        [((1, None), [(2, "x")], {"k": 3}, b"\x00\xff", None)],
+        "p struct<a:int,b:int>, xs array<struct<i:int,t:string>>,"
+        " m map<string,int>, b binary, v void",
+    )
+    assert [f.dataType.simpleString() for f in df.schema] == [
+        "struct<a:int,b:int>",
+        "array<struct<i:int,t:string>>",
+        "map<string,int>",
+        "binary",
+        "void",
+    ]
+    assert df.collect() == [
+        Row(
+            p=Row(a=1, b=None),
+            xs=[Row(i=2, t="x")],
+            m={"k": 3},
+            b=bytearray(b"\x00\xff"),
+            v=None,
+        )
+    ]
+
+
+def test_inline_table_zero_rows_keep_schema(spark):
+    df = inline_table(spark, [], "a int, p struct<s:string>")
+    assert df.schema.simpleString() == "struct<a:int,p:struct<s:string>>"
+    assert df.collect() == []
+
+
+def test_inline_table_literals_round_trip_exactly(spark):
+    import math
+
+    strings = ["it's", "back\\slash", "\\'", ""]
+    floats = [0.1, 1e-300, float("nan")]
+    df = inline_table(
+        spark,
+        [(s, f) for s, f in zip(strings, floats + [None])],
+        "s string, f double",
+    )
+    got = df.collect()
+    assert [r.s for r in got] == strings
+    assert [r.f for r in got[:2]] == floats[:2]
+    assert math.isnan(got[2].f) and got[3].f is None
+
+
+def test_inline_table_folds_to_local_table_scan(spark):
+    from kafka_streams_plumber_spark.plans.inspect import plan_string
+
+    df = inline_table(spark, [(1, "a"), (2, "b")], "i int, s string")
+    plan = plan_string(df.filter(F.col("i") > 1))
+    assert plan.startswith("LocalTableScan"), plan
+    assert "ExistingRDD" not in plan
+
+
+def test_inline_table_rejects_null_in_non_nullable_field(spark):
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    top = StructType([StructField("a", IntegerType(), False)])
+    nested = StructType([StructField("p", top, True)])
+    with pytest.raises((TypeError, ValueError)):
+        inline_table(spark, [(None,)], top)
+    with pytest.raises((TypeError, ValueError)):
+        inline_table(spark, [((None,),)], nested)
+
+
+def test_inline_table_rejects_wrong_type(spark):
+    # Arrow alone would truncate 1.5 to 1
+    with pytest.raises(TypeError):
+        inline_table(spark, [(1.5,)], "a int")
+
+
+def test_package_has_one_literal_frame_builder():
+    """Only plans/scale.py:inline_table may call createDataFrame."""
+    import kafka_streams_plumber_spark
+
+    root = pathlib.Path(kafka_streams_plumber_spark.__file__).parent
+    hits = [
+        f"{p.relative_to(root)}:{n}"
+        for p in sorted(root.rglob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if "createDataFrame(" in line
+    ]
+    assert hits and all(h.startswith("plans/scale.py:") for h in hits), hits
+
+
+# --- the golden gate over inline_table -------------------------------------
+
+_EXAMPLES = pathlib.Path(__file__).resolve().parent.parent / "examples"
+_EXAMPLE_TYPES = {
+    "demo": ("avro=example.undesired.avsc", "avro=example.desired.avsc"),
+    "time": ("string,string", "long,long"),
+    "csv": ("string", "avro=example.avsc"),
+}
+
+
+def _example_job(spark, name, monkeypatch):
+    from kafka_streams_plumber_spark.cli import _load_module, _parse_kv_types
+    from kafka_streams_plumber_spark.streaming.runner import PlumberJob
+
+    monkeypatch.chdir(_EXAMPLES / name)
+    source, sink = _EXAMPLE_TYPES[name]
+    ik, iv = _parse_kv_types(source)
+    ok, ov = _parse_kv_types(sink)
+    tmod = _load_module("example.test.py", f"{name}_example_test")
+    return PlumberJob(
+        spark=spark,
+        pipeline=_load_module("example.py", f"{name}_example").pipeline(),
+        brokers="unused:9092",
+        source_topic="in",
+        sink_topic="out",
+        input_key=ik,
+        input_value=iv,
+        output_key=ok,
+        output_value=ov,
+        fixtures=list(tmod.fixtures()),
+        expectations=list(tmod.expectations()),
+    )
+
+
+def _gate_output(spark, job, monkeypatch, group):
+    """Run the job's golden gate; return the frame it collected and the
+    Spark jobs it launched."""
+    seen = []
+
+    def spy(df):
+        seen.append(type(job)._transformed(job, df))
+        return seen[-1]
+
+    monkeypatch.setattr(job, "_transformed", spy)
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        job.preflight()
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    return seen[0], spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+
+
+@pytest.mark.parametrize("name", sorted(_EXAMPLE_TYPES))
+def test_example_gate_folds_and_matches_codegen(spark, name, monkeypatch):
+    """Each reference example's gate plan folds to one LocalTableScan
+    (Catalyst's interpreter) and launches no job; the unfolded plan,
+    which runs generated code the way the stream does, passes the gate
+    with the same rows."""
+    from kafka_streams_plumber_spark.plans.inspect import plan_string
+
+    job = _example_job(spark, name, monkeypatch)
+    folded, jobs = _gate_output(spark, job, monkeypatch, f"gate-{name}")
+    assert plan_string(folded).startswith("LocalTableScan"), plan_string(folded)
+    assert jobs == []
+
+    rule = "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+    spark.conf.set("spark.sql.optimizer.excludedRules", rule)
+    try:
+        unfolded, _ = _gate_output(spark, job, monkeypatch, f"codegen-{name}")
+        plan = plan_string(unfolded)
+        assert plan.startswith("*(1) ") and "*(1) LocalTableScan" in plan, plan
+        assert unfolded.collect() == folded.collect()
+    finally:
+        spark.conf.unset("spark.sql.optimizer.excludedRules")
+
+
+def test_gate_keeps_fixture_order_through_python_udf(spark):
+    """A Python UDF step cannot fold, so the fixture frame runs as a
+    multi-partition scan; verify(ordered=True) must still see the
+    fixtures in order."""
+    from kafka_streams_plumber_spark import Pipeline
+    from kafka_streams_plumber_spark.testing import value, verify
+
+    shout = F.udf(lambda s: s.upper() + "!", "string")
+    words = [f"w{i:02d}" for i in range(12)]
+    verify(
+        spark,
+        Pipeline().map_values(lambda v: shout(v)),
+        inputs=[value(w) for w in words],
+        expected=[value(w.upper() + "!") for w in words],
+        value_schema="string",
+        ordered=True,
+    )
