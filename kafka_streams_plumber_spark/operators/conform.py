@@ -10,7 +10,7 @@ For every target field:
 - absent from the source -> **NULL** (null-fill, AllFieldTypesTest.scala:37,55);
 - extra source fields    -> **silently dropped** (schema-driven projection);
 - target STRING fed a non-string -> **hard error at plan time**
-  (``require(lv.isstring)``, LuaMapper.scala:104) unless ``strict_strings=False``;
+  (``require(lv.isstring)``, LuaMapper.scala:104), with no permissive mode;
 - union targets resolve ``[null, T]`` to a nullable T column (the fast
   path, LuaMapper.scala:71-73) and N-way unions to a struct-of-branches
   with first-matching-branch-wins resolution (LuaMapper.scala:67-91,
@@ -214,15 +214,13 @@ def _matches(src: T.DataType, branch: object) -> bool:
 # --------------------------------------------------------------------------
 
 
-def conform_column(
-    col: Column, src: T.DataType, target: object, *, strict_strings: bool = True
-) -> Column:
+def conform_column(col: Column, src: T.DataType, target: object) -> Column:
     """Build the column expression conforming ``col`` (static type ``src``)
     to ``target``. Pure expression — no UDF."""
     target = _lift(target)
 
     if isinstance(target, Union):
-        return _conform_union(col, src, target, strict_strings=strict_strings)
+        return _conform_union(col, src, target)
 
     if isinstance(target, Record):
         if isinstance(src, T.NullType):
@@ -233,9 +231,7 @@ def conform_column(
         parts = []
         for f in target.fields:
             if f.name in src_fields:
-                child = conform_column(
-                    col[f.name], src_fields[f.name], f.type, strict_strings=strict_strings
-                )
+                child = conform_column(col[f.name], src_fields[f.name], f.type)
             else:
                 # null-fill of omitted fields (AllFieldTypesTest.scala:37,55)
                 child = F.lit(None).cast(spark_type(f.type))
@@ -250,13 +246,10 @@ def conform_column(
         if not isinstance(src, T.ArrayType):
             raise ConformError(f"cannot conform {src.simpleString()} to array")
         elem_src = src.elementType
-        return F.transform(
-            col,
-            lambda x: conform_column(x, elem_src, target.element, strict_strings=strict_strings),
-        )
+        return F.transform(col, lambda x: conform_column(x, elem_src, target.element))
 
     if isinstance(target, Enum):
-        base = conform_column(col, src, T.StringType(), strict_strings=strict_strings)
+        base = conform_column(col, src, T.StringType())
         # invalid symbol is a hard error on write, like
         # GenericData.EnumSymbol construction (LuaMapper.scala:93-97)
         return F.when(
@@ -271,12 +264,10 @@ def conform_column(
     if isinstance(src, T.NullType):
         return F.lit(None).cast(target)
     if isinstance(target, T.StringType) and not isinstance(src, T.StringType):
-        if strict_strings:
-            # require(lv.isstring) — LuaMapper.scala:104
-            raise ConformError(
-                f"target STRING requires a string source, got {src.simpleString()}"
-            )
-        return col.cast(target)
+        # require(lv.isstring) — LuaMapper.scala:104
+        raise ConformError(
+            f"target STRING requires a string source, got {src.simpleString()}"
+        )
     if src == target:
         return col
     # permissive coercion: legacy cast = tonumber/toint semantics
@@ -284,9 +275,7 @@ def conform_column(
     return col.cast(target)
 
 
-def _conform_union(
-    col: Column, src: T.DataType, target: Union, *, strict_strings: bool
-) -> Column:
+def _conform_union(col: Column, src: T.DataType, target: Union) -> Column:
     nn = target.non_null
     if isinstance(src, T.NullType):
         if not target.nullable:
@@ -294,7 +283,7 @@ def _conform_union(
         return F.lit(None).cast(spark_type(target))
     if len(nn) == 1:
         # [null, T] fast path (LuaMapper.scala:71-73)
-        return conform_column(col, src, nn[0], strict_strings=strict_strings)
+        return conform_column(col, src, nn[0])
     # N-way: struct-of-branches, exactly one set; first declared branch
     # matching the source's static type wins (LuaMapper.scala:67-91).
     chosen = None
@@ -310,20 +299,14 @@ def _conform_union(
     parts = []
     for b in nn:
         if b is chosen:
-            parts.append(
-                conform_column(col, src, b, strict_strings=strict_strings).alias(
-                    branch_name(b)
-                )
-            )
+            parts.append(conform_column(col, src, b).alias(branch_name(b)))
         else:
             parts.append(F.lit(None).cast(spark_type(b)).alias(branch_name(b)))
     out = F.struct(*parts)
     return F.when(col.isNull(), F.lit(None).cast(spark_type(target))).otherwise(out)
 
 
-def conform(
-    df: DataFrame, target: object, *, column: str = "value", strict_strings: bool = True
-) -> DataFrame:
+def conform(df: DataFrame, target: object, *, column: str = "value") -> DataFrame:
     """Conform one column of ``df`` (default: the ``value`` of a (key, value)
     frame) to the target schema. Other columns pass through unchanged.
 
@@ -331,5 +314,5 @@ def conform(
     Record/Union/Enum from :mod:`..sources.avsc`.
     """
     src = df.schema[column].dataType
-    new = conform_column(df[column], src, target, strict_strings=strict_strings)
+    new = conform_column(df[column], src, target)
     return df.withColumn(column, new)

@@ -888,33 +888,42 @@ def hits_oracle_sql(
 ) -> str:
     """DuckDB oracle for :func:`hits`: the same max-normalized power
     iteration unrolled as chained CTEs. ``edges_sql`` must select
-    columns (src, dst, w)."""
+    columns (src, dst, w). Every CTE is ``MATERIALIZED``: each round
+    reads its raw scores twice (max normalizer + normalized join), and
+    an inlined CTE re-plans its whole history per reference, so the
+    unmaterialized plan grows ~4x per round."""
     parts = [
-        f"WITH e AS ({edges_sql}),",
-        "nodes AS (SELECT DISTINCT node FROM"
+        f"WITH e AS MATERIALIZED ({edges_sql}),",
+        "nodes AS MATERIALIZED (SELECT DISTINCT node FROM"
         " (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),",
-        "h0 AS (SELECT node, 1.0::DOUBLE AS h FROM nodes),",
+        "h0 AS MATERIALIZED (SELECT node, 1.0::DOUBLE AS h FROM nodes),",
     ]
     for i in range(int(iterations)):
         parts.append(
-            f"a{i + 1}r AS (SELECT e.dst AS node, sum(e.w * h{i}.h) AS a"
+            f"a{i + 1}r AS MATERIALIZED (SELECT e.dst AS node,"
+            f" sum(e.w * h{i}.h) AS a"
             f" FROM e JOIN h{i} ON e.src = h{i}.node GROUP BY e.dst),"
         )
-        parts.append(f"a{i + 1}m AS (SELECT max(a) AS m FROM a{i + 1}r),")
         parts.append(
-            f"a{i + 1} AS (SELECT n.node,"
+            f"a{i + 1}m AS MATERIALIZED (SELECT max(a) AS m FROM a{i + 1}r),"
+        )
+        parts.append(
+            f"a{i + 1} AS MATERIALIZED (SELECT n.node,"
             f" coalesce(a{i + 1}r.a / nullif(a{i + 1}m.m, 0.0), 0.0) AS a"
             f" FROM nodes n LEFT JOIN a{i + 1}r ON n.node = a{i + 1}r.node"
             f" CROSS JOIN a{i + 1}m),"
         )
         parts.append(
-            f"h{i + 1}r AS (SELECT e.src AS node, sum(e.w * a{i + 1}.a) AS h"
+            f"h{i + 1}r AS MATERIALIZED (SELECT e.src AS node,"
+            f" sum(e.w * a{i + 1}.a) AS h"
             f" FROM e JOIN a{i + 1} ON e.dst = a{i + 1}.node"
             f" GROUP BY e.src),"
         )
-        parts.append(f"h{i + 1}m AS (SELECT max(h) AS m FROM h{i + 1}r),")
         parts.append(
-            f"h{i + 1} AS (SELECT n.node,"
+            f"h{i + 1}m AS MATERIALIZED (SELECT max(h) AS m FROM h{i + 1}r),"
+        )
+        parts.append(
+            f"h{i + 1} AS MATERIALIZED (SELECT n.node,"
             f" coalesce(h{i + 1}r.h / nullif(h{i + 1}m.m, 0.0), 0.0) AS h"
             f" FROM nodes n LEFT JOIN h{i + 1}r ON n.node = h{i + 1}r.node"
             f" CROSS JOIN h{i + 1}m)"

@@ -14,6 +14,8 @@ uniform on sequential ids, and expressible in any SQL dialect.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -25,12 +27,19 @@ _KNUTH = 2654435761
 _M31 = 2**31
 
 
+def _knuth(c: Column) -> Column:
+    """Knuth hash of an integer column into [0, 2^31): the one
+    replayable draw under :func:`split_bucket`, :func:`weighted_uniform`
+    and :func:`poisson_bootstrap`."""
+    return (F.pmod(c, F.lit(_M31)) * _KNUTH) % _M31
+
+
 def split_bucket(id_col: Column | str, *, buckets: int = 1000) -> Column:
     """Deterministic uniform bucket in [0, buckets) from an integer id.
     Pure int64 arithmetic (no overflow for any long id), replayable in
     any SQL dialect."""
     c = F.col(id_col) if isinstance(id_col, str) else id_col
-    return (F.pmod(c, F.lit(_M31)) * _KNUTH) % _M31 % buckets
+    return _knuth(c) % buckets
 
 
 def hash_split(
@@ -312,8 +321,7 @@ def weighted_uniform(id_col: Column | str) -> Column:
     same Knuth multiplicative hash as :func:`split_bucket` at full
     31-bit resolution, shifted off zero so ``ln(u)`` is finite."""
     c = F.col(id_col) if isinstance(id_col, str) else id_col
-    h = (F.pmod(c, F.lit(_M31)) * _KNUTH) % _M31
-    return (h.cast("double") + 1.0) / float(_M31 + 1)
+    return (_knuth(c).cast("double") + 1.0) / float(_M31 + 1)
 
 
 def weighted_sample_per_group(
@@ -482,8 +490,8 @@ def sample_to_token_budget(
     The first document that crosses the budget IS kept (each group's
     total lands in ``[budget, budget + max_doc_tokens)``; truncate
     that doc downstream if exact budgets matter). Deterministic across
-    runs/engines/partitionings: the admission order is the md5 id-hash
-    (:func:`...ordering.shuffle_key` convention), and the cumulative
+    runs/engines/partitionings: the admission order is the seeded md5
+    id-hash :func:`...ordering.shuffle_key`, and the cumulative
     token count is an exact integer prefix sum.
 
     Scale shape = :func:`...stats.weighted_percentiles`: range
@@ -495,10 +503,9 @@ def sample_to_token_budget(
     """
     from pyspark.sql import Window as W
 
-    key = F.md5(
-        F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string"))
-    )
-    src = df.withColumn("_k", key).withColumn(
+    from kafka_streams_plumber_spark.operators.ordering import shuffle_key
+
+    src = df.withColumn("_k", shuffle_key(id_col, seed=seed)).withColumn(
         "_w", F.col(token_col).cast("long")
     )
     ranked = (
@@ -640,6 +647,7 @@ def poisson_bootstrap(
     id_col: str,
     value_col: str,
     *,
+    group_cols: str | Sequence[str] = (),
     b: int = 200,
     value_scale: int = 10**6,
     mean_scale: int = 10**9,
@@ -647,19 +655,23 @@ def poisson_bootstrap(
     salt_cells: int = 64,
 ) -> DataFrame:
     """Bootstrap standard error + percentile CI for the MEAN of
-    ``value_col`` via the Poisson bootstrap — the resampling scheme
-    that actually works distributed: instead of materializing B
-    resamples (impossible at 100 TB), every row draws an independent
-    Poisson(1) replication weight per replica (the large-n limit of
-    multinomial resampling), so the whole bootstrap is ONE widening
-    projection + ONE map-combinable aggregate. Deterministic: the
-    weight for (row, replica) comes from the Knuth multiplicative
-    hash of ``id * b + replica`` (the repo's replayable-hash device),
-    inverse-CDF'd through :data:`POISSON1_CDF`.
+    ``value_col``, per group of ``group_cols``, via the Poisson
+    bootstrap — the resampling scheme that actually works distributed:
+    instead of materializing B resamples (impossible at 100 TB), every
+    row draws an independent Poisson(1) replication weight per replica
+    (the large-n limit of multinomial resampling), so the whole
+    bootstrap is ONE widening projection + ONE map-combinable
+    aggregate. Deterministic: the weight for (row, replica) is
+    :func:`weighted_uniform` of ``id * b + replica`` (the repo's
+    replayable Knuth hash), inverse-CDF'd through :data:`POISSON1_CDF`
+    — so a retried task recomputes the same answer.
 
-    One output row: ``(n_rows, n_replicas, point_mean, boot_mean,
-    boot_se, ci_lo, ci_hi)`` — 6 dp. Replicas whose total weight is 0
-    (impossible in practice for n >> 1) would drop NULL-safely.
+    One output row per group: ``(*group_cols, n_rows, n_replicas,
+    point_mean, boot_mean, boot_se, ci_lo, ci_hi)`` — 6 dp; with no
+    ``group_cols``, one row over the whole frame. Group keys match
+    NULL-safely. Replicas whose total weight is 0 drop NULL-safely; a
+    group whose every replica did (a handful of rows and a small ``b``)
+    keeps its point estimate with NULL bootstrap columns.
 
     Exactness: values ride scaled longs (``round(v * value_scale)``) with
     the caller contract ``|value| * value_scale < 2**63 / 8`` (the per-row
@@ -673,19 +685,21 @@ def poisson_bootstrap(
 
     Scale design: the x``b`` explode is the method's honest cost
     (b ~ 100-200), but it never shuffles at row grain — the partial
-    aggregation collapses each partition to <= b * ``salt_cells``
-    long-typed rows map-side (the salt is what keeps the hot loop on
-    long arithmetic; see the in-code note), so the exchange carries
-    O(partitions x b x salt_cells) tiny all-long rows (~4 GB at
-    1000 executors with defaults — noise against a 100 TB scan);
-    everything after lives on the B-row frame. No self-joins, no
-    Python, no driver-side loops.
+    aggregation collapses each partition to <= groups x b x
+    ``salt_cells`` long-typed rows map-side (the salt is what keeps the
+    hot loop on long arithmetic; see the in-code note), so the exchange
+    carries O(partitions x groups x b x salt_cells) tiny all-long rows
+    (~4 GB at 1000 executors with defaults and one group — noise
+    against a 100 TB scan); everything after lives on the
+    groups x B-row frame. No self-joins at row grain, no Python, no
+    driver-side loops.
     """
+    groups = [group_cols] if isinstance(group_cols, str) else list(group_cols)
     alpha = (1.0 - ci) / 2.0
     v = F.round(F.col(value_col).cast("double") * value_scale, 0).cast("long")
     base = df.where(
         F.col(value_col).isNotNull() & F.col(id_col).isNotNull()
-    ).select(F.col(id_col).cast("long").alias("_k"), v.alias("_v"))
+    ).select(*groups, F.col(id_col).cast("long").alias("_k"), v.alias("_v"))
 
     from kafka_streams_plumber_spark.plans.scale import ensure_parallelism
 
@@ -697,13 +711,13 @@ def poisson_bootstrap(
     # n times instead of n*b times.
     base = ensure_parallelism(base)
     rep = base.select(
+        *groups,
         "_k",
         "_v",
         F.pmod(F.xxhash64(F.col("_k")), F.lit(salt_cells)).alias("_sl"),
         F.explode(F.sequence(F.lit(0), F.lit(b - 1))).alias("_r"),
     )
-    h = (F.pmod(F.col("_k") * b + F.col("_r"), F.lit(_M31)) * _KNUTH) % _M31
-    u = (h.cast("double") + 1.0) / float(_M31 + 1)
+    u = weighted_uniform(F.col("_k") * b + F.col("_r"))
     # w = #{k : u >= CDF[k]} — branch-free indicator sum, identical to
     # walking the increasing CDF (first k with u < CDF[k], else 8) but
     # without the 8-deep nested-conditional codegen of an F.when chain.
@@ -738,8 +752,8 @@ def poisson_bootstrap(
     # 2^62 to absorb double rounding; the 1.0 floor also bounds the
     # weight-sum partial).
     part = rep.select(
-        "_r", "_sl", "_v", w.alias("_w")
-    ).groupBy("_r", "_sl").agg(
+        *groups, "_r", "_sl", "_v", w.alias("_w")
+    ).groupBy(*groups, "_r", "_sl").agg(
         F.sum(F.col("_w") * F.col("_v")).alias("_pv"),
         F.sum("_w").alias("_pw"),
         F.count(F.lit(1)).alias("_pc"),
@@ -763,7 +777,7 @@ def poisson_bootstrap(
         F.abs(F.col("_pn").cast("double")),
         F.lit(1.0),
     )
-    per_rep = part.groupBy("_r").agg(
+    per_rep = part.groupBy(*groups, "_r").agg(
         F.sum(dec(F.col("_pv"))).alias("_sv"),
         F.sum(dec(F.col("_pw"))).alias("_sw"),
         F.max(
@@ -772,18 +786,23 @@ def poisson_bootstrap(
     )
     mean = (F.col("_sv").cast("double") / F.col("_sw").cast("double")) / value_scale
     means = per_rep.where(F.col("_sw") > 0).select(
+        *groups,
         F.round(mean * mean_scale, 0).cast("long").alias("_ms"),
         F.col("_risk"),
     )
 
-    point = base.agg(
+    point = base.groupBy(*groups).agg(
         F.count(F.lit(1)).alias("n_rows"),
         (
             (F.sum(dec(F.col("_v"))).cast("double") / F.count(F.lit(1)))
             / value_scale
         ).alias("_pm"),
     )
-    boot = means.agg(
+    # The boot side's keys are renamed so the NULL-safe join condition
+    # names each side's column unambiguously.
+    boot = means.groupBy(
+        *[F.col(g).alias(f"_g{i}") for i, g in enumerate(groups)]
+    ).agg(
         F.count(F.lit(1)).alias("n_replicas"),
         F.sum(dec(F.col("_ms"))).alias("_t"),
         F.sum(dec(F.col("_ms")) * dec(F.col("_ms"))).alias("_q"),
@@ -803,7 +822,9 @@ def poisson_bootstrap(
         / mean_scale
     )
     safe = F.col("_mrisk") < F.lit(float(2**62))
-    return point.crossJoin(F.broadcast(boot)).select(
+    on = [F.col(g).eqNullSafe(F.col(f"_g{i}")) for i, g in enumerate(groups)]
+    return point.join(F.broadcast(boot), on or None, "left").select(
+        *groups,
         "n_rows",
         "n_replicas",
         F.round("_pm", 6).alias("point_mean"),

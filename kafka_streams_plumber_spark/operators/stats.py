@@ -914,91 +914,6 @@ def standardize(
     )
 
 
-#: Poisson(1) inverse-CDF thresholds over an integer uniform in
-#: [0, 1e6): cumulative pmf at k=0..4, then a capped tail at 5.
-#: Engine-portable integers, replayed literally by the SQL oracle.
-_POISSON1_CUM = (367879, 735759, 919699, 981012, 996340)
-
-
-def bootstrap_ci(
-    df: DataFrame,
-    group_cols: str | list[str],
-    value_col: str,
-    *,
-    replicates: int = 32,
-    id_col: str,
-    seed: int = 11,
-    value_scale: int = 1000,
-    alpha: float = 0.05,
-) -> DataFrame:
-    """Poisson bootstrap confidence interval for the per-group mean —
-    the 100 TB-correct bootstrap: instead of resampling n rows with
-    replacement (impossible distributed), every row gets an independent
-    Poisson(1) replicate weight, which converges to the same sampling
-    distribution. Weights are DETERMINISTIC — the repo-wide replayable
-    md5(id|replicate|seed) uniform through the Poisson(1) inverse CDF
-    as integer thresholds — so the release is reproducible and
-    oracle-checkable.
-
-    One explode (x ``replicates``) -> ONE map-combinable aggregate per
-    (group, replicate) over scaled-long sums -> an O(groups x B) frame
-    where the percentile over replicate means and the unweighted point
-    estimate are computed. The fact table is scanned once; nothing
-    per-group funnels into a single task.
-
-    Output: (group, mean, lo, hi, n_replicates).
-    """
-    groups = [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    b = int(replicates)
-    xq = F.round(F.col(value_col) * value_scale).cast("long")
-
-    reps = df.select(
-        *groups,
-        xq.alias("_xq"),
-        F.col(id_col).alias("_id"),
-        F.explode(F.sequence(F.lit(0), F.lit(b - 1))).alias("_r"),
-    )
-    u = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.col("_id").cast("string"),
-                    F.col("_r").cast("string"),
-                    F.lit(str(seed)),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long") % 1_000_000
-    w = F.lit(5).cast("long")
-    for k in range(len(_POISSON1_CUM) - 1, -1, -1):
-        w = F.when(u < _POISSON1_CUM[k], F.lit(k).cast("long")).otherwise(w)
-    per_rep = reps.groupBy(*groups, "_r").agg(
-        F.sum(w * F.col("_xq")).alias("_ws"),
-        F.sum(w).alias("_wn"),
-        F.sum("_xq").alias("_s"),
-        F.count(F.lit(1)).alias("_n"),
-    )
-    mean_r = F.col("_ws") / F.lit(float(value_scale)) / F.col("_wn")
-    out = per_rep.groupBy(*groups).agg(
-        F.round(
-            F.max(F.col("_s")) / F.lit(float(value_scale)) / F.max(F.col("_n")), 6
-        ).alias("mean"),
-        F.round(
-            F.percentile(mean_r, F.lit(alpha / 2)), 6
-        ).alias("lo"),
-        F.round(
-            F.percentile(mean_r, F.lit(1 - alpha / 2)), 6
-        ).alias("hi"),
-        F.count(F.lit(1)).cast("long").alias("n_replicates"),
-    )
-    return out
-
-
 #: Benford's-law expected first-digit probabilities log10(1 + 1/d),
 #: written as the exact expression both engines evaluate identically.
 def benford_audit(

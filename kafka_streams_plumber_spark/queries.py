@@ -8811,65 +8811,88 @@ def q_balanced_pack(spark, sf_dir):
 @query(
     "q_bootstrap",
     """
-    WITH reps AS (
-      SELECT event_type,
-             CAST(round(value * 1000) AS BIGINT) AS xq,
-             event_id, r
-      FROM events, (SELECT unnest(range(0, 32)) AS r)
+    WITH base AS (
+      SELECT event_type, CAST(event_id AS BIGINT) AS k,
+             CAST(round(value * 1000000) AS BIGINT) AS v
+      FROM events
+      WHERE value IS NOT NULL AND event_id IS NOT NULL
     ),
-    u AS (
-      SELECT event_type, xq, r,
-             ('0x' || substr(md5(CAST(event_id AS VARCHAR) || '|'
-                                 || CAST(r AS VARCHAR) || '|11'),
-                             1, 8))::BIGINT % 1000000 AS uu
-      FROM reps
+    rep AS (
+      SELECT event_type, v, t.r,
+             ((k * 32 + t.r) % 2147483648) * 2654435761 % 2147483648 AS h
+      FROM base CROSS JOIN range(0, 32) t(r)
     ),
-    ww AS (
-      SELECT event_type, xq, r,
-             CASE WHEN uu < 367879 THEN 0 WHEN uu < 735759 THEN 1
-                  WHEN uu < 919699 THEN 2 WHEN uu < 981012 THEN 3
-                  WHEN uu < 996340 THEN 4 ELSE 5 END AS w
-      FROM u
+    wts AS (
+      SELECT event_type, r, v,
+             CASE WHEN u < 0.36787944117144233 THEN 0
+                  WHEN u < 0.7357588823428847 THEN 1
+                  WHEN u < 0.9196986029286058 THEN 2
+                  WHEN u < 0.9810118431238463 THEN 3
+                  WHEN u < 0.9963401531726563 THEN 4
+                  WHEN u < 0.9994058151824183 THEN 5
+                  WHEN u < 0.999916758850712 THEN 6
+                  WHEN u < 0.9999897508033253 THEN 7
+                  ELSE 8 END AS w
+      FROM (SELECT event_type, r, v,
+                   (CAST(h AS DOUBLE) + 1.0) / 2147483648.0 AS u
+            FROM rep)
     ),
-    per AS (
+    per_rep AS (
       SELECT event_type, r,
-             CAST(sum(w * xq) AS BIGINT) AS ws,
-             CAST(sum(w) AS BIGINT) AS wn,
-             CAST(sum(xq) AS BIGINT) AS s,
-             count(*) AS n
-      FROM ww GROUP BY event_type, r
+             CAST(sum(CAST(w AS HUGEINT) * CAST(v AS HUGEINT))
+                  AS HUGEINT) AS sv,
+             CAST(sum(w) AS HUGEINT) AS sw
+      FROM wts GROUP BY event_type, r
+    ),
+    means AS (
+      SELECT event_type,
+             CAST(round(CAST(sv AS DOUBLE) / CAST(sw AS DOUBLE)
+                        / 1000000 * 1000000000) AS BIGINT) AS ms
+      FROM per_rep WHERE sw > 0
+    ),
+    point AS (
+      SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
+             CAST(sum(CAST(v AS HUGEINT)) AS DOUBLE) / count(*)
+               / 1000000 AS pm
+      FROM base GROUP BY event_type
+    ),
+    boot AS (
+      SELECT event_type, CAST(count(*) AS BIGINT) AS n_replicas,
+             CAST(sum(CAST(ms AS HUGEINT)) AS HUGEINT) AS t,
+             CAST(sum(CAST(ms AS HUGEINT) * CAST(ms AS HUGEINT))
+                  AS HUGEINT) AS q,
+             quantile_cont(ms, 0.025000000000000022) AS lo,
+             quantile_cont(ms, 0.975) AS hi
+      FROM means GROUP BY event_type
     )
-    SELECT event_type,
-           round(CAST(max(s) AS DOUBLE) / 1000 / max(n), 6) AS mean,
-           round(quantile_cont(CAST(ws AS DOUBLE) / 1000 / wn, 0.025), 6)
-             AS lo,
-           round(quantile_cont(CAST(ws AS DOUBLE) / 1000 / wn, 0.975), 6)
-             AS hi,
-           CAST(count(*) AS BIGINT) AS n_replicates
-    FROM per GROUP BY event_type
+    SELECT p.event_type, n_rows, n_replicas, round(pm, 6) AS point_mean,
+           round(CAST(t AS DOUBLE) / n_replicas / 1000000000, 6)
+             AS boot_mean,
+           round(sqrt(CAST(n_replicas * q - t * t AS DOUBLE)
+                      / (CAST(n_replicas AS DOUBLE)
+                         * CAST(n_replicas - 1 AS DOUBLE)))
+                 / 1000000000, 6) AS boot_se,
+           round(lo / 1000000000, 6) AS ci_lo,
+           round(hi / 1000000000, 6) AS ci_hi
+    FROM point p LEFT JOIN boot b
+      ON p.event_type IS NOT DISTINCT FROM b.event_type
     """,
 )
 def q_bootstrap(spark, sf_dir):
     """Poisson-bootstrap confidence interval for per-type mean event
-    value (operators/stats.py:bootstrap_ci): every row gets an
-    independent deterministic Poisson(1) weight per replicate — the
-    distributed bootstrap (row-level resampling is impossible at
-    100 TB; Poissonization converges to the same sampling
-    distribution). Weights replay via md5(id|r|seed) through integer
-    inverse-CDF thresholds; replicate means from scaled-long sums; the
-    CI is a quantile over the O(groups x 32) mean frame."""
-    from kafka_streams_plumber_spark.operators.stats import bootstrap_ci
+    value (operators/sampling.py:poisson_bootstrap, grouped by
+    event_type, B=32): every row gets an independent deterministic
+    Poisson(1) weight per replicate — the distributed bootstrap
+    (row-level resampling is impossible at 100 TB; Poissonization
+    converges to the same sampling distribution). The grouped twin of
+    q_bootstrap_ci: Knuth-hash weights, exact integer replica sums,
+    integer-moment SE and exact percentile CI per group, over the
+    O(groups x 32) mean frame — replayed bit-for-bit in SQL."""
+    from kafka_streams_plumber_spark.operators.sampling import poisson_bootstrap
 
     e = load_tables(spark, sf_dir)["events"]
-    return bootstrap_ci(
-        e,
-        "event_type",
-        "value",
-        replicates=32,
-        id_col="event_id",
-        seed=11,
-        value_scale=1000,
-        alpha=0.05,
+    return poisson_bootstrap(
+        e, "event_id", "value", group_cols="event_type", b=32
     )
 
 

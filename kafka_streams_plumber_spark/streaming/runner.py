@@ -54,13 +54,12 @@ class PlumberJob:
     fixtures: list[tuple[Any, Any]] = field(default_factory=list)
     expectations: list[tuple[Any, Any]] = field(default_factory=list)
     kafka_options: dict[str, str] = field(default_factory=dict)
-    registry: Any = None  # SchemaRegistryClient for plain `avro` types
-    #: when a registry is attached AND an input schema is file-pinned
-    #: (avro=reader.avsc), verify the reader can resolve the subject's
-    #: latest registered WRITER schema before starting — the schema-
-    #: evolution half of the refuse-to-start gate. Subjects the registry
-    #: has never seen are skipped (brand-new topic, nothing written).
-    schema_preflight: bool = True
+    #: SchemaRegistryClient for plain `avro` types. When attached, every
+    #: file-pinned input schema (avro=reader.avsc) must resolve the
+    #: subject's latest registered WRITER schema before the job starts —
+    #: the schema-evolution half of the refuse-to-start gate. Subjects
+    #: the registry has never seen are skipped (brand-new topic).
+    registry: Any = None
     #: Pluggable transport (None = Kafka): ``source_factory(spark)``
     #: must return a STREAMING DataFrame with the same typed
     #: (key, value) columns kafka_source decodes to;
@@ -99,14 +98,14 @@ class PlumberJob:
             out = conform(out, self.output_key.model, column="key")
         return out
 
-    def _schema_preflight(self) -> None:
+    def _check_registered_writers(self) -> None:
         """Schema-evolution refuse-to-start: a file-pinned reader schema
         must resolve the subject's latest registered writer schema
         (sources/avsc.py:schema_incompatibilities) — catching a consumer
         deploy against an incompatibly-evolved topic BEFORE it streams
         (otherwise the mismatch only surfaces as runtime decode drops).
         """
-        if not self.schema_preflight or self.registry is None:
+        if self.registry is None:
             return
         from kafka_streams_plumber_spark.sources.registry import (
             SchemaNotFound,
@@ -140,8 +139,8 @@ class PlumberJob:
         """Golden verification pre-pass (Plumber.scala:41-50): run the
         exact production transform (pipeline + conform) over fixtures;
         raise and refuse to stream on mismatch. Extended with the
-        schema-evolution check (see _schema_preflight)."""
-        self._schema_preflight()
+        schema-evolution check (see _check_registered_writers)."""
+        self._check_registered_writers()
         if not self.expectations:
             return
         verify(

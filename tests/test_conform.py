@@ -74,9 +74,6 @@ def test_non_string_into_string_is_hard_error(spark):
     df = one(spark, Row(x=3), "struct<x:int>")
     with pytest.raises(ConformError, match="STRING"):
         conform(df, "struct<x:string>")
-    # permissive mode casts instead
-    out = conform(df, "struct<x:string>", strict_strings=False).collect()[0].value
-    assert out.x == "3"
 
 
 def test_nested_record_and_arrays(spark):
@@ -168,7 +165,7 @@ def test_unresolvable_union_raises(spark):
 
 def test_scalar_column_conform_non_struct(spark):
     df = spark.createDataFrame([("42",), ("x",)], "value string")
-    out = conform(df, T.LongType(), strict_strings=False).collect()
+    out = conform(df, T.LongType()).collect()
     assert [r.value for r in out] == [42, None]
 
 

@@ -1450,13 +1450,16 @@ def test_durbin_watson_matches_brute_force(spark, vals):
         unique_by=lambda t: t[0],
     ),
     st.sampled_from([1, 3, 16]),
+    st.integers(min_value=1, max_value=3),
 )
-def test_poisson_bootstrap_matches_reference_any_salt(spark, rows, cells):
+def test_poisson_bootstrap_matches_reference_any_salt(
+    spark, rows, cells, n_groups
+):
     """The r9 salted two-level sum equals the pure-Python reference
     (Knuth hash -> Poisson(1) CDF walk -> exact integer replica sums
-    -> scaled-long means) bit-for-bit for ARBITRARY ids/values and
-    ANY salt_cells — the property behind the 'same oracle hash'
-    claim."""
+    -> scaled-long means) bit-for-bit for ARBITRARY ids/values, ANY
+    salt_cells and 1-3 groups (``rid % n_groups``) — the property
+    behind the 'same oracle hash' claim."""
     import math
 
     from kafka_streams_plumber_spark.operators.sampling import (
@@ -1465,10 +1468,15 @@ def test_poisson_bootstrap_matches_reference_any_salt(spark, rows, cells):
     )
 
     b, scale, ms_scale = 5, 10**6, 10**9
-    df = spark.createDataFrame(rows, "rid long, v double")
-    got = poisson_bootstrap(
-        df, "rid", "v", b=b, ci=0.9, salt_cells=cells
-    ).collect()[0]
+    df = spark.createDataFrame(
+        [(k % n_groups, k, v) for k, v in rows], "g long, rid long, v double"
+    )
+    got = {
+        r["g"]: r
+        for r in poisson_bootstrap(
+            df, "rid", "v", group_cols="g", b=b, ci=0.9, salt_cells=cells
+        ).collect()
+    }
 
     def weight(k, r):
         h = ((k * b + r) % 2**31) * 2654435761 % 2**31
@@ -1496,19 +1504,25 @@ def test_poisson_bootstrap_matches_reference_any_salt(spark, rows, cells):
         )
 
     vs = {k: r0(v * scale) for k, v in rows}
-    ms = []
-    for r in range(b):
-        sv = sum(weight(k, r) * vs[k] for k, _ in rows)
-        sw = sum(weight(k, r) for k, _ in rows)
-        if sw > 0:
-            ms.append(r0(sv / sw / scale * ms_scale))
-    assert got["n_rows"] == len(rows)
-    assert got["n_replicas"] == len(ms)
-    assert got["boot_mean"] == r6(sum(ms) / len(ms) / ms_scale)
-    if len(ms) >= 2:
-        n, t, q = len(ms), sum(ms), sum(m * m for m in ms)
-        se = math.sqrt((n * q - t * t) / (n * (n - 1))) / ms_scale
-        assert got["boot_se"] == r6(se)
+    assert set(got) == {k % n_groups for k, _ in rows}
+    for g, row in got.items():
+        ks = [k for k, _ in rows if k % n_groups == g]
+        ms = []
+        for r in range(b):
+            sv = sum(weight(k, r) * vs[k] for k in ks)
+            sw = sum(weight(k, r) for k in ks)
+            if sw > 0:
+                ms.append(r0(sv / sw / scale * ms_scale))
+        assert row["n_rows"] == len(ks)
+        if not ms:  # every replica drew weight 0: no bootstrap columns
+            assert row["n_replicas"] is None and row["boot_mean"] is None
+            continue
+        assert row["n_replicas"] == len(ms)
+        assert row["boot_mean"] == r6(sum(ms) / len(ms) / ms_scale)
+        if len(ms) >= 2:
+            n, t, q = len(ms), sum(ms), sum(m * m for m in ms)
+            se = math.sqrt((n * q - t * t) / (n * (n - 1))) / ms_scale
+            assert row["boot_se"] == r6(se)
 
 
 @settings(max_examples=8, deadline=None)

@@ -453,22 +453,14 @@ def test_sample_to_token_budget_semantics(spark):
     assert sorted(r["doc_id"] for r in again) == sorted(r["doc_id"] for r in out)
 
 
-def test_poisson_bootstrap_matches_pure_python_reference(spark):
-    """The whole pipeline (Knuth hash -> Poisson(1) inverse CDF ->
-    exact replica sums -> scaled-long means -> integer-moment SE ->
-    interpolated percentile CI) equals an independent pure-Python
-    recomputation, bit for bit at the 6 dp contract."""
+def _bootstrap_reference(rows, b, ci, scale=10**6, ms_scale=10**9):
+    """Pure-Python poisson_bootstrap over ``(id, value)`` rows: the
+    Knuth hash -> Poisson(1) inverse CDF -> exact replica sums ->
+    scaled-long means -> integer-moment SE -> interpolated percentile
+    CI, as the kernel's output columns."""
     import math
 
-    from kafka_streams_plumber_spark.operators.sampling import (
-        POISSON1_CDF,
-        poisson_bootstrap,
-    )
-
-    rows = [(i, float(10 + 3 * (i % 5))) for i in range(1, 41)]
-    df = spark.createDataFrame(rows, "rid long, v double")
-    b, scale, ms_scale = 7, 10**6, 10**9
-    got = poisson_bootstrap(df, "rid", "v", b=b, ci=0.95).collect()[0]
+    from kafka_streams_plumber_spark.operators.sampling import POISSON1_CDF
 
     def weight(k, r):
         h = ((k * b + r) % 2**31) * 2654435761 % 2**31
@@ -478,6 +470,12 @@ def test_poisson_bootstrap_matches_pure_python_reference(spark):
                 return kk
         return len(POISSON1_CDF)
 
+    def pctl(xs, p):
+        xs = sorted(xs)
+        idx = p * (len(xs) - 1)
+        lo, w = int(math.floor(idx)), idx - math.floor(idx)
+        return xs[lo] + w * (xs[min(lo + 1, len(xs) - 1)] - xs[lo])
+
     vs = {k: round(v * scale) for k, v in rows}
     ms = []
     for r in range(b):
@@ -486,24 +484,33 @@ def test_poisson_bootstrap_matches_pure_python_reference(spark):
         if sw > 0:
             ms.append(round(sv / sw / scale * ms_scale))
     n, t, q = len(ms), sum(ms), sum(m * m for m in ms)
-    se = math.sqrt((n * q - t * t) / (n * (n - 1))) / ms_scale
+    alpha = (1.0 - ci) / 2.0
+    return {
+        "n_rows": len(rows),
+        "n_replicas": n or None,
+        "point_mean": round(sum(vs.values()) / len(rows) / scale, 6),
+        "boot_mean": round(t / n / ms_scale, 6) if n else None,
+        "boot_se": (
+            round(math.sqrt((n * q - t * t) / (n * (n - 1))) / ms_scale, 6)
+            if n > 1
+            else None
+        ),
+        "ci_lo": round(pctl(ms, alpha) / ms_scale, 6) if n else None,
+        "ci_hi": round(pctl(ms, 1.0 - alpha) / ms_scale, 6) if n else None,
+    }
 
-    def pctl(xs, p):
-        xs = sorted(xs)
-        idx = p * (len(xs) - 1)
-        lo, w = int(math.floor(idx)), idx - math.floor(idx)
-        return xs[lo] + w * (xs[min(lo + 1, len(xs) - 1)] - xs[lo])
 
-    assert got["n_rows"] == 40 and got["n_replicas"] == n
-    assert got["point_mean"] == round(sum(vs.values()) / 40 / scale, 6)
-    assert got["boot_mean"] == round(t / n / ms_scale, 6)
-    assert got["boot_se"] == round(se, 6)
-    assert got["ci_lo"] == round(
-        pctl(ms, (1.0 - 0.95) / 2.0) / ms_scale, 6
-    )
-    assert got["ci_hi"] == round(
-        pctl(ms, 1.0 - (1.0 - 0.95) / 2.0) / ms_scale, 6
-    )
+def test_poisson_bootstrap_matches_pure_python_reference(spark):
+    """The whole pipeline equals an independent pure-Python
+    recomputation, bit for bit at the 6 dp contract — over the whole
+    frame, and per group (a NULL key and a single-row group included)."""
+    from kafka_streams_plumber_spark.operators.sampling import poisson_bootstrap
+
+    rows = [(i, float(10 + 3 * (i % 5))) for i in range(1, 41)]
+    df = spark.createDataFrame(rows, "rid long, v double")
+    b = 7
+    got = poisson_bootstrap(df, "rid", "v", b=b, ci=0.95).collect()[0]
+    assert got.asDict() == _bootstrap_reference(rows, b, 0.95)
     # the interval brackets the point estimate and SE is positive
     assert got["ci_lo"] <= got["point_mean"] <= got["ci_hi"]
     assert got["boot_se"] > 0.0
@@ -511,6 +518,36 @@ def test_poisson_bootstrap_matches_pure_python_reference(spark):
     # determinism: a second run is identical
     again = poisson_bootstrap(df, "rid", "v", b=b, ci=0.95).collect()[0]
     assert again == got
+
+    # grouped: three groups, one keyed NULL and one holding a single row
+    groups = {"a": rows[:25], None: rows[25:], "c": [(41, 7.25)]}
+    gdf = spark.createDataFrame(
+        [(g, k, v) for g, rs in groups.items() for k, v in rs],
+        "g string, rid long, v double",
+    )
+    out = poisson_bootstrap(gdf, "rid", "v", group_cols="g", b=b, ci=0.9)
+    assert out.columns[:2] == ["g", "n_rows"]
+    by_group = {r["g"]: r.asDict() for r in out.collect()}
+    assert by_group == {
+        g: {"g": g, **_bootstrap_reference(rs, b, 0.9)}
+        for g, rs in groups.items()
+    }
+
+
+def test_poisson_bootstrap_ungrouped_equals_one_constant_group(spark):
+    """``group_cols=()`` is the grouped kernel over one group: the same
+    row, column for column, as grouping by a constant column."""
+    from kafka_streams_plumber_spark.operators.sampling import poisson_bootstrap
+
+    rows = [(i, float((i * 37) % 113) - 31.5) for i in range(1, 101)]
+    df = spark.createDataFrame(rows, "rid long, v double")
+    flat = poisson_bootstrap(df, "rid", "v", b=11).collect()
+    grouped = poisson_bootstrap(
+        df.withColumn("g", F.lit("all")), "rid", "v", group_cols=["g"], b=11
+    ).collect()
+    assert len(flat) == len(grouped) == 1
+    assert {"g": "all", **flat[0].asDict()} == grouped[0].asDict()
+    assert list(grouped[0].asDict())[1:] == list(flat[0].asDict())
 
 
 def test_poisson_bootstrap_salt_invariance(spark):

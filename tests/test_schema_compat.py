@@ -167,10 +167,3 @@ def test_job_skips_unknown_subject_and_no_registry(spark):
     ) is not None
     # no registry attached: explicit-schema jobs keep working
     assert _job(spark, rec(f("a", "int")), None).run(dry_run=True) is not None
-
-
-def test_job_preflight_can_be_disabled(spark):
-    reg = FakeSchemaRegistry()
-    reg.register("orders-value", json.dumps(rec(f("a", "long"))))
-    job = _job(spark, rec(f("a", "int")), reg, schema_preflight=False)
-    assert job.run(dry_run=True) is not None

@@ -2358,7 +2358,6 @@ def test_scale_parameter_convention_is_uniform():
         "similarity.embedding_drift.value_scale": "raw-multiplier",
         "similarity.embedding_diversity.value_scale": "raw-multiplier",
         "stats.standardize.value_scale": "raw-multiplier",
-        "stats.bootstrap_ci.value_scale": "raw-multiplier",
         "stats.correlation_matrix.value_scale": "raw-multiplier",
         "stats.chi2_independence.value_scale": "raw-multiplier",
         "stats.gini_concentration.value_scale": "raw-multiplier",

@@ -303,7 +303,7 @@ def test_lang_mix_flags_code_switching(spark):
 
 
 # ---------------------------------------------------------------------
-# balanced_bins / bootstrap_ci
+# balanced_bins / poisson_bootstrap
 # ---------------------------------------------------------------------
 
 
@@ -337,19 +337,23 @@ def test_balanced_bins_serpentine_order(spark):
 
 
 def test_bootstrap_ci_brackets_mean_and_is_deterministic(spark):
-    from kafka_streams_plumber_spark.operators.stats import bootstrap_ci
+    from kafka_streams_plumber_spark.operators.sampling import poisson_bootstrap
 
     # 2100 rows = 100 full cycles of 0..20 -> exact mean 10.0
     rows = [(i, "g", float(10 + (i % 21) - 10)) for i in range(2100)]
     df = spark.createDataFrame(rows, "id long, g string, v double")
-    a = bootstrap_ci(df, "g", "v", replicates=32, id_col="id").collect()[0]
-    b = bootstrap_ci(df, "g", "v", replicates=32, id_col="id").collect()[0]
-    assert (a["lo"], a["hi"]) == (b["lo"], b["hi"])  # replayable
-    assert a["n_replicates"] == 32
-    assert a["lo"] <= a["mean"] <= a["hi"]
+    a, b = (
+        poisson_bootstrap(df, "id", "v", group_cols="g", b=32).collect()
+        for _ in range(2)
+    )
+    assert a == b  # replayable
+    (a,) = a
+    assert a["g"] == "g" and a["n_replicas"] == 32
+    assert a["ci_lo"] <= a["point_mean"] <= a["ci_hi"]
+    assert a["ci_lo"] <= a["boot_mean"] <= a["ci_hi"]
     # CI width shrinks as ~1/sqrt(n): 2000 symmetric draws around 10
-    assert a["hi"] - a["lo"] < 1.0
-    assert abs(a["mean"] - 10.0) < 0.001
+    assert a["ci_hi"] - a["ci_lo"] < 1.0
+    assert a["point_mean"] == 10.0
 
 
 # ---------------------------------------------------------------------

@@ -108,7 +108,7 @@ AUDITED = {
     "q_ppl_buckets": "LM kernel + per-source tercile broadcast back; no window funnel",
     "q_lang_mix": "sentence explode + TWO map-combinable doc-keyed aggregates",
     "q_balanced_pack": "parallel length-desc rank (range exchange + O(P) offsets) + serpentine projection",
-    "q_bootstrap": "explode xB -> ONE (group,replicate) map-combinable agg -> O(groups x B) quantile frame",
+    "q_bootstrap": "grouped poisson_bootstrap: xB explode salted map-side to <= groups x B x cells rows; stats on the O(groups x B) frame",
     "q_survival": "one user-grain min/max agg; all KM arithmetic on the O(tenure-days) frame",
     "q_neyman": "one moment agg -> O(strata) allocation broadcast back; fact scanned once",
     "q_user_growth": "user-grain min agg -> per-day rollup -> running sum on the O(days) frame",
