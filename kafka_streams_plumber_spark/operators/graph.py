@@ -443,22 +443,24 @@ def label_propagation_oracle_sql(
     recursive CTE member, so unrolling is the portable encoding).
 
     ``edges_sql`` must select columns (src, dst, w) with integer w.
+    Every CTE is ``MATERIALIZED``: each round reads ``c{i}`` twice, and
+    inlined the plan would double per round.
     """
     parts = [
-        f"WITH e AS ({edges_sql}),",
-        "adj AS (SELECT src AS s, dst AS d, w FROM e"
+        f"WITH e AS MATERIALIZED ({edges_sql}),",
+        "adj AS MATERIALIZED (SELECT src AS s, dst AS d, w FROM e"
         " UNION ALL SELECT dst, src, w FROM e),",
-        "l0 AS (SELECT node, node AS label FROM"
+        "l0 AS MATERIALIZED (SELECT node, node AS label FROM"
         " (SELECT DISTINCT s AS node FROM adj)),",
     ]
     for i in range(int(iterations)):
         parts.append(
-            f"c{i} AS (SELECT adj.s, l.label,"
+            f"c{i} AS MATERIALIZED (SELECT adj.s, l.label,"
             f" CAST(sum(adj.w) AS BIGINT) AS c"
             f" FROM adj JOIN l{i} l ON l.node = adj.d GROUP BY 1, 2),"
         )
         parts.append(
-            f"l{i + 1} AS (SELECT s AS node, min(label) AS label FROM c{i}"
+            f"l{i + 1} AS MATERIALIZED (SELECT s AS node, min(label) AS label FROM c{i}"
             f" JOIN (SELECT s, max(c) AS mc FROM c{i} GROUP BY s) m"
             f" USING (s) WHERE c = mc GROUP BY s),"
         )
@@ -559,19 +561,21 @@ def kcore_oracle_sql(edges_sql: str, *, k: int, rounds: int = 10) -> str:
     """DuckDB oracle for :func:`kcore`: the synchronous peeling rounds
     unrolled (rounds past the fixpoint are no-ops, so a fixed unroll
     matches the engine's early exit). ``edges_sql`` selects (src, dst).
-    """
+    Every CTE is ``MATERIALIZED``: each round reads ``k{i}`` twice and
+    an inlined CTE re-plans its whole history per reference, so the
+    unmaterialized plan grows ~3x per round."""
     parts = [
-        f"WITH e AS ({edges_sql}),",
-        "u0 AS (SELECT src AS s, dst AS d FROM e"
+        f"WITH e AS MATERIALIZED ({edges_sql}),",
+        "u0 AS MATERIALIZED (SELECT src AS s, dst AS d FROM e"
         " UNION ALL SELECT dst, src FROM e),",
     ]
     for i in range(int(rounds)):
         parts.append(
-            f"k{i} AS (SELECT s FROM u{i} GROUP BY s"
+            f"k{i} AS MATERIALIZED (SELECT s FROM u{i} GROUP BY s"
             f" HAVING count(*) >= {int(k)}),"
         )
         parts.append(
-            f"u{i + 1} AS (SELECT u.s, u.d FROM u{i} u"
+            f"u{i + 1} AS MATERIALIZED (SELECT u.s, u.d FROM u{i} u"
             f" JOIN k{i} a ON a.s = u.s"
             f" JOIN k{i} b ON b.s = u.d),"
         )

@@ -1741,6 +1741,72 @@ def spearman_corr(
     )
 
 
+def _pooled_midrank_sums(rows: DataFrame) -> DataFrame:
+    """Per-group sums of POOLED doubled midranks over ``(_g, _v)`` rows
+    (NULL-free): one row per group ``(_g, _ng, _Dg, _td2, _t3)`` with
+    ``_ng`` the group's row count, ``_Dg`` its doubled midrank sum, and
+    ``_td2``/``_t3`` its shares of the tie sums ``sum_v t*d^2`` and
+    ``sum_v t^3`` (sum them over the groups for the totals), all exact
+    integers on decimal(38,0). The one ranking kernel of
+    :func:`mann_whitney`, :func:`kruskal_wallis` and :func:`dunn_test`.
+
+    One sorted pass: range-partition the rows on ``_v`` (equal values
+    always land in one partition), collapse to ``(partition, _g, _v)``
+    counts ``c`` with no further exchange, and run ONE window per
+    partition ordered by ``_v``: ``cum`` = partition-local ``sum c``
+    over the RANGE frame up to ``v``, ``t`` = ``sum c`` over ``v' = v``
+    (the GLOBAL tie count), ``e = 2*cum - t + 1``. Per (partition,
+    group): ``n = sum c``, ``A = sum c*e``, ``S2 = sum c*e^2``,
+    ``T2 = sum c*t^2``. With ``off`` = the rows in earlier partitions
+    (a window over the P x k summary) the global doubled midrank is
+    ``d = e + 2*off``, so ``D = sum A + 2*off*n``,
+    ``sum t*d^2 = sum S2 + 4*off*A + 4*off^2*n`` and
+    ``sum t^3 = sum T2`` fold algebraically — nothing is joined back
+    onto the rows, and the answer does not depend on where the range
+    boundaries fall (AQE coalescing, shuffle partitions, a resampled
+    recomputation all give the same integers).
+    """
+    dec = lambda c: c.cast("decimal(19,0)")  # noqa: E731
+    cells = (
+        rows.repartitionByRange("_v")
+        .groupBy(F.spark_partition_id().alias("_pid"), "_g", "_v")
+        .agg(F.count(F.lit(1)).alias("_c"))
+    )
+    w = Window.partitionBy("_pid").orderBy("_v")
+    cum = F.sum("_c").over(w.rangeBetween(Window.unboundedPreceding, 0))
+    t = F.sum("_c").over(w.rangeBetween(0, 0))
+    ranked = cells.select(
+        "_pid",
+        "_g",
+        dec(F.col("_c")).alias("_c"),
+        dec(F.lit(2) * cum - t + F.lit(1)).alias("_e"),
+        dec(t).alias("_t"),
+    )
+    c, e = F.col("_c"), F.col("_e")
+    part = ranked.groupBy("_pid", "_g").agg(
+        F.sum("_c").alias("_n"),
+        F.sum(c * e).alias("_a"),
+        F.sum(c * e * e).alias("_s2"),
+        F.sum(c * F.col("_t") * F.col("_t")).alias("_t2"),
+    )
+    # O(P*k) rows: the rows of every group in earlier partitions
+    woff = Window.orderBy("_pid").rangeBetween(Window.unboundedPreceding, -1)
+    off = F.coalesce(F.sum("_n").over(woff), F.lit(0).cast("decimal(38,0)"))
+    folded = part.select("*", off.alias("_off"))
+    n, a, o = F.col("_n"), F.col("_a"), F.col("_off")
+    return folded.groupBy("_g").agg(
+        *[
+            F.sum(x).cast("decimal(38,0)").alias(name)
+            for x, name in [
+                (n, "_ng"),
+                (a + 2 * o * n, "_Dg"),
+                (F.col("_s2") + 4 * o * a + 4 * o * o * n, "_td2"),
+                (F.col("_t2"), "_t3"),
+            ]
+        ]
+    )
+
+
 def mann_whitney(
     df: DataFrame,
     value_col: str,
@@ -1763,52 +1829,32 @@ def mann_whitney(
     u_a / (n_a*n_b)); z is signed (positive = a tends larger). z is
     NULL when either group is empty or ALL values tie (zero variance).
 
-    Exactness: the AUC device — per distinct value the DOUBLED rank
-    sum contribution is ``c_a * (first + last)`` from cumulative
-    counts, so U and the tie term ``sum(t^3 - t)`` are exact integers
-    riding decimal(38,0), and z is one fixed-shape double expression —
-    replayed bit-for-bit in SQL. ``round_values`` quantizes first
-    (same contract as auc's round_scores) to bound the distinct grain.
+    Exactness: the AUC device — the pooled doubled midrank
+    ``2*cum - t + 1`` of every value is an exact integer, so group a's
+    doubled rank sum, U and the tie term ``sum(t^3 - t)`` are exact
+    integers riding decimal(38,0), and z is one fixed-shape double
+    expression — replayed bit-for-bit in SQL. ``round_values``
+    quantizes first (same contract as auc's round_scores) to bound the
+    distinct grain.
 
-    Scale design: one map-combinable collapse to the distinct-value
-    grain, cumulative counts via ordering.running_total (range
-    exchange + O(P) offsets — NOT auc's O(distinct) single-task
-    window), one final aggregate.
+    Scale design: :func:`_pooled_midrank_sums` over the two groups
+    (one range exchange, one window per partition, offsets folded on
+    a P x 2 summary — NOT auc's O(distinct) single-task window), one
+    final aggregate over its two rows.
     """
-    from kafka_streams_plumber_spark.operators.ordering import (
-        running_total,
-    )
-
     v = F.col(value_col).cast("double")
     if round_values is not None:
         v = F.round(v, int(round_values))
     base = df.where(
         F.col(group_col).isin(group_a, group_b) & v.isNotNull()
-    ).select(v.alias("_v"), (F.col(group_col) == group_a).alias("_ga"))
+    ).select(v.alias("_v"), (F.col(group_col) == group_a).alias("_g"))
 
-    per = base.groupBy("_v").agg(
-        F.coalesce(F.sum(F.col("_ga").cast("long")), F.lit(0)).alias("_ca"),
-        F.count(F.lit(1)).alias("_t"),
-    )
-    r = running_total(per, ["_v"], "_t", out_col="_cum")
-
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    t19 = F.col("_t").cast("decimal(19,0)")
-    m = r.agg(
-        F.coalesce(F.sum("_ca"), F.lit(0)).cast("decimal(38,0)").alias("_na"),
-        F.coalesce(F.sum(F.col("_t") - F.col("_ca")), F.lit(0))
-        .cast("decimal(38,0)")
-        .alias("_nb"),
-        F.coalesce(
-            F.sum(
-                dec(F.col("_ca"))
-                * dec((F.col("_cum") - F.col("_t") + 1) + F.col("_cum"))
-            ),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("_r2"),
-        F.coalesce(
-            F.sum(t19 * t19 * t19 - t19), F.lit(0).cast("decimal(38,0)")
-        ).alias("_st"),
+    zero = F.lit(0).cast("decimal(38,0)")
+    m = _pooled_midrank_sums(base).agg(
+        F.coalesce(F.sum(F.when(F.col("_g"), F.col("_ng"))), zero).alias("_na"),
+        F.coalesce(F.sum(F.when(~F.col("_g"), F.col("_ng"))), zero).alias("_nb"),
+        F.coalesce(F.sum(F.when(F.col("_g"), F.col("_Dg"))), zero).alias("_r2"),
+        F.coalesce(F.sum(F.col("_t3") - F.col("_ng")), zero).alias("_st"),
     )
     na, nb = F.col("_na"), F.col("_nb")
     u2 = F.col("_r2") - na * (na + 1)
@@ -2237,16 +2283,12 @@ def kruskal_wallis(
     output resolution even on toy panels. All other terms stay exact
     integers.
 
-    Scale design: one map-combinable collapse to the distinct-value
-    grain, cumulative counts via ordering.running_total (range
-    exchange + O(P) offsets), one k-row group aggregate with the
-    1-row totals broadcast in, one final row. ``round_values``
-    quantizes first (mann_whitney's contract) to bound the grain.
+    Scale design: :func:`_pooled_midrank_sums` (one range exchange,
+    one window per partition, offsets folded on a P x k summary), the
+    totals from a whole-frame window over its k rows, one final
+    aggregate. ``round_values`` quantizes first (mann_whitney's
+    contract) to bound the grain.
     """
-    from kafka_streams_plumber_spark.operators.ordering import (
-        running_total,
-    )
-
     v = F.col(value_col).cast("double")
     if round_values is not None:
         v = F.round(v, int(round_values))
@@ -2254,48 +2296,12 @@ def kruskal_wallis(
         F.col(group_col).isNotNull() & v.isNotNull()
     ).select(F.col(group_col).alias("_g"), v.alias("_v"))
 
-    from kafka_streams_plumber_spark.plans.scale import truncate_lineage
-
-    # three branches (value totals, group sums, 1-row totals) scan
-    # the materialized distinct grain instead of re-collapsing the
-    # raw input each time
-    per_gv = truncate_lineage(
-        base.groupBy("_g", "_v").agg(F.count(F.lit(1)).alias("_c"))
-    )
-    per_v = per_gv.groupBy("_v").agg(F.sum("_c").alias("_t"))
-    r = running_total(per_v, ["_v"], "_t", out_col="_cum")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    cells = r.select(
-        "_v",
-        "_t",
-        (F.lit(2) * F.col("_cum") - F.col("_t") + F.lit(1)).alias("_d"),
-    )
-    tot = cells.agg(
-        F.coalesce(
-            F.sum("_t").cast("decimal(38,0)"),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("_N"),
-        F.coalesce(
-            F.sum(
-                dec(F.col("_t").cast("decimal(19,0)"))
-                * dec(F.col("_d").cast("decimal(19,0)"))
-                * F.col("_d").cast("decimal(19,0)")
-            ),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("_td2"),
-    )
-    per_g = (
-        per_gv.join(cells.select("_v", "_d"), "_v")
-        .groupBy("_g")
-        .agg(
-            F.sum("_c").cast("decimal(38,0)").alias("_ng"),
-            F.sum(
-                dec(F.col("_c").cast("decimal(19,0)"))
-                * F.col("_d").cast("decimal(19,0)")
-            )
-            .cast("decimal(38,0)")
-            .alias("_Dg"),
-        )
+    wall = Window.partitionBy()  # k rows: a single-task total is fine
+    per_g = _pooled_midrank_sums(base).select(
+        "_ng",
+        "_Dg",
+        F.sum("_ng").over(wall).alias("_N"),
+        F.sum("_td2").over(wall).alias("_td2"),
     )
     # E_g^2/n_g frozen to a 1e-6 scaled integer: (E/n)*E*1e6 in IEEE
     # double is the same bits in every engine; round() then makes the
@@ -2308,13 +2314,13 @@ def kruskal_wallis(
         * eg.cast("double")
         * F.lit(1000000.0)
     ).cast("decimal(38,0)")
-    grp = per_g.crossJoin(F.broadcast(tot)).agg(
+    zero = F.lit(0).cast("decimal(38,0)")
+    out = per_g.agg(
         F.count(F.lit(1)).alias("_k"),
-        F.coalesce(F.sum(term), F.lit(0).cast("decimal(38,0)")).alias(
-            "_sa"
-        ),
+        F.coalesce(F.sum(term), zero).alias("_sa"),
+        F.coalesce(F.max("_N"), zero).alias("_N"),
+        F.max("_td2").alias("_td2"),
     )
-    out = grp.crossJoin(F.broadcast(tot))
     nN = F.col("_N")
     den = F.col("_td2") - nN * (nN + 1) * (nN + 1)
     h = F.when(
@@ -3488,8 +3494,9 @@ def mood_median(
     replays bit-for-bit.
 
     Scale design: one percentile pass (range exchange), one broadcast
-    of the 1-row median, one map-combinable group aggregate, one
-    k-row fold. No windows, no Python.
+    of the 1-row median, one map-combinable group aggregate, the
+    margins from a whole-frame window over its k rows, one final
+    aggregate. No window over the rows, no Python.
     """
     v = F.col(value_col).cast("double")
     base = df.where(
@@ -3512,12 +3519,13 @@ def mood_median(
             F.min("_med").alias("_gm"),
         )
     )
-    tot = per_g.agg(
-        F.coalesce(F.sum("_ab"), F.lit(0)).cast("long").alias("_ta"),
-        F.coalesce(F.sum("_be"), F.lit(0)).cast("long").alias("_tb"),
-        F.count(F.lit(1)).alias("_k"),
+    wall = Window.partitionBy()  # k rows: a single-task total is fine
+    j = per_g.select(
+        "*",
+        F.sum("_ab").over(wall).cast("long").alias("_ta"),
+        F.sum("_be").over(wall).cast("long").alias("_tb"),
+        F.count(F.lit(1)).over(wall).alias("_k"),
     )
-    j = per_g.crossJoin(F.broadcast(tot))
     nn = (F.col("_ta") + F.col("_tb")).cast("double")
     ng = (F.col("_ab") + F.col("_be")).cast("double")
     ea = ng * F.col("_ta").cast("double") / nn
@@ -3585,18 +3593,16 @@ def friedman(
     the tie term are exact integers on decimal(38,0)), one final
     double division. SQL replays bit-for-bit.
 
-    Scale design: within-block cumulative counts ride ONE global
-    range exchange over (block, value) with per-block offsets
-    subtracted (the kendall_w device) — no per-block window, safe for
-    millions of tiny blocks; then two map-combinable aggregates (per
-    treatment, per total). Blocks are bounded at k rows each by
-    construction.
+    Scale design: one map-combinable collapse to (block, treatment)
+    cells, then ONE per-block window ordered by value gives the
+    within-block cumulative count (RANGE frame up to v), the tie count
+    (RANGE frame v' = v) and the block's cell count, which keeps only
+    complete blocks. A per-block window is scale-safe here because a
+    block holds at most one cell per distinct treatment (exactly k
+    after the filter), however many blocks there are. Then one
+    map-combinable aggregate per treatment, the totals from a
+    whole-frame window over its k rows, and one final aggregate.
     """
-    from kafka_streams_plumber_spark.operators.ordering import (
-        running_total,
-    )
-    from kafka_streams_plumber_spark.plans.scale import truncate_lineage
-
     k = int(n_treatments)
     cells = (
         df.where(
@@ -3610,61 +3616,46 @@ def friedman(
         )
         .agg(F.min(F.col(value_col)).alias("_v"))
     )
-    complete = (
-        cells.groupBy("_b")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .where(F.col("_c") == k)
-        .select("_b")
+    wb = Window.partitionBy("_b").orderBy("_v")
+    one = F.lit(1)
+    cum = F.count(one).over(wb.rangeBetween(Window.unboundedPreceding, 0))
+    tv = F.count(one).over(wb.rangeBetween(0, 0))
+    nb = F.count(one).over(
+        wb.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
-    panel = truncate_lineage(cells.join(complete, "_b"))
-    # within-block doubled midranks from ONE global prefix pass
-    per_bv = panel.groupBy("_b", "_v").agg(
-        F.count(F.lit(1)).alias("_tv")
+    ranked = (
+        cells.select(
+            "_t",
+            (F.lit(2) * cum - tv + one).cast("decimal(19,0)").alias("_d"),
+            nb.alias("_nb"),
+        )
+        .where(F.col("_nb") == k)
     )
-    g = running_total(per_bv, ["_b", "_v"], "_tv", out_col="_cum")
-    btot = per_bv.groupBy("_b").agg(F.sum("_tv").alias("_nb"))
-    boff = running_total(btot, ["_b"], "_nb", out_col="_cb")
-    ranked = g.join(
-        boff.select("_b", (F.col("_cb") - F.col("_nb")).alias("_off")),
-        "_b",
-    ).select(
-        "_b",
-        "_v",
-        "_tv",
-        (
-            F.lit(2) * (F.col("_cum") - F.col("_off"))
-            - F.col("_tv")
-            + F.lit(1)
-        ).alias("_d"),
-    )
+    # summed over a block's cells, d^2 is that block's sum t*d^2
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    with_d = panel.join(ranked, ["_b", "_v"])
-    per_t = with_d.groupBy("_t").agg(
+    per_t = ranked.groupBy("_t").agg(
         F.sum("_d").cast("decimal(38,0)").alias("_dj"),
-        F.count(F.lit(1)).alias("_nj"),
+        F.count(one).alias("_nj"),
+        F.sum(dec(F.col("_d")) * F.col("_d")).cast("decimal(38,0)").alias("_a2"),
     )
-    tie = ranked.agg(
-        F.coalesce(
-            F.sum(
-                dec(F.col("_tv").cast("decimal(19,0)") * F.col("_d").cast("decimal(19,0)"))
-                * F.col("_d").cast("decimal(19,0)")
-            ),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("_a2"),
+    wall = Window.partitionBy()  # k rows: a single-task total is fine
+    j = per_t.select(
+        "_dj",
+        # every complete block contributes exactly k cells
+        (F.sum("_nj").over(wall) / F.lit(k)).cast("long").alias("_n"),
+        F.sum("_a2").over(wall).alias("_a2"),
     )
-    nblocks = complete.agg(F.count(F.lit(1)).alias("_n"))
-    j = per_t.crossJoin(F.broadcast(nblocks))
     devterm = (
         F.col("_dj") - F.col("_n").cast("decimal(38,0)") * F.lit(k + 1)
     )
-    num = j.agg(
+    out = j.agg(
         F.coalesce(
             F.sum(dec(devterm.cast("decimal(19,0)")) * devterm.cast("decimal(19,0)")),
             F.lit(0).cast("decimal(38,0)"),
         ).alias("_num"),
         F.min("_n").alias("_n"),
+        F.min("_a2").alias("_a2"),
     )
-    out = num.crossJoin(F.broadcast(tie))
     den = (
         F.col("_a2")
         - F.col("_n").cast("decimal(38,0)") * F.lit(k) * F.lit((k + 1) * (k + 1))
@@ -4529,66 +4520,37 @@ def dunn_test(
     T = sum(t^3 - t) are fixed-shape doubles — replayed bit-for-bit
     in SQL.
 
-    Scale design: ONE distinct-value collapse + prefix pass (the
-    kruskal_wallis machinery), one k-row group table, a k x k
-    self-join on that TINY table. ``round_values`` bounds the grain.
+    Scale design: :func:`_pooled_midrank_sums` (the kruskal_wallis
+    kernel), then one aggregate folds its k rows into the totals and
+    an array of the groups, which two explodes pair up — the k x k
+    pairing of that TINY table without a self-join recomputing it.
+    ``round_values`` bounds the grain.
     """
-    from kafka_streams_plumber_spark.operators.ordering import (
-        running_total,
-    )
-    from kafka_streams_plumber_spark.plans.scale import truncate_lineage
-
     v = F.col(value_col).cast("double")
     if round_values is not None:
         v = F.round(v, int(round_values))
     base = df.where(
         F.col(group_col).isNotNull() & v.isNotNull()
     ).select(F.col(group_col).alias("_g"), v.alias("_v"))
-    per_gv = truncate_lineage(
-        base.groupBy("_g", "_v").agg(F.count(F.lit(1)).alias("_c"))
+    tab = _pooled_midrank_sums(base).agg(
+        F.collect_list(F.struct("_g", "_ng", "_Dg")).alias("_gs"),
+        F.sum("_ng").alias("_N"),
+        (F.sum("_t3") - F.sum("_ng")).alias("_T"),
     )
-    per_v = per_gv.groupBy("_v").agg(F.sum("_c").alias("_t"))
-    r = running_total(per_v, ["_v"], "_t", out_col="_cum")
-    cells = r.select(
-        "_v",
-        (F.lit(2) * F.col("_cum") - F.col("_t") + F.lit(1)).alias("_d"),
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    tie = per_v.agg(
-        F.coalesce(F.sum("_t"), F.lit(0)).cast("decimal(38,0)").alias("_N"),
-        F.coalesce(
-            F.sum(
-                dec((F.col("_t") * F.col("_t") - 1).cast("decimal(19,0)"))
-                * F.col("_t").cast("decimal(19,0)")
-            ),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("_T"),
-    )
-    per_g = (
-        per_gv.join(cells, "_v")
-        .groupBy("_g")
-        .agg(
-            F.sum("_c").cast("decimal(38,0)").alias("_ng"),
-            F.sum(
-                dec(F.col("_c").cast("decimal(19,0)"))
-                * F.col("_d").cast("decimal(19,0)")
-            )
-            .cast("decimal(38,0)")
-            .alias("_Dg"),
+    pairs = (
+        tab.select(F.explode("_gs").alias("_a"), "_gs", "_N", "_T")
+        .select("_a", F.explode("_gs").alias("_b"), "_N", "_T")
+        .where(F.col("_a._g") < F.col("_b._g"))
+        .select(
+            F.col("_a._g").alias("group_a"),
+            F.col("_a._ng").alias("_na"),
+            F.col("_a._Dg").alias("_da"),
+            F.col("_b._g").alias("group_b"),
+            F.col("_b._ng").alias("_nb"),
+            F.col("_b._Dg").alias("_db"),
+            "_N",
+            "_T",
         )
-    )
-    a = per_g.select(
-        F.col("_g").alias("group_a"),
-        F.col("_ng").alias("_na"),
-        F.col("_Dg").alias("_da"),
-    )
-    b = per_g.select(
-        F.col("_g").alias("group_b"),
-        F.col("_ng").alias("_nb"),
-        F.col("_Dg").alias("_db"),
-    )
-    pairs = a.join(b, F.col("group_a") < F.col("group_b")).crossJoin(
-        F.broadcast(tie)
     )
     nN = F.col("_N").cast("double")
     # mean ranks: doubled sums halve out — (Da/na - Db/nb) / 2

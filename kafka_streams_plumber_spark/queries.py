@@ -12045,9 +12045,9 @@ def q_mannwhitney(spark, sf_dir):
     did purchase-event values shift vs views — the nonparametric
     location companion to q_ks's shape test, on the same slice. The
     AUC doubled-rank device makes U and the tie term sum(t^3 - t)
-    exact integers over the distinct-value grain (cumulative counts
-    via the distributed running_total), z is one fixed-shape double
-    expression — replayed exactly in SQL."""
+    exact integers (pooled midrank sums folded from one sorted pass),
+    z is one fixed-shape double expression — replayed exactly in
+    SQL."""
     from kafka_streams_plumber_spark.operators.stats import mann_whitney
 
     e = load_tables(spark, sf_dir)["events"]
@@ -14258,10 +14258,9 @@ def q_friedman(spark, sf_dir):
     (blocks), do the five event types consistently rank differently
     by total spend? The within-block repeated-measures sibling of
     q_kruskal. Cell values are exact scaled-long sums; within-block
-    doubled midranks ride ONE global range exchange with per-block
-    offsets (no per-block window); the tie-corrected statistic is
-    all-integer to one final division — replayed bit-for-bit in
-    SQL."""
+    doubled midranks come from one per-block window (a block holds at
+    most k cells); the tie-corrected statistic is all-integer to one
+    final division — replayed bit-for-bit in SQL."""
     from kafka_streams_plumber_spark.operators.stats import friedman
 
     e = load_tables(spark, sf_dir)["events"]

@@ -2416,3 +2416,175 @@ def test_anova_sum_overflow_nulls_not_zero(spark):
     assert 2 * s * s > 10**38 - 1
     assert r["n"] == 5 and r["k_groups"] == 3
     assert r["f"] is None and r["eta_sq"] is None
+
+
+def _rank_panel(spark):
+    """200 rows over four groups, values in [0, 1000): rounded to 0
+    decimals a few values tie, rounded to -2 they fall on 11 values."""
+    rows = [
+        (f"g{i % 4}", float((i * 7919 + (i % 4) * 131) % 100003) / 100.003)
+        for i in range(200)
+    ]
+    return spark.createDataFrame(rows, "g string, v double")
+
+
+def _under_confs(spark, confs, fn):
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        return fn()
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def test_pooled_rank_tests_ignore_range_boundaries(spark):
+    """kruskal_wallis, dunn_test and mann_whitney fold per-partition
+    midrank sums: the rows are identical whatever the range exchange's
+    boundaries (AQE on/off x 1/3/7 shuffle partitions) under light and
+    heavy ties."""
+    from kafka_streams_plumber_spark.operators.stats import (
+        dunn_test,
+        kruskal_wallis,
+        mann_whitney,
+    )
+
+    df = _rank_panel(spark)
+
+    def ranked():
+        # one union, so each configuration is one query
+        frames = []
+        for r in (0, -2):
+            outs = {
+                "kruskal": kruskal_wallis(df, "v", "g", round_values=r),
+                "dunn": dunn_test(df, "v", "g", round_values=r),
+                "mann_whitney": mann_whitney(
+                    df, "v", "g", "g0", "g2", round_values=r
+                ),
+            }
+            frames += [
+                out.select(
+                    F.lit(f"{name} {r}").alias("k"),
+                    F.to_json(F.struct("*")).alias("row"),
+                )
+                for name, out in outs.items()
+            ]
+        union = frames[0]
+        for f in frames[1:]:
+            union = union.unionByName(f)
+        return sorted(union.collect())
+
+    seen = {}
+    for aqe in ("true", "false"):
+        for parts in ("1", "3", "7"):
+            confs = {
+                "spark.sql.adaptive.enabled": aqe,
+                "spark.sql.shuffle.partitions": parts,
+            }
+            seen[(aqe, parts)] = _under_confs(spark, confs, ranked)
+    first = seen[("true", "1")]
+    assert len({row["k"] for row in first}) == 6
+    assert all(rows == first for rows in seen.values()), seen
+
+
+def _friedman_reference(blocks, k):
+    """Sequential tie-corrected Friedman Q over complete blocks
+    ({treatment: value}, MIN over duplicate cells already taken)."""
+    full = [b for b in blocks if len(b) == k]
+    if not full:
+        return 0, None
+    ts = sorted({t for b in full for t in b})
+    rsum = dict.fromkeys(ts, 0.0)
+    a = 0.0
+    for b in full:
+        vals = sorted(b.values())
+        for t, v in b.items():
+            lo = vals.index(v)
+            hi = len(vals) - vals[::-1].index(v)
+            rank = (lo + 1 + hi) / 2
+            rsum[t] += rank
+            a += rank * rank
+    n = len(full)
+    c = n * k * (k + 1) ** 2 / 4
+    if a == c:
+        return n, None
+    num = (k - 1) * sum((r - n * (k + 1) / 2) ** 2 for r in rsum.values())
+    return n, round(num / (a - c), 6)
+
+
+def test_friedman_per_block_window_matches_reference(spark):
+    """Incomplete blocks drop out, duplicate cells collapse to their
+    MIN, within-block ties get midranks and an all-tie block adds
+    nothing to the statistic: Q equals the pure-Python midrank
+    reference. A panel with no complete block gives a NULL q."""
+    from kafka_streams_plumber_spark.operators.stats import friedman
+
+    blocks = [
+        {"x": 1.0, "y": 2.0, "z": 3.0, "w": 4.0},
+        {"x": 2.0, "y": 2.0, "z": 1.0, "w": 5.0},
+        {"x": 7.0, "y": 7.0, "z": 7.0, "w": 7.0},  # all ties
+        {"x": 3.0, "y": 1.0, "z": 3.0, "w": 1.0},
+        {"x": 9.0, "y": 8.0, "z": 8.5, "w": 0.5},
+        {"x": 4.0, "y": 6.0, "z": 5.0},  # incomplete
+        {"x": 1.0},  # incomplete
+        {"x": 0.5, "y": 0.25, "z": 0.75, "w": 0.25},
+    ]
+    rows = [(b, t, v) for b, cells in enumerate(blocks) for t, v in cells.items()]
+    rows += [(0, "x", 6.0), (3, "y", 2.0)]  # duplicates: MIN wins
+    df = spark.createDataFrame(rows, "b long, t string, v double")
+    n, q = _friedman_reference(blocks, 4)
+    got = friedman(df, "b", "t", "v", n_treatments=4).collect()[0]
+    assert (got["n_blocks"], got["k"], got["df"]) == (n, 4, 3) == (6, 4, 3)
+    assert q is not None and got["q"] == q
+
+    none = spark.createDataFrame(
+        [(b, t, float(b)) for b in range(3) for t in ("x", "y")],
+        "b long, t string, v double",
+    )
+    r = friedman(none, "b", "t", "v", n_treatments=4).collect()[0]
+    assert r["q"] is None and r["n_blocks"] is None
+
+
+def test_rank_tests_plan_shape(spark):
+    """The rank tests launch a bounded number of jobs, materialize no
+    localCheckpoint, and rank in one sorted pass: exactly one range
+    exchange for the pooled-rank kernels, none for friedman's
+    per-block window."""
+    from kafka_streams_plumber_spark.operators.stats import (
+        dunn_test,
+        friedman,
+        kruskal_wallis,
+        mann_whitney,
+        mood_median,
+    )
+    from kafka_streams_plumber_spark.plans.inspect import plan_string
+    from kafka_streams_plumber_spark.plans.scale import inline_table
+
+    rows = [(f"g{i % 3}", i % 5, float(i % 11)) for i in range(60)]
+    df = inline_table(spark, rows, "g string, b int, v double")
+    cases = {
+        # name: (frame, max jobs, range exchanges)
+        "kruskal": (kruskal_wallis(df, "v", "g"), 5, 1),
+        "dunn": (dunn_test(df, "v", "g"), 5, 1),
+        "mann_whitney": (mann_whitney(df, "v", "g", "g0", "g1"), 5, 1),
+        "friedman": (friedman(df, "b", "g", "v", n_treatments=3), 5, 0),
+        "mood": (mood_median(df, "v", "g"), 11, None),
+    }
+    sc = spark.sparkContext
+    for name, (out, max_jobs, ranges) in cases.items():
+        group = f"rank-plan-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            out.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert 0 < len(jobs) <= max_jobs, (name, len(jobs))
+        plan = plan_string(out).split("== Initial Plan ==")[0]
+        assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, name
+        if ranges is not None:
+            assert plan.count("Exchange rangepartitioning") == ranges, (
+                name,
+                plan,
+            )

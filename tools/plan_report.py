@@ -164,7 +164,7 @@ AUDITED = {
     "q_cusum": "O(days) grain after one agg; prefix sum + prefix min ride range exchanges with O(P) offsets",
     "q_spearman": "distinct-value collapse per column + running_total ranks; one map-combinable moment aggregate",
     "q_fightin": "one token explode to an O(vocab) grain; broadcast totals; two-phase top-k prune",
-    "q_mannwhitney": "distinct-value collapse + running_total cumulative counts; one final aggregate",
+    "q_mannwhitney": "pooled midrank sums: ONE range exchange, one window per partition, offsets folded on P x 2 rows; one final aggregate",
     # r8 wave
     "q_psi_drift": "one (feed,day,bin) count; observed-grid fill; ONE range-frame baseline window on the tiny grain",
     "q_fertility_mix": "ONE map-combinable aggregate; tokenize/count per-row codegen (size(), no explode)",
@@ -177,7 +177,7 @@ AUDITED = {
     "q_cohen_kappa": "k^2-bounded confusion grain; label-index window on the k-row label frame only; broadcast marginal cross",
     "q_mcnemar": "ONE map-combinable conditional-count aggregate; no join, no window",
     "q_kendall_w": "(rater,score) distinct grain; ONE fused range exchange + O(raters) offsets; ratings join the tie-block grain",
-    "q_kruskal": "distinct-value collapse + running_total doubled midranks; k-row group aggregate with 1-row totals broadcast",
+    "q_kruskal": "pooled midrank sums: ONE range exchange, one window per partition, offsets folded on P x k rows; k-row totals window",
     "q_anova": "ONE map-combinable scaled-long moment aggregate to the k-row group grain",
     "q_brown_forsythe": "exact_percentiles parallel-rank medians broadcast back; then the one-aggregate ANOVA core",
     "q_hits": "per round two map-combined contribution shuffles + 1-row max broadcast; lineage truncated between rounds",
@@ -198,8 +198,8 @@ AUDITED = {
     "q_isotonic": "d^2 interval table off ONE fused prefix pass; suffix-min/prefix-max windows bounded by d, not data",
     "q_jarque_bera": "two map-combinable passes + k-row pivot broadcast; exact integer d^1..d^4 moments, no window",
     "q_cvm": "distinct-value grain; ONE fused prefix exchange for both cumulative counts; exact integer gap device",
-    "q_mood_median": "one percentile range exchange + 1-row median broadcast; frozen chi-square terms, k-row fold",
-    "q_friedman": "within-block midranks off ONE global range exchange with per-block offsets; all-integer Q identity",
+    "q_mood_median": "one percentile range exchange + 1-row median broadcast; frozen chi-square terms; k-row totals window + fold",
+    "q_friedman": "within-block midranks off ONE per-block window (k cells a block); no range exchange; all-integer Q identity",
     "q_welch": "ONE map-combinable aggregate to two rows; exact integer (n,S,Q) moments; fixed-shape double tail",
     "q_dw": "shifted-index equi-join on the bounded hourly grain; exact integer diff/cleared-mean moments",
     "q_theil_sen": "O(B^2) pair join ON THE COLLAPSED hourly grain only; frozen slopes; percentile range exchange",
@@ -219,7 +219,7 @@ AUDITED = {
     "q_mann_kendall": "bounded-grain pair join for exact integer S; tie terms off a (group, value) collapse",
     "q_wilson": "ONE conditional-count aggregate to k rows; fixed-shape Wilson interval",
     "q_chao": "token-grain collapse + one group aggregate; integer V/V1/V2 spectrum counts",
-    "q_dunn": "kruskal machinery (collapse + ONE prefix pass) then a k x k self-join on the tiny group table",
+    "q_dunn": "kruskal's pooled midrank sums; k rows folded into one array row, two explodes pair them (no self-join)",
     "q_partial_corr": "ONE aggregate to a single 10-moment row; fixed-shape double tail",
     "q_smk": "phase-keyed pair join (B^2/period on the collapsed grain); per-season integer kernels",
     "q_ljung_box": "ONE autocorrelation pass; frozen r^2/(n-k) terms; O(h)-row fold",
