@@ -16,7 +16,6 @@ No Avro library needed: .avsc is plain JSON.
 from __future__ import annotations
 
 import json
-from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import types as T
@@ -30,7 +29,6 @@ from kafka_streams_plumber_spark.operators.conform import (
     Union,
     spark_type,
 )
-from kafka_streams_plumber_spark.sources.avro_codec import Promote, ReadRecord
 
 _PRIMITIVES: dict[str, T.DataType] = {
     "boolean": T.BooleanType(),
@@ -108,17 +106,10 @@ def avsc_to_struct(schema: str | dict) -> T.StructType:
 # Schema resolution (Avro spec "Schema Resolution")
 # -------------------------------------------------------------------------
 
-#: writer -> reader promotions the Avro spec allows on read, with the
-#: conversion of the decoded value (None: the Python value already fits).
-_PROMOTIONS: dict[tuple[str, str], Callable[[Any], Any] | None] = {
-    ("int", "long"): None,
-    ("int", "float"): float,
-    ("int", "double"): float,
-    ("long", "float"): float,
-    ("long", "double"): float,
-    ("float", "double"): None,
-    ("string", "bytes"): str.encode,
-    ("bytes", "string"): bytes.decode,
+#: writer -> reader promotions the Avro spec allows on read
+_PROMOTIONS = {
+    ("int", "long"), ("int", "float"), ("int", "double"), ("long", "float"),
+    ("long", "double"), ("float", "double"), ("string", "bytes"), ("bytes", "string"),
 }
 
 _TYPE_NAMES = {Record: "record", Enum: "enum", Array: "array", Union: "union"} | {
@@ -130,135 +121,66 @@ def _type_name(model: object) -> str:
     return _TYPE_NAMES.get(type(model), "?")
 
 
-def _default_value(value: Any, model: object) -> Any:
-    """A field's JSON ``default`` as the value a decode of ``model``
-    yields (a union default belongs to its first branch)."""
-    if isinstance(model, Union):
-        return _default_value(value, model.branches[0])
-    if isinstance(model, Record):
-        return {
-            f.name: _default_value(value.get(f.name, f.default), f.type)
-            for f in model.fields
-        }
-    if isinstance(model, Array):
-        return [_default_value(v, model.element) for v in value]
-    if isinstance(model, T.BinaryType):
-        return value.encode("latin-1")  # spec: bytes defaults are code points
-    if isinstance(model, (T.FloatType, T.DoubleType)):
-        return float(value)
-    return value
-
-
-def resolve(
-    reader: object, writer: object, path: str = "$", null_fill: bool = False
-) -> tuple[object, list[str]]:
-    """Resolve ``writer`` data against ``reader`` (parsed models) into
-    ``(plan, problems)``. sources/avro_codec decodes writer bytes with
-    ``plan`` into reader-shaped values; it is the writer model itself
-    wherever nothing changes. ``problems`` lists every path-tagged reason
-    the writer cannot be read; the plan is usable only when it is empty.
+def resolve(reader: object, writer: object, path: str = "$") -> list[str]:
+    """Every path-tagged reason data written with ``writer`` cannot be read
+    as ``reader`` (parsed models); empty when it can. The rules are the
+    Avro spec's, which the JVM codec's resolving reader applies:
 
     - primitives: equal, or a spec-listed writer->reader promotion
       (int->long/float/double, long->float/double, float->double,
       string<->bytes);
     - records: fields matched BY NAME; a reader field missing from the
-      writer needs a ``default``, which the plan fills in (``null_fill``
-      fills a field without one with null instead, conform's rule for an
-      absent field); writer-only fields are skipped;
+      writer needs a ``default``; writer-only fields are skipped;
     - enums: every writer symbol must exist in the reader's symbol set;
     - arrays: item schemas must resolve;
     - unions: every writer branch must resolve against SOME reader
-      branch (a non-union writer is the one-branch case, and the reader
-      branch of the same type wins over a promotion; a non-union reader
-      must accept every writer branch).
+      branch (a non-union writer is the one-branch case; a non-union
+      reader must accept every writer branch).
     """
     if isinstance(writer, Union):
-        plans, probs = [], []
-        for i, branch in enumerate(writer.branches):
-            plan, bad = resolve(reader, branch, f"{path}[w-union:{i}]", null_fill)
-            if bad:
-                probs.append(
-                    f"{path}: writer union branch {_type_name(branch)!r}"
-                    " has no compatible reader branch"
-                )
-            plans.append(plan)
-        if probs or all(p is b for p, b in zip(plans, writer.branches)):
-            return writer, probs
-        return Union(tuple(plans)), []
+        return [
+            f"{path}: writer union branch {_type_name(branch)!r}"
+            " has no compatible reader branch"
+            for i, branch in enumerate(writer.branches)
+            if resolve(reader, branch, f"{path}[w-union:{i}]")
+        ]
 
     wk = _type_name(writer)
     if isinstance(reader, Union):
-        for branch in sorted(reader.branches, key=lambda b: _type_name(b) != wk):
-            plan, bad = resolve(branch, writer, path, null_fill)
-            if not bad:
-                return plan, []
-        return writer, [f"{path}: writer {wk!r} matches no branch of the reader union"]
+        if any(not resolve(branch, writer, path) for branch in reader.branches):
+            return []
+        return [f"{path}: writer {wk!r} matches no branch of the reader union"]
 
     rk = _type_name(reader)
     if rk in _PRIMITIVES and wk in _PRIMITIVES:
-        if rk == wk:
-            return writer, []
-        if (wk, rk) not in _PROMOTIONS:
-            return writer, [f"{path}: writer {wk!r} cannot promote to reader {rk!r}"]
-        convert = _PROMOTIONS[wk, rk]
-        return (writer if convert is None else Promote(writer, convert)), []
+        if rk == wk or (wk, rk) in _PROMOTIONS:
+            return []
+        return [f"{path}: writer {wk!r} cannot promote to reader {rk!r}"]
 
     if rk != wk:
-        return writer, [f"{path}: reader is {rk!r} but writer is {wk!r}"]
+        return [f"{path}: reader is {rk!r} but writer is {wk!r}"]
 
     if rk == "array":
-        plan, probs = resolve(reader.element, writer.element, f"{path}.items", null_fill)
-        return (writer if plan is writer.element else Array(plan)), probs
+        return resolve(reader.element, writer.element, f"{path}.items")
 
     if rk == "enum":
         missing = [s for s in writer.symbols if s not in set(reader.symbols)]
-        if missing:
-            return writer, [f"{path}: writer enum symbols {missing} absent from reader"]
-        return writer, []
+        return [f"{path}: writer enum symbols {missing} absent from reader"] if missing else []
 
     if rk == "record":
         w_fields = writer.field_map()
-        plans: dict[str, object] = {}
         probs = []
         for rf in reader.fields:
             if rf.name in w_fields:
-                plans[rf.name], bad = resolve(
-                    rf.type, w_fields[rf.name].type, f"{path}.{rf.name}", null_fill
-                )
-                probs.extend(bad)
-            elif rf.default is NO_DEFAULT and not null_fill:
+                probs += resolve(rf.type, w_fields[rf.name].type, f"{path}.{rf.name}")
+            elif rf.default is NO_DEFAULT:
                 probs.append(
                     f"{path}.{rf.name}: reader field absent from writer and"
                     " has no default"
                 )
-        same_layout = [f.name for f in reader.fields] == [f.name for f in writer.fields]
-        if probs or (
-            same_layout and all(plans[f.name] is f.type for f in writer.fields)
-        ):
-            return writer, probs
-        template = {
-            rf.name: None
-            if rf.name in plans or rf.default is NO_DEFAULT
-            else _default_value(rf.default, rf.type)
-            for rf in reader.fields
-        }
-        steps = tuple(
-            (f.name, plans[f.name]) if f.name in plans else (None, f.type)
-            for f in writer.fields
-        )
-        return ReadRecord(steps, template), []
+        return probs
 
     raise UnsupportedAvroType(f"cannot resolve avro type {rk!r}")
-
-
-def read_plan(reader: object, writer: object, null_fill: bool = False) -> object:
-    """:func:`resolve`'s plan, or ValueError listing every problem."""
-    plan, probs = resolve(reader, writer, "$", null_fill)
-    if probs:
-        raise ValueError(
-            "reader schema cannot read writer data:\n  " + "\n  ".join(probs)
-        )
-    return plan
 
 
 def schema_incompatibilities(
@@ -268,9 +190,16 @@ def schema_incompatibilities(
     empty list means compatible: :func:`resolve`'s problem list, the
     pre-flight every consumer upgrade needs BEFORE deploying against a
     live topic (the registry tells you what producers wrote)."""
-    return resolve(parse_avsc(reader), parse_avsc(writer), path)[1]
+    return resolve(parse_avsc(reader), parse_avsc(writer), path)
+
+
+def cannot_read(problems: list[str]) -> str:
+    """The one message for a writer whose data the reader cannot read."""
+    return "reader schema cannot read writer data:\n  " + "\n  ".join(problems)
 
 
 def assert_can_read(reader: str | dict, writer: str | dict) -> None:
     """Raise ValueError listing every incompatibility (empty = return)."""
-    read_plan(parse_avsc(reader), parse_avsc(writer))
+    problems = schema_incompatibilities(reader, writer)
+    if problems:
+        raise ValueError(cannot_read(problems))

@@ -5,23 +5,24 @@ message, and TypeConversions.scala:22, which admits ``avro`` with no
 ``=file.avsc``).
 
 Spark needs a FIXED column type per DataFrame, so resolution happens at
-two levels:
+two levels, both on the driver, once per plan:
 
-- **Driver side, once per job**: ``serde.resolve_registry_type`` fetches
-  the subject's latest schema (Confluent TopicNameStrategy:
-  ``{topic}-value`` / ``{topic}-key``) and pins it as the READER schema —
-  this is what types the column.
-- **Executor side, per schema id**: heterogeneous topics (old producers
-  still writing previous versions) carry different writer ids; the avro
-  decode UDF (sources/serde.py) resolves each id through the same client
-  (cached per worker — one registry round-trip per (worker, id), NOT per
-  record) and decodes writer records through the writer→reader plan of
-  ``avsc.read_plan``, built once per id.
+- **The reader**: ``serde.resolve_registry_type`` fetches the subject's
+  latest schema (Confluent TopicNameStrategy: ``{topic}-value`` /
+  ``{topic}-key``) and pins it as the READER schema — this is what types
+  the column.
+- **The writers**: heterogeneous topics (old producers still writing
+  previous versions) carry different writer ids. The decode plan lists
+  every version of the subject (:meth:`SchemaRegistryClient.subject_schemas`)
+  and hands the id -> writer schema map to the JVM codec
+  (jvm/AvroCodec.java), which reads each record with Avro's resolving
+  reader for its id. No registry call is made per record or on an
+  executor; a writer registered after the plan was built needs a
+  restart.
 
 The HTTP client is stdlib ``urllib`` (the registry API is plain
 JSON-over-HTTP); :class:`FakeSchemaRegistry` is the injectable in-memory
-double for tests and offline runs. Both are picklable so either can ride
-into executor closures.
+double for tests and offline runs.
 """
 
 from __future__ import annotations
@@ -44,6 +45,11 @@ class SchemaRegistryClient:
 
     def latest_schema(self, subject: str) -> tuple[int, str]:
         """(schema_id, schema_text) of the subject's latest version."""
+        raise NotImplementedError
+
+    def subject_schemas(self, subject: str) -> list[tuple[int, str]]:
+        """(schema_id, schema_text) of every version of the subject, oldest
+        first."""
         raise NotImplementedError
 
 
@@ -82,10 +88,16 @@ class FakeSchemaRegistry(SchemaRegistryClient):
             raise SchemaNotFound(f"subject {subject!r}")
         return ids[-1], self._by_id[ids[-1]]
 
+    def subject_schemas(self, subject: str) -> list[tuple[int, str]]:
+        ids = self._subjects.get(subject)
+        if not ids:
+            raise SchemaNotFound(f"subject {subject!r}")
+        return [(sid, self._by_id[sid]) for sid in ids]
+
 
 class HttpSchemaRegistryClient(SchemaRegistryClient):
     """Confluent Schema Registry REST client (GET /schemas/ids/{id},
-    GET /subjects/{subject}/versions/latest) with a per-process cache:
+    GET /subjects/{subject}/versions[/latest|/{version}]) with a cache:
     ids are immutable, so cache hits never revalidate; subjects cache
     only within this client instance's lifetime."""
 
@@ -94,18 +106,7 @@ class HttpSchemaRegistryClient(SchemaRegistryClient):
         self.timeout = timeout
         self._id_cache: dict[int, str] = {}
 
-    def __getstate__(self):
-        # ship the cache to executors too: warm ids never re-fetch there
-        return {
-            "base_url": self.base_url,
-            "timeout": self.timeout,
-            "_id_cache": dict(self._id_cache),
-        }
-
-    def __setstate__(self, state):
-        self.__dict__.update(state)
-
-    def _get(self, path: str) -> dict:
+    def _get(self, path: str) -> dict | list:
         import urllib.error
         import urllib.request
 
@@ -127,7 +128,13 @@ class HttpSchemaRegistryClient(SchemaRegistryClient):
         return self._id_cache[schema_id]
 
     def latest_schema(self, subject: str) -> tuple[int, str]:
-        doc = self._get(f"/subjects/{subject}/versions/latest")
+        return self._version(subject, "latest")
+
+    def subject_schemas(self, subject: str) -> list[tuple[int, str]]:
+        return [self._version(subject, v) for v in self._get(f"/subjects/{subject}/versions")]
+
+    def _version(self, subject: str, version) -> tuple[int, str]:
+        doc = self._get(f"/subjects/{subject}/versions/{version}")
         sid, schema = int(doc["id"]), doc["schema"]
         self._id_cache[sid] = schema
         return sid, schema

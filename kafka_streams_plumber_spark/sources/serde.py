@@ -8,14 +8,21 @@ Confluent-framed), void (always NULL). long, string and void are column
 expressions. Avro is one Java UDF each way (jvm/AvroCodec.java, built and
 registered by kafka_streams_plumber_spark.jvm), which also checks and
 strips, or prepends, the Confluent header: the wire path never leaves the
-JVM. The Arrow-batched Python UDF over sources/avro_codec.py runs in two
-cases only: when the Java codec cannot be built (no javac or no Avro jar
-in Spark's jars; a warning says so), and for the registry-resolved decode,
-whose writer ids are looked up per record through the Python
-SchemaRegistryClient. The Java functions are registered in the Spark
-session active on the thread that builds the plan, so build and run an
-Avro plan on that session; with no active session a warning is logged
-and the Python codec runs.
+JVM, in both modes of the reference's Avro serde.
+
+- File-pinned ``avro=x.avsc``: the file's schema reads and writes every
+  payload.
+- Registry-resolved ``avro``: :func:`resolve_registry_type` pins the
+  subject's latest schema as the reader. When a decode plan is built with
+  a ``registry``, every version the subject has THEN is handed to the
+  UDF, and each payload is read with the writer its embedded id names
+  (Avro's resolving reader). A writer registered after the plan was built
+  is unknown to it: its records fail naming the id, and the job needs a
+  restart to read them.
+
+The Java functions are registered in the Spark session active on the
+thread that builds the plan, so build and run an Avro plan on that
+session; with no active session the plan is refused when it is built.
 
 Type strings parse exactly like the reference CLI (`string`,
 `long`, `avro=file.avsc`, `avro`, `void` — TypeConversions.scala:42-51):
@@ -24,14 +31,19 @@ Type strings parse exactly like the reference CLI (`string`,
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from kafka_streams_plumber_spark import jvm
 from kafka_streams_plumber_spark.operators.conform import spark_type
-from kafka_streams_plumber_spark.operators.pipeline import _py_udf
-from kafka_streams_plumber_spark.sources.avsc import parse_avsc, read_plan
+from kafka_streams_plumber_spark.sources.avsc import (
+    cannot_read,
+    parse_avsc,
+    schema_incompatibilities,
+)
 
 _U64 = 1 << 64
 _I64_MAX = (1 << 63) - 1
@@ -43,6 +55,7 @@ class WireType:
     avsc: str | None = None  # schema text for avro
     schema_id: int | None = None  # registry id (framing header on encode)
     registry_resolved: bool = False  # plain `avro`, resolved via registry
+    subject: str | None = None  # the registry subject it was resolved from
 
     @property
     def model(self):
@@ -72,8 +85,9 @@ def resolve_registry_type(wt: WireType, registry, subject: str) -> WireType:
     schema (Confluent TopicNameStrategy subjects: ``{topic}-value`` /
     ``{topic}-key``). Driver-side, once per job — the resolved schema
     types the DataFrame column; per-record WRITER schemas are still
-    resolved by embedded id on the decode path (see
-    :func:`_avro_decode`). No-op for non-avro / already-pinned types.
+    resolved by embedded id on the decode path, over the subject's
+    versions (see :func:`_writers`). No-op for non-avro / already-pinned
+    types.
     """
     if wt.kind != "avro" or wt.avsc is not None:
         return wt
@@ -83,7 +97,7 @@ def resolve_registry_type(wt: WireType, registry, subject: str) -> WireType:
             "pass avro=file.avsc or configure schema.registry.url"
         )
     sid, text = registry.latest_schema(subject)
-    return WireType("avro", text, schema_id=sid, registry_resolved=True)
+    return WireType("avro", text, schema_id=sid, registry_resolved=True, subject=subject)
 
 
 def decode(
@@ -161,92 +175,58 @@ def spark_type_of(wt: WireType):
     return spark_type(wt.model)
 
 
-def _confluent_header(schema_id: int) -> bytes:
-    """Confluent wire format: magic byte 0x00 + 4-byte big-endian schema
-    id (GenericAvroSerializer.scala:30-40)."""
-    return b"\x00" + schema_id.to_bytes(4, "big")
+def _null_fill(reader, writer):
+    """``reader`` (schema JSON) with every record field ``writer`` lacks
+    that has no default made ``["null", T]`` with default null, at any
+    depth of inline records: the registry decode null-fills such a field,
+    as conform does for an absent field, where Avro's resolver would
+    refuse the writer."""
+    if not (isinstance(reader, dict) and isinstance(writer, dict)
+            and reader.get("type") == writer.get("type") == "record"):
+        return reader
+    have = {f["name"]: f["type"] for f in writer["fields"]}
+    fields = []
+    for f in reader["fields"]:
+        if f["name"] in have:
+            f = {**f, "type": _null_fill(f["type"], have[f["name"]])}
+        elif "default" not in f:
+            branches = f["type"] if isinstance(f["type"], list) else [f["type"]]
+            f = {**f, "type": ["null", *(b for b in branches if b != "null")], "default": None}
+        fields.append(f)
+    return {**reader, "fields": fields}
 
 
-def _unframe(b: bytes) -> tuple[int, bytes]:
-    """(schema id, avro body) of a Confluent-framed message."""
-    if len(b) < 5 or b[0] != 0:
-        raise ValueError("not a Confluent-framed avro message")
-    return int.from_bytes(b[1:5], "big"), b[5:]
+def _writers(wt: WireType, registry) -> Column:
+    """The registry decode's id -> writer map, a ``map<int,array<string>>``
+    literal over every version of ``wt``'s subject: [writer text, reader
+    text for that writer] (:func:`_null_fill`), or [why the reader cannot
+    read it], raised when a record with that id arrives."""
+    if wt.subject is None:
+        raise ValueError("a registry decode needs the subject: pin the type "
+                         "with resolve_registry_type()")
+    reader = json.loads(wt.avsc)
+    entries = []
+    for sid, text in registry.subject_schemas(wt.subject):
+        own = json.dumps(_null_fill(reader, json.loads(text)))
+        problems = schema_incompatibilities(own, text)
+        texts = [cannot_read(problems)] if problems else [text, own]
+        entries += [F.lit(sid), F.array(*map(F.lit, texts))]
+    return F.create_map(*entries)
 
 
 def _avro_decode(col: Column, wt: WireType, *, framed: bool, registry) -> Column:
-    """The avro decode: the Java UDF (see the module docstring) unless a
-    ``registry`` resolves writer ids or the Java codec is unavailable.
-
-    The fallback is the pure-Python codec (sources/avro_codec.py) as an
-    Arrow-batched UDF (useArrow), so only the codec call is per-record,
-    not the serialization. (A struct-returning pandas_udf cannot
-    represent a NULL struct row, which a Kafka tombstone requires, so the
-    Arrow scalar UDF is the vectorization.) Its closure is picked here,
-    once per plan, so unframed payloads pay nothing per record for
-    framing. Framed payloads lose their header through :func:`_unframe`.
-    With a ``registry`` each writer id is resolved against the pinned
-    reader schema (``wt``) with sources/avsc.resolve, once per id per
-    executor process (GenericAvroSerializer.scala:9-73 semantics);
-    reader-only fields without a default null-fill, as conform does; any
-    other problem raises."""
-    from kafka_streams_plumber_spark import jvm
-    from kafka_streams_plumber_spark.sources.avro_codec import decode_record
-
-    reader = wt.model
-    if registry is None:
-        name = jvm.avro_function("decode", wt.avsc, spark_type(reader))
-        if name is not None:
-            return F.call_function(name, col, F.lit(wt.avsc), F.lit(framed))
-    if not framed:
-
-        def _dec(b, _model=reader):
-            return None if b is None else decode_record(b, _model)
-
-    elif registry is None:
-
-        def _dec(b, _model=reader):
-            return None if b is None else decode_record(_unframe(b)[1], _model)
-
-    else:
-
-        def _dec(b, _registry=registry, _reader=reader, _plans={}):  # noqa: B006
-            if b is None:
-                return None
-            sid, body = _unframe(b)
-            plan = _plans.get(sid)
-            if plan is None:
-                writer = parse_avsc(_registry.schema_by_id(sid))
-                plan = _plans[sid] = read_plan(_reader, writer, null_fill=True)
-            return decode_record(body, plan)
-
-    return _py_udf(_dec, spark_type(reader))(col)
+    """The avro decode: the Java UDF over ``wt``'s schema, the writer of
+    every payload unless a ``registry`` names one per id."""
+    name = jvm.avro_function("decode", wt.avsc, spark_type(wt.model))
+    writers = (F.lit(None).cast("map<int,array<string>>") if registry is None
+               else _writers(wt, registry))
+    return F.call_function(name, col, F.lit(wt.avsc), F.lit(framed), writers)
 
 
 def _avro_encode(col: Column, wt: WireType, schema_id: int | None) -> Column:
-    """The avro encode: the Java UDF, or the Python codec's UDF when the
-    Java codec is unavailable. ``schema_id``, when given, frames every
-    payload with its Confluent header, chosen once per plan like
-    :func:`_avro_decode`'s framing."""
+    """The avro encode: the Java UDF; ``schema_id``, when given, frames
+    every payload with its Confluent header."""
     from pyspark.sql import types as T
 
-    from kafka_streams_plumber_spark import jvm
-    from kafka_streams_plumber_spark.sources.avro_codec import encode_record
-
     name = jvm.avro_function("encode", wt.avsc, T.BinaryType())
-    if name is not None:
-        return F.call_function(name, col, F.lit(wt.avsc), F.lit(schema_id).cast("int"))
-    model = wt.model
-    # struct input arrives as Row (pickled path) or dict (Arrow path);
-    # encode_record accepts both
-    if schema_id is None:
-
-        def _enc(v, _model=model):
-            return None if v is None else encode_record(v, _model)
-
-    else:
-
-        def _enc(v, _model=model, _header=_confluent_header(schema_id)):
-            return None if v is None else _header + encode_record(v, _model)
-
-    return _py_udf(_enc, T.BinaryType())(col)
+    return F.call_function(name, col, F.lit(wt.avsc), F.lit(schema_id).cast("int"))

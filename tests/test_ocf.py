@@ -1,6 +1,6 @@
-"""Avro Object Container File ingestion (sources/avro_ocf.py):
-round-trips through our own stdlib encoder, codec handling, the
-reader/writer resolution gate, and corrupt-file dead-lettering."""
+"""Avro Object Container File ingestion (sources/avro_ocf.py): files
+written by Avro's own Java ``DataFileWriter`` over py4j, both codecs,
+the reader/writer resolution gate, and corrupt-file dead-lettering."""
 
 from __future__ import annotations
 
@@ -8,11 +8,7 @@ import json
 
 import pytest
 
-from kafka_streams_plumber_spark.sources.avro_ocf import (
-    parse_ocf_bytes,
-    read_avro_ocf,
-    write_ocf_bytes,
-)
+from kafka_streams_plumber_spark.sources.avro_ocf import read_avro_ocf
 
 SCHEMA = {
     "type": "record",
@@ -29,23 +25,26 @@ RECORDS = [
 ]
 
 
-@pytest.mark.parametrize("codec", ["null", "deflate"])
-def test_ocf_roundtrip(codec):
-    raw = write_ocf_bytes(RECORDS, SCHEMA, codec=codec, block_size=7)
-    writer_json, recs = parse_ocf_bytes(raw)
-    assert writer_json["name"] == "Doc"
-    assert list(recs) == RECORDS
+def write_ocf_bytes(records, schema, *, codec="null", block_size=1000) -> bytes:
+    """``records`` (Avro JSON encoding) as an OCF byte string written by
+    Avro's Java DataFileWriter, ``block_size`` records per block."""
+    from pyspark.sql import SparkSession
 
-
-def test_ocf_rejects_corruption():
-    raw = write_ocf_bytes(RECORDS, SCHEMA)
-    with pytest.raises(ValueError, match="magic"):
-        parse_ocf_bytes(b"NOPE" + raw[4:])
-    # flip a sync marker byte inside the first block trailer
-    bad = bytearray(raw)
-    bad[-1] ^= 0xFF
-    with pytest.raises(ValueError, match="sync"):
-        list(parse_ocf_bytes(bytes(bad))[1])
+    jvm = SparkSession.getActiveSession()._jvm
+    avro = jvm.org.apache.avro
+    s = avro.Schema.Parser().parse(json.dumps(schema))
+    out = jvm.java.io.ByteArrayOutputStream()
+    w = avro.file.DataFileWriter(avro.generic.GenericDatumWriter(s))
+    if codec == "deflate":
+        w.setCodec(avro.file.CodecFactory.deflateCodec(6))
+    w.create(s, out)
+    read = avro.generic.GenericDatumReader(s)
+    for i, r in enumerate(records, 1):
+        w.append(read.read(None, avro.io.DecoderFactory.get().jsonDecoder(s, json.dumps(r))))
+        if i % block_size == 0:
+            w.sync()
+    w.close()
+    return bytes(out.toByteArray())
 
 
 def test_read_avro_ocf_end_to_end(spark, tmp_path):
@@ -155,10 +154,15 @@ def test_read_avro_ocf_midfile_corruption_discards_prefix(spark, tmp_path):
     # chop mid-way through the last block: header + first block decode
     # fine, the tail raises during iteration
     (d / "partial.avro").write_bytes(raw[:-10])
+    # flip a byte of the first block's trailing sync marker (the header
+    # ends with the same 16 bytes): the blocks after it are not read
+    sync = raw[-16:]
+    at = raw.index(sync, raw.index(sync) + 16)
+    (d / "desync.avro").write_bytes(raw[:at] + bytes([raw[at] ^ 0xFF]) + raw[at + 1 :])
     rows = read_avro_ocf(spark, str(d), SCHEMA).collect()
     good = [r for r in rows if not r["_corrupt"]]
     bad = [r for r in rows if r["_corrupt"]]
     assert len(good) == 6  # only the intact file's rows
     assert all(r["_path"].endswith("good.avro") for r in good)
-    assert len(bad) == 1 and bad[0]["_path"].endswith("partial.avro")
-    assert bad[0]["id"] is None and bad[0]["text"] is None
+    assert sorted(r["_path"].rsplit("/", 1)[-1] for r in bad) == ["desync.avro", "partial.avro"]
+    assert all(r["id"] is None and r["text"] is None for r in bad)

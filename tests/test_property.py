@@ -8,7 +8,7 @@ batch with a single action.
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
@@ -1249,9 +1249,16 @@ def test_cliffs_delta_antisymmetric_and_brute_force(spark, pairs):
 
 @settings(max_examples=8, deadline=None)
 @given(panels)
+# T = 73/128 = 0.5703125 exactly: a rounding tie, which rounds half up
+@example([(0, 1), (0, 1), (0, 1), (2, 3), (1, 6), (2, 3), (2, 0), (0, 1),
+          (2, 0), (0, 3), (1, 3), (0, 6), (0, 5), (2, 2), (1, 6), (1, 4)])
 def test_cramer_von_mises_matches_brute_force(spark, pairs):
     """T equals the brute-force weighted ECDF-gap sum at the pooled
-    distinct values, and is always >= 0."""
+    distinct values, computed exactly and rounded half up to 6 decimals
+    as Spark's and DuckDB's ``round`` do, and is always >= 0."""
+    import math
+    from fractions import Fraction
+
     from kafka_streams_plumber_spark.operators.stats import (
         cramer_von_mises,
     )
@@ -1265,14 +1272,15 @@ def test_cramer_von_mises_matches_brute_force(spark, pairs):
         assert got["t"] is None
         return
     n, m = len(a), len(b)
-    t = 0.0
+    t = Fraction(0)
     for v in sorted(set(a + b)):
         ca = sum(1 for x in a if x <= v)
         cb = sum(1 for x in b if x <= v)
         tv = a.count(v) + b.count(v)
-        t += tv * (ca / n - cb / m) ** 2
-    t *= n * m / (n + m) ** 2
-    assert got["t"] == round(t, 6)
+        t += tv * (Fraction(ca, n) - Fraction(cb, m)) ** 2
+    t *= Fraction(n * m, (n + m) ** 2)
+    half_up = math.floor(t * 10**6 + Fraction(1, 2))  # t >= 0: ROUND_HALF_UP
+    assert got["t"] == half_up / 10**6
     assert got["t"] >= 0.0
 
 

@@ -16,18 +16,18 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kafka_streams_plumber_spark.sources.avro_codec import encode_record
-from kafka_streams_plumber_spark.sources.avsc import parse_avsc
 from kafka_streams_plumber_spark.sources.registry import (
     FakeSchemaRegistry,
     HttpSchemaRegistryClient,
     SchemaNotFound,
 )
 from kafka_streams_plumber_spark.sources.serde import (
+    WireType,
     decode,
     encode,
     parse_type,
     resolve_registry_type,
+    spark_type_of,
 )
 
 V1 = json.dumps(
@@ -50,8 +50,16 @@ V2 = json.dumps(
 
 
 def _framed(schema_id: int, schema_text: str, value: dict) -> bytes:
-    body = encode_record(value, parse_avsc(schema_text))
-    return b"\x00" + schema_id.to_bytes(4, "big") + body
+    """``value`` as a producer with writer ``schema_text`` frames it,
+    encoded by the codec's file-pinned path on the active session."""
+    from pyspark.sql import SparkSession
+
+    wt = WireType("avro", schema_text)
+    df = SparkSession.getActiveSession().createDataFrame(
+        [(value,)], T.StructType([T.StructField("v", spark_type_of(wt))])
+    )
+    enc = encode(F.col("v"), wt, confluent_framing=True, schema_id=schema_id)
+    return bytes(df.select(enc.alias("b")).collect()[0].b)
 
 
 def test_fake_registry_contract():
@@ -146,6 +154,16 @@ def _registry_http_server(reg: FakeSchemaRegistry):
                     subject = self.path.split("/")[2]
                     sid, text = reg.latest_schema(subject)
                     doc = {"id": sid, "schema": text, "subject": subject}
+                elif self.path.startswith("/subjects/") and self.path.endswith("/versions"):
+                    subject = self.path.split("/")[2]
+                    doc = list(range(1, len(reg.subject_schemas(subject)) + 1))
+                elif self.path.startswith("/subjects/") and "/versions/" in self.path:
+                    _, _, subject, _, version = self.path.split("/")
+                    versions = reg.subject_schemas(subject)
+                    if not 1 <= int(version) <= len(versions):
+                        raise SchemaNotFound(self.path)
+                    sid, text = versions[int(version) - 1]
+                    doc = {"id": sid, "schema": text, "subject": subject, "version": int(version)}
                 else:
                     raise SchemaNotFound(self.path)
             except SchemaNotFound:
@@ -179,6 +197,31 @@ def test_http_client_against_live_server():
         srv.shutdown()
         assert json.loads(client.schema_by_id(id1)) == json.loads(V1)
     finally:
+        srv.server_close()
+
+
+def test_http_client_lists_subject_versions(spark):
+    """``subject_schemas`` walks the subject's version endpoints, and a
+    registry decode over the HTTP client reads every version's records."""
+    reg = FakeSchemaRegistry()
+    id1 = reg.register("t-value", V1)
+    id2 = reg.register("t-value", V2)
+    srv = _registry_http_server(reg)
+    try:
+        client = HttpSchemaRegistryClient(f"http://127.0.0.1:{srv.server_port}")
+        assert client.subject_schemas("t-value") == reg.subject_schemas("t-value")
+        assert [sid for sid, _ in client.subject_schemas("t-value")] == [id1, id2]
+        with pytest.raises(SchemaNotFound):
+            client.subject_schemas("nope")
+        wt = resolve_registry_type(parse_type("avro"), client, "t-value")
+        df = spark.createDataFrame(
+            [(_framed(id1, V1, {"a": 1}),), (_framed(id2, V2, {"a": 2, "b": "y"}),)],
+            "value binary",
+        )
+        out = df.select(decode(F.col("value"), wt, registry=client).alias("v"))
+        assert sorted((r.v.a, r.v.b) for r in out.collect()) == [(1, None), (2, "y")]
+    finally:
+        srv.shutdown()
         srv.server_close()
 
 

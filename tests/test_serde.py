@@ -1,16 +1,14 @@
 """Wire serde round-trips (TypeConversions.scala parity; F8 matrix).
 
-Avro runs on two codecs: the Java UDFs (the default) and the Python
-codec (the fallback). The ``codec`` fixture runs a test on each; the
-Python path is forced by patching the availability probe
-``jvm.codec_jar``, as a host without javac would."""
+Avro runs on the JVM codec (jvm/AvroCodec.java). Its expected bytes and
+values are pinned as literals, so they do not depend on the code under
+test."""
 
 from __future__ import annotations
 
-import logging
 import os
 import re
-import subprocess
+import zipfile
 
 import pyspark.sql.functions as F
 import pytest
@@ -19,38 +17,24 @@ from pyspark.sql import types as T
 
 from kafka_streams_plumber_spark import jvm
 from kafka_streams_plumber_spark.plans.inspect import python_eval_count
-from kafka_streams_plumber_spark.sources.avro_codec import decode_record, encode_record
+from kafka_streams_plumber_spark.sources.registry import FakeSchemaRegistry
 from kafka_streams_plumber_spark.sources.serde import (
     WireType,
-    _unframe,
     decode,
     encode,
     parse_type,
+    resolve_registry_type,
     spark_type_of,
 )
-
-CODECS = ("jvm", "python")
-
-
-def _use_codec(path: str, monkeypatch) -> bool:
-    """Route Avro plans to ``path``'s codec; False when it is not on this host."""
-    if path == "python":
-        monkeypatch.setattr(jvm, "codec_jar", lambda: None)
-        return True
-    return jvm.codec_jar() is not None
-
-
-@pytest.fixture(params=CODECS)
-def codec(request, monkeypatch):
-    if not _use_codec(request.param, monkeypatch):
-        pytest.skip("no javac or no Avro jar: the JVM codec is unavailable")
-    return request.param
 
 DEMO_AVSC = """
 {"type":"record","name":"Rec","fields":[
   {"name":"name","type":"string"},
   {"name":"n","type":"long"}]}
 """
+#: DEMO_AVSC bodies of {"name": "x", "n": 1} and {"name": "roel", "n": 14}
+DEMO_X1 = bytes.fromhex("027802")
+DEMO_ROEL = bytes.fromhex("08726f656c1c")
 
 
 def test_parse_type_specs(tmp_path):
@@ -110,69 +94,66 @@ def test_avro_roundtrip(spark):
     assert out == Row(name="roel", n=14)
 
 
-def test_avro_confluent_framing_roundtrip(spark, monkeypatch):
+def test_avro_confluent_framing_roundtrip(spark):
     wt = WireType("avro", DEMO_AVSC)
-    body = encode_record({"name": "x", "n": 1}, wt.model)
-    for path in CODECS:
-        with monkeypatch.context() as m:
-            if not _use_codec(path, m):
-                continue
-            df = spark.createDataFrame([(Row(name="x", n=1),)], "v struct<name:string, n:long>")
-            enc = df.select(encode(F.col("v"), wt, confluent_framing=True, schema_id=7).alias("b"))
-            raw = bytes(enc.collect()[0].b)
-            assert raw == b"\x00" + (7).to_bytes(4, "big") + body, path  # magic + id + body
-            out = enc.select(
-                decode(F.col("b"), wt, confluent_framing=True).alias("v")
-            ).collect()[0].v
-            assert out == Row(name="x", n=1), path
-            # a column name that is not a bare SQL identifier frames the same way
-            spaced = enc.withColumnRenamed("b", "kafka value")
-            out = spaced.select(
-                decode(F.col("kafka value"), wt, confluent_framing=True).alias("v")
-            ).collect()[0].v
-            assert out == Row(name="x", n=1), path
-            # a file-pinned type checks the magic byte as the registry path does
-            bad = spark.createDataFrame([(b"\x01" + raw[1:],)], "b binary")
-            with pytest.raises(Exception, match="not a Confluent-framed avro message"):
-                bad.select(decode(F.col("b"), wt, confluent_framing=True)).collect()
+    df = spark.createDataFrame([(Row(name="x", n=1),)], "v struct<name:string, n:long>")
+    enc = df.select(encode(F.col("v"), wt, confluent_framing=True, schema_id=7).alias("b"))
+    raw = bytes(enc.collect()[0].b)
+    assert raw == b"\x00" + (7).to_bytes(4, "big") + DEMO_X1  # magic + id + body
+    out = enc.select(decode(F.col("b"), wt, confluent_framing=True).alias("v")).collect()[0].v
+    assert out == Row(name="x", n=1)
+    # a column name that is not a bare SQL identifier frames the same way
+    spaced = enc.withColumnRenamed("b", "kafka value")
+    out = spaced.select(
+        decode(F.col("kafka value"), wt, confluent_framing=True).alias("v")
+    ).collect()[0].v
+    assert out == Row(name="x", n=1)
+    # a file-pinned type checks the magic byte as the registry path does
+    bad = spark.createDataFrame([(b"\x01" + raw[1:],)], "b binary")
+    with pytest.raises(Exception, match="not a Confluent-framed avro message"):
+        bad.select(decode(F.col("b"), wt, confluent_framing=True)).collect()
 
 
-def test_avro_decode_record_rejects_trailing_and_truncated_payloads():
-    model = WireType("avro", DEMO_AVSC).model
-    body = encode_record({"name": "roel", "n": 14}, model)
-    assert decode_record(body, model) == {"name": "roel", "n": 14}
-    with pytest.raises(ValueError, match="trailing"):
-        decode_record(body + b"\x00", model)
-    for cut in range(len(body)):
-        with pytest.raises(ValueError, match="truncated"):
-            decode_record(body[:cut], model)
+def _decoded(spark, payload: bytes, wt, **kw):
+    df = spark.createDataFrame([(payload,)], "b binary")
+    return df.select(decode(F.col("b"), wt, **kw).alias("v")).collect()[0].v
 
 
-def _python_reason(payload: bytes, model, framed: bool) -> str:
-    try:
-        decode_record(_unframe(payload)[1] if framed else payload, model)
-    except ValueError as e:
-        return str(e)
-    raise AssertionError("the Python codec accepted a bad payload")
-
-
-def test_avro_decode_errors_name_the_python_codec_reason(spark, codec):
-    """Each bad payload fails the query on either codec with the reason
-    the Python codec gives: trailing bytes, truncation, and an unframed
-    message where the Confluent header is expected."""
+def test_avro_decode_record_rejects_trailing_and_truncated_payloads(spark):
     wt = WireType("avro", DEMO_AVSC)
-    body = encode_record({"name": "roel", "n": 14}, wt.model)
-    cases = [(body + b"\x00\x00", False), (b"\x00" * 5 + body + b"\x01", True)]
-    cases += [(body[:cut], False) for cut in (0, 3, len(body) - 1)]
-    cases += [(body, True), (b"\x00\x00", True)]
-    for payload, framed in cases:
-        reason = _python_reason(payload, wt.model, framed)
-        df = spark.createDataFrame([(payload,)], "b binary")
+    assert _decoded(spark, DEMO_ROEL, wt) == Row(name="roel", n=14)
+    with pytest.raises(Exception, match="trailing"):
+        _decoded(spark, DEMO_ROEL + b"\x00", wt)
+    for cut in range(len(DEMO_ROEL)):
+        with pytest.raises(Exception, match="truncated"):
+            _decoded(spark, DEMO_ROEL[:cut], wt)
+
+
+def test_avro_decode_errors_name_the_reason(spark):
+    """Each bad payload fails the query with its reason: trailing bytes,
+    truncation, an unframed message where the Confluent header is
+    expected, and, on the registry path, a writer id the subject lacks."""
+    wt = WireType("avro", DEMO_AVSC)
+    trailing, truncated = "avro payload: {} trailing bytes", "avro payload truncated or corrupt"
+    unframed = "not a Confluent-framed avro message"
+    cases = [
+        (DEMO_ROEL + b"\x00\x00", False, trailing.format(2)),
+        (b"\x00" * 5 + DEMO_ROEL + b"\x01", True, trailing.format(1)),
+        *((DEMO_ROEL[:cut], False, truncated) for cut in (0, 3, len(DEMO_ROEL) - 1)),
+        (DEMO_ROEL, True, unframed),
+        (b"\x00\x00", True, unframed),
+    ]
+    for payload, framed, reason in cases:
         with pytest.raises(Exception, match=re.escape(reason)):
-            df.select(decode(F.col("b"), wt, confluent_framing=framed)).collect()
+            _decoded(spark, payload, wt, confluent_framing=framed)
+    reg = FakeSchemaRegistry()
+    reg.register("t-value", DEMO_AVSC)
+    rt = resolve_registry_type(parse_type("avro"), reg, "t-value")
+    with pytest.raises(Exception, match="schema id 99 is not a version of the subject"):
+        _decoded(spark, b"\x00" + (99).to_bytes(4, "big") + DEMO_ROEL, rt, registry=reg)
 
 
-#: every type of the avro_codec subset, N-way union and nested record included
+#: every type of the codec's subset, N-way union and nested record included
 ALL_TYPES_AVSC = """
 {"type":"record","name":"All","fields":[
   {"name":"nil","type":"null"},
@@ -212,35 +193,43 @@ ALL_TYPES_ROWS = [
      "any": {"int": None, "string": None, "double": None, "Inner": None, "com.acme.Color": "BLUE"}},
 ]
 
+#: ALL_TYPES_ROWS in the Avro binary encoding, by the spec's rules
+ALL_TYPES_BYTES = [bytes.fromhex(h) for h in (
+    "010d8080808080400000c03f000000000000d0bf0c68c3a96c6c6f0400ff0204026102620006060202000203"
+    "000206736574040273",
+    "000001000000809c7500883ce4377e000000000000000812020000",
+    "01feffffff0fffffffffffffffffff01000000000000000000000040027a027800020263000902020e000000",
+    "0002020000803f000000000000f03f027902790202026400020002026f0a02",
+)]
 
-def test_avro_codec_parity_every_type(spark, codec):
-    """Encode through the serde is byte-identical to avro_codec's
-    encode_record, and decode gives decode_record's values, for every
-    type of the subset, an N-way union as a struct of branches, and a
-    NULL (tombstone) row."""
+
+def _all_types(spark, rows):
     wt = WireType("avro", ALL_TYPES_AVSC)
-    rows = ALL_TYPES_ROWS + [None]
-    want = [None if r is None else encode_record(r, wt.model) for r in rows]
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         list(enumerate(rows)),
         T.StructType([T.StructField("i", T.LongType()), T.StructField("v", spark_type_of(wt))]),
     )
-    evals = 0 if codec == "jvm" else 1
-    enc = df.select("i", encode(F.col("v"), wt).alias("b"))
-    assert python_eval_count(enc) == evals
+
+
+def test_avro_codec_parity_every_type(spark):
+    """Encode gives the pinned bytes and decode gives the rows back, for
+    every type of the subset, an N-way union as a struct of branches,
+    and a NULL (tombstone) row."""
+    wt = WireType("avro", ALL_TYPES_AVSC)
+    rows = ALL_TYPES_ROWS + [None]
+    want = ALL_TYPES_BYTES + [None]
+    enc = _all_types(spark, rows).select("i", encode(F.col("v"), wt).alias("b"))
     assert [None if r.b is None else bytes(r.b) for r in enc.orderBy("i").collect()] == want
 
     raw = spark.createDataFrame(list(enumerate(want)), "i long, b binary")
     dec = raw.select("i", decode(F.col("b"), wt).alias("v"))
-    assert python_eval_count(dec) == evals
     got = [None if r.v is None else r.v.asDict(recursive=True) for r in dec.orderBy("i").collect()]
-    assert got == [None if b is None else decode_record(b, wt.model) for b in want]
     assert got == rows
 
 
-def test_avro_encode_rejects_null_in_non_nullable_field(spark, codec):
+def test_avro_encode_rejects_null_in_non_nullable_field(spark):
     """A NULL where the schema has no null branch fails with the field's
-    path on both codecs, instead of writing "None" or false."""
+    path, instead of writing "None" or false."""
     wt = WireType("avro", ALL_TYPES_AVSC)
     for path, row in [
         ("All.s", {"s": None}),
@@ -248,18 +237,41 @@ def test_avro_encode_rejects_null_in_non_nullable_field(spark, codec):
         ("All.inner.x", {"inner": {"x": None, "ys": []}}),
         ("All.tags[1]", {"tags": ["a", None]}),
     ]:
-        rec = {**ALL_TYPES_ROWS[0], **row}
-        with pytest.raises(ValueError, match=re.escape(f" at {path}")):
-            encode_record(rec, wt.model)
-        df = spark.createDataFrame([(rec,)], T.StructType([T.StructField("v", spark_type_of(wt))]))
-        with pytest.raises(Exception, match=re.escape(f"null value for (non-nullable)") + ".* at " + re.escape(path)):
+        df = _all_types(spark, [{**ALL_TYPES_ROWS[0], **row}])
+        with pytest.raises(Exception, match=re.escape("null value for (non-nullable)") + ".* at " + re.escape(path)):
             df.select(encode(F.col("v"), wt)).collect()
 
 
-def test_demo_wire_plan_python_eval_count(spark, monkeypatch):
-    """ROADMAP aim 3, pinned on the executed plan: PlumberJob's demo
-    decode -> transform -> encode runs no Python with the JVM codec, and
-    one Python eval per Avro end on the fallback."""
+def test_every_avro_path_plans_no_python(spark, tmp_path):
+    """ROADMAP aim 3, pinned on the executed plans: file-pinned decode and
+    encode, framed decode, registry decode and the container-file reader
+    all run in the JVM."""
+    from kafka_streams_plumber_spark.sources.avro_ocf import read_avro_ocf
+
+    wt = WireType("avro", DEMO_AVSC)
+    reg = FakeSchemaRegistry()
+    sid = reg.register("t-value", DEMO_AVSC)
+    rt = resolve_registry_type(parse_type("avro"), reg, "t-value")
+    framed = b"\x00" + sid.to_bytes(4, "big") + DEMO_X1
+    raw = spark.createDataFrame([(DEMO_X1, framed)], "b binary, f binary")
+    plans = {
+        "decode": raw.select(decode(F.col("b"), wt).alias("v")),
+        "encode": spark.createDataFrame([(Row(name="x", n=1),)], "v struct<name:string, n:long>")
+        .select(encode(F.col("v"), wt).alias("b")),
+        "framed decode": raw.select(decode(F.col("f"), wt, confluent_framing=True).alias("v")),
+        "registry decode": raw.select(decode(F.col("f"), rt, registry=reg).alias("v")),
+    }
+    for path, plan in plans.items():
+        assert python_eval_count(plan) == 0, path
+        assert plan.collect()[0][0] in (Row(name="x", n=1), bytearray(DEMO_X1)), path
+    (tmp_path / "trash.avro").write_bytes(b"not avro")
+    ocf = read_avro_ocf(spark, str(tmp_path), DEMO_AVSC)
+    assert python_eval_count(ocf) == 0
+    assert [r._corrupt for r in ocf.collect()] == [True]
+
+
+def test_demo_wire_plan_python_eval_count(spark):
+    """PlumberJob's demo decode -> transform -> encode runs no Python."""
     import importlib.util
 
     from kafka_streams_plumber_spark.streaming.runner import PlumberJob
@@ -275,40 +287,28 @@ def test_demo_wire_plan_python_eval_count(spark, monkeypatch):
         output_key=parse_type("void"),
         output_value=parse_type(f"avro={demo}/example.desired.avsc"),
     )
-    rec = {"redundantField": 1, "notValid": True, "person": {"name": "A", "species": "b"},
-           "fingers_lh": 1, "fingers_rh": 2}
-    kv = spark.createDataFrame([(None, encode_record(rec, job.input_value.model))],
-                               "key binary, value binary")
-
-    def wire_plan():
-        src = kv.select(decode(kv["key"], job.input_key).alias("key"),
-                        decode(kv["value"], job.input_value).alias("value"))
-        out = job._transformed(src)
-        return out.select(encode(out["key"], job.output_key).alias("key"),
-                          encode(out["value"], job.output_value).alias("value"))
-
-    want = encode_record({"valid": False, "name": "a", "fingers": 3}, job.output_value.model)
-    for path, evals in [("jvm", 0), ("python", 2)]:
-        with monkeypatch.context() as m:
-            if not _use_codec(path, m):
-                continue
-            plan = wire_plan()
-            assert python_eval_count(plan) == evals, path
-            assert bytes(plan.collect()[0].value) == want, path
+    # {"redundantField": 1, "notValid": True, "person": {"name": "A",
+    # "species": "b"}, "fingers_lh": 1, "fingers_rh": 2} in, and
+    # {"valid": False, "name": "a", "fingers": 3} out
+    rec, want = bytes.fromhex("0201020402410262"), bytes.fromhex("00026106")
+    kv = spark.createDataFrame([(None, rec)], "key binary, value binary")
+    src = kv.select(decode(kv["key"], job.input_key).alias("key"),
+                    decode(kv["value"], job.input_value).alias("value"))
+    out = job._transformed(src)
+    plan = out.select(encode(out["key"], job.output_key).alias("key"),
+                      encode(out["value"], job.output_value).alias("value"))
+    assert python_eval_count(plan) == 0
+    assert bytes(plan.collect()[0].value) == want
 
 
-def test_schema_the_jvm_rejects_runs_on_the_python_codec(spark, caplog):
+def test_schema_avro_rejects_is_refused_when_the_plan_is_built(spark):
     """Avro's Java parser refuses a record name with a hyphen that the
-    Python schema model accepts; that schema falls back to the Python
-    codec with a warning instead of failing on the executors."""
+    Python schema model accepts; the plan is refused when it is built,
+    with Avro's message, instead of failing on the executors."""
     wt = WireType("avro", '{"type":"record","name":"my-rec","fields":[{"name":"n","type":"long"}]}')
-    df = spark.createDataFrame([(encode_record({"n": 5}, wt.model),)], "b binary")
-    with caplog.at_level(logging.WARNING, logger=jvm.__name__):
-        dec = df.select(decode(F.col("b"), wt).alias("v"))
-    assert python_eval_count(dec) == 1
-    assert dec.collect()[0].v == Row(n=5)
-    if jvm.codec_jar() is not None:
-        assert "rejects a schema" in caplog.text
+    df = spark.createDataFrame([(b"\x0a",)], "b binary")
+    with pytest.raises(ValueError, match="Avro rejects the schema: Illegal character in: my-rec"):
+        df.select(decode(F.col("b"), wt).alias("v"))
 
 
 @pytest.fixture
@@ -320,68 +320,55 @@ def jar_cache(tmp_path, monkeypatch):
     jvm.codec_jar.cache_clear()
 
 
-def test_codec_jar_warm_cache_skips_javac(jar_cache, monkeypatch):
+def test_codec_jar_cold_cache_compiles_with_janino(spark, jar_cache, monkeypatch):
+    """An empty cache compiles the source with Janino (so an edit that
+    leaves Janino's Java subset fails here), and a second process reuses
+    the jar."""
     compiles = []
     real = jvm._compile
     monkeypatch.setattr(jvm, "_compile", lambda *a: (compiles.append(a), real(*a))[1])
     first = jvm.codec_jar()
-    if first is None:
-        pytest.skip("no javac or no Avro jar")
     assert len(compiles) == 1 and first.startswith(str(jar_cache))
     assert os.listdir(jar_cache) == [os.path.basename(first)]  # no temp file left
+    with zipfile.ZipFile(first) as z:
+        assert {c.replace(".", "/") + ".class" for c in jvm.CLASSES.values()} <= set(z.namelist())
     jvm.codec_jar.cache_clear()  # a second process: only the disk cache is left
     assert jvm.codec_jar() == first and len(compiles) == 1
 
 
-def test_codec_jar_failed_compile_warns_once_and_falls_back(jar_cache, monkeypatch, caplog):
-    def broken(jar, jars_dir):
-        raise subprocess.CalledProcessError(1, "javac", stderr="AvroCodec.java:1: error: boom")
-
-    monkeypatch.setattr(jvm, "_compile", broken)
-    with caplog.at_level(logging.WARNING, logger=jvm.__name__):
-        assert jvm.codec_jar() is None
-        assert jvm.codec_jar() is None
-    assert [r.levelno for r in caplog.records] == [logging.WARNING]
-    assert "boom" in caplog.records[0].getMessage()
+def test_codec_jar_build_error_names_the_line(spark, jar_cache, monkeypatch, tmp_path):
+    """Java outside Janino's subset fails the build with Janino's message,
+    which names the line; no jar is left behind."""
+    src = tmp_path / "AvroCodec.java"
+    src.write_text("package plumber;\npublic final class AvroCodec {\n"
+                   "  static Runnable r = () -> {};\n}\n")
+    monkeypatch.setattr(jvm, "SOURCE", str(src))
+    with pytest.raises(Exception, match="Line 3"):
+        jvm.codec_jar()
+    assert not any(p.suffix in (".jar", ".part") for p in jar_cache.iterdir())
 
 
 def test_codec_jar_added_from_a_quoted_path(spark, jar_cache, monkeypatch):
     """A cache path holding a quote still reaches ``ADD JAR`` intact."""
     monkeypatch.setattr(jvm, "cache_dir", lambda: str(jar_cache / "it's"))
-    if jvm.codec_jar() is None:
-        pytest.skip("no javac or no Avro jar")
     monkeypatch.setattr(jvm, "_REGISTERED", jvm.weakref.WeakKeyDictionary())
     wt = WireType("avro", DEMO_AVSC)
-    df = spark.createDataFrame([(encode_record({"name": "q", "n": 2}, wt.model),)], "b binary")
-    dec = df.select(decode(F.col("b"), wt).alias("v"))
+    dec = spark.createDataFrame([(DEMO_ROEL,)], "b binary").select(decode(F.col("b"), wt).alias("v"))
     assert python_eval_count(dec) == 0
-    assert dec.collect()[0].v == Row(name="q", n=2)
+    assert dec.collect()[0].v == Row(name="roel", n=14)
 
 
-def test_codec_registration_failure_warns_and_falls_back(spark, monkeypatch, caplog):
-    """A class the session cannot load, or no active session, leaves the
-    plan on the Python codec with a warning instead of failing it."""
-    if jvm.codec_jar() is None:
-        pytest.skip("no javac or no Avro jar")
-    wt = WireType("avro", DEMO_AVSC)
-    df = spark.createDataFrame([(encode_record({"name": "f", "n": 3}, wt.model),)], "b binary")
-    monkeypatch.setattr(jvm, "_REGISTERED", jvm.weakref.WeakKeyDictionary())
-    monkeypatch.setitem(jvm.CLASSES, "decode", "plumber.NoSuchCodec")
-    with caplog.at_level(logging.WARNING, logger=jvm.__name__):
-        dec = df.select(decode(F.col("b"), wt).alias("v"))
-    assert "rejects a schema or the Avro codec class" in caplog.text
-    monkeypatch.undo()
+def test_avro_plan_without_a_session_is_refused(spark, monkeypatch):
+    """With no active session there is nowhere to register the codec:
+    the plan is refused when it is built, not run on a fallback."""
     from pyspark.sql import SparkSession
 
+    wt = WireType("avro", DEMO_AVSC)
+    df = spark.createDataFrame([(DEMO_ROEL,)], "b binary")
     monkeypatch.setattr(SparkSession, "getActiveSession", classmethod(lambda cls: None))
-    caplog.clear()
-    with caplog.at_level(logging.WARNING, logger=jvm.__name__):
-        dec2 = df.select(decode(F.col("b"), wt).alias("v"))
-    assert "no active Spark session" in caplog.text
-    monkeypatch.undo()
-    for plan in (dec, dec2):
-        assert python_eval_count(plan) == 1
-        assert plan.collect()[0].v == Row(name="f", n=3)
+    for build in (lambda: decode(F.col("b"), wt), lambda: encode(F.col("b"), wt)):
+        with pytest.raises(RuntimeError, match="needs an active Spark session"):
+            build()
 
 
 UNION_ENUM_AVSC = """
