@@ -60,11 +60,17 @@ public final class AvroCodec {
    * <p>With writers NULL the reader text is also the writer schema. Otherwise
    * the payload is Confluent-framed and writers maps each registered schema id
    * to [writer text, reader text for that writer], or to [the reason that
-   * writer cannot be read]; an id the map lacks fails naming the id.
+   * writer cannot be read]; an id the map lacks fails naming the id. The map
+   * is read on every row and the Readers are cached by their schema texts,
+   * so plans whose registries number their writers alike never share one.
    */
   public static final class Decode implements UDF4 {
-    private static final ThreadLocal PINNED = perThread();
-    private static final ThreadLocal REGISTRY = perThread();
+    /**
+     * Readers by their schema texts: a registry Reader by its [writer text,
+     * reader text] list, a pinned one by its reader text alone (a String
+     * never equals a List, so the two kinds of key cannot collide).
+     */
+    private static final ThreadLocal READERS = perThread();
 
     public Object call(Object payload, Object readerText, Object framed, Object writers) {
       if (payload == null) {
@@ -75,33 +81,22 @@ public final class AvroCodec {
       if (header && (b.length < 5 || b[0] != 0)) {
         throw new IllegalArgumentException("not a Confluent-framed avro message");
       }
-      Reader r;
-      if (writers == null) {
-        Map readers = (Map) PINNED.get();
-        r = (Reader) readers.get(readerText);
-        if (r == null) {
-          r = new Reader((String) readerText, (String) readerText);
-          readers.put(readerText, r);
-        }
-      } else {
-        Map byReader = (Map) REGISTRY.get();
-        Map readers = (Map) byReader.get(readerText);
-        if (readers == null) {
-          readers = new HashMap();
-          byReader.put(readerText, readers);
-        }
-        Integer id = Integer.valueOf(ByteBuffer.wrap(b, 1, 4).getInt());
-        r = (Reader) readers.get(id);
-        if (r == null) {
-          r = forWriter(id, (scala.collection.Map) writers);
-          readers.put(id, r);
-        }
+      Object[] texts = writers == null
+          ? new Object[] {readerText, readerText}
+          : forWriter(Integer.valueOf(ByteBuffer.wrap(b, 1, 4).getInt()), (scala.collection.Map) writers);
+      Object key = writers == null ? readerText : Arrays.asList(texts);
+      Map readers = (Map) READERS.get();
+      Reader r = (Reader) readers.get(key);
+      if (r == null) {
+        r = new Reader((String) texts[0], (String) texts[1]);
+        readers.put(key, r);
       }
       return r.decode(b, header ? 5 : 0);
     }
   }
 
-  private static Reader forWriter(Integer id, scala.collection.Map writers) {
+  /** writers' [writer text, reader text] for schema id ``id``. */
+  private static Object[] forWriter(Integer id, scala.collection.Map writers) {
     scala.Option entry = writers.get(id);
     if (entry.isEmpty()) {
       throw new IllegalArgumentException("avro payload: schema id " + id
@@ -112,7 +107,7 @@ public final class AvroCodec {
     if (texts.length() == 1) {
       throw new IllegalArgumentException((String) texts.apply(0));
     }
-    return new Reader((String) texts.apply(0), (String) texts.apply(1));
+    return new Object[] {texts.apply(0), texts.apply(1)};
   }
 
   /** (value, schema text, schema id or null) -> payload, Confluent-framed when an id is given. */

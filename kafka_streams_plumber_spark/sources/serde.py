@@ -175,14 +175,41 @@ def spark_type_of(wt: WireType):
     return spark_type(wt.model)
 
 
+def _kind(schema) -> str:
+    """A schema JSON's type: the name for a named reference or primitive,
+    ``"union"`` for a list."""
+    if isinstance(schema, list):
+        return "union"
+    return schema["type"] if isinstance(schema, dict) else schema
+
+
+def _pair(reader, writer):
+    """The schema ``writer`` (or, for a union, one of its branches) that
+    ``reader`` reads: the same type, a record by its name first; None when
+    there is none."""
+    options = writer if isinstance(writer, list) else [writer]
+    same = [w for w in options if _kind(w) == _kind(reader)]
+    if isinstance(reader, dict) and "name" in reader:
+        same.sort(key=lambda w: not isinstance(w, dict) or w.get("name") != reader["name"])
+    return same[0] if same else None
+
+
 def _null_fill(reader, writer):
     """``reader`` (schema JSON) with every record field ``writer`` lacks
-    that has no default made ``["null", T]`` with default null, at any
-    depth of inline records: the registry decode null-fills such a field,
-    as conform does for an absent field, where Avro's resolver would
-    refuse the writer."""
+    that has no default made ``["null", T]`` with default null, in the
+    records of union branches and array items at any depth too: the
+    registry decode null-fills such a field, as conform does for an absent
+    field, where Avro's resolver would refuse the writer."""
+    if isinstance(reader, list):
+        return [_null_fill(b, _pair(b, writer)) for b in reader]
+    if isinstance(writer, list):
+        writer = _pair(reader, writer)
     if not (isinstance(reader, dict) and isinstance(writer, dict)
-            and reader.get("type") == writer.get("type") == "record"):
+            and _kind(reader) == _kind(writer)):
+        return reader
+    if _kind(reader) == "array":
+        return {**reader, "items": _null_fill(reader["items"], writer["items"])}
+    if _kind(reader) != "record":
         return reader
     have = {f["name"]: f["type"] for f in writer["fields"]}
     fields = []
@@ -200,7 +227,10 @@ def _writers(wt: WireType, registry) -> Column:
     """The registry decode's id -> writer map, a ``map<int,array<string>>``
     literal over every version of ``wt``'s subject: [writer text, reader
     text for that writer] (:func:`_null_fill`), or [why the reader cannot
-    read it], raised when a record with that id arrives."""
+    read it], raised when a record with that id arrives. The pre-flight
+    here (``avsc.resolve``) only words that reason; Avro's resolving
+    reader in the JVM is the authority, so a writer it still refuses fails
+    its records as "truncated or corrupt"."""
     if wt.subject is None:
         raise ValueError("a registry decode needs the subject: pin the type "
                          "with resolve_registry_type()")

@@ -120,6 +120,80 @@ def test_registry_decode_heterogeneous_writers(spark):
     assert got == {(7, None), (8, "x"), None}
 
 
+def test_registry_decode_null_fills_nested_records(spark):
+    """A reader field without default that the writer lacks null-fills
+    inside a ["null", record] field (whether the writer's field is that
+    union or the bare record) and inside an array of records too."""
+    inner = {"type": "record", "name": "inner", "fields": [{"name": "x", "type": "long"}]}
+    item = {"type": "record", "name": "item", "fields": [{"name": "p", "type": "long"}]}
+
+    def schema(inner, item, optional=True):
+        return json.dumps({"type": "record", "name": "m", "fields": [
+            {"name": "a", "type": "long"},
+            {"name": "o", "type": ["null", inner] if optional else inner},
+            {"name": "l", "type": {"type": "array", "items": item}},
+        ]})
+
+    w1 = schema(inner, item)
+    w2 = schema(inner, item, optional=False)
+    reader = schema(
+        {**inner, "fields": inner["fields"] + [{"name": "y", "type": "string"}]},
+        {**item, "fields": item["fields"] + [{"name": "q", "type": "string"}]},
+    )
+    reg = FakeSchemaRegistry()
+    id1 = reg.register("n-value", w1)
+    id2 = reg.register("n-value", w2)
+    rid = reg.register("n-value", reader)
+    wt = resolve_registry_type(parse_type("avro"), reg, "n-value")
+
+    rows = [
+        (_framed(id1, w1, {"a": 1, "o": {"x": 2}, "l": [{"p": 3}, {"p": 4}]}),),
+        (_framed(id1, w1, {"a": 5, "o": None, "l": []}),),
+        (_framed(id2, w2, {"a": 6, "o": {"x": 7}, "l": [{"p": 8}]}),),
+        (_framed(rid, reader, {"a": 9, "o": {"x": 10, "y": "z"},
+                               "l": [{"p": 11, "q": "w"}]}),),
+    ]
+    df = spark.createDataFrame(rows, T.StructType([T.StructField("value", T.BinaryType())]))
+    got = {
+        (r.v.a, None if r.v.o is None else (r.v.o.x, r.v.o.y),
+         tuple((i.p, i.q) for i in r.v.l))
+        for r in df.select(decode(F.col("value"), wt, registry=reg).alias("v")).collect()
+    }
+    assert got == {
+        (1, (2, None), ((3, None), (4, None))),
+        (5, None, ()),
+        (6, (7, None), ((8, None),)),
+        (9, (10, "z"), ((11, "w"),)),
+    }
+
+
+def test_registry_decode_two_registries_with_the_same_ids(spark):
+    """Two registries both number their first writer 1, with different
+    schemas, under the same reader: each plan reads id 1 with its own
+    registry's writer, in one session (every executor thread has read
+    the first registry's id 1 before the second plan runs)."""
+    reader = json.dumps({"type": "record", "name": "m", "fields": [
+        {"name": "a", "type": ["null", "long"], "default": None},
+        {"name": "b", "type": ["null", "string"], "default": None},
+    ]})
+    out = []
+    for field, ftype, value in (("a", "long", 7), ("b", "string", "x")):
+        writer = json.dumps({"type": "record", "name": "m",
+                             "fields": [{"name": field, "type": ftype}]})
+        reg = FakeSchemaRegistry()
+        wid = reg.register("m-value", writer)
+        reg.register("m-value", reader)
+        assert wid == 1
+        wt = resolve_registry_type(parse_type("avro"), reg, "m-value")
+        df = spark.createDataFrame(
+            [(_framed(wid, writer, {field: value}),)] * 64,
+            T.StructType([T.StructField("value", T.BinaryType())]),
+        ).repartition(8)
+        v = decode(F.col("value"), wt, registry=reg)
+        out.append({(r.v.a, r.v.b) for r in df.select(v.alias("v")).collect()})
+    assert out == [{(7, None)}, {(None, "x")}]
+
+
 def test_registry_encode_frames_with_registered_id(spark):
     reg = FakeSchemaRegistry()
     sid = reg.register("out-value", V1)
