@@ -11,7 +11,8 @@ total).
 ``python bench.py NAME[=SF_DIR] ...`` re-measures single queries for
 anomaly adjudication: each NAME runs in a fresh session, timed with
 construction + write, at SF_DIR (default $SPARK_GRAFT_SF_DIR). It prints
-one JSON line per query (``reps``, ``min``, ``sf_dir``,
+one JSON line per query (``reps``, ``min``, ``compiles``: the classes
+the last rep compiled from generated code, ``sf_dir``,
 ``load1_before``), the per-stage duration/tasks/shuffle table of the
 last rep from the UI REST API, and a closing ``summary`` line.
 
@@ -39,6 +40,7 @@ from typing import Callable, NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from kafka_streams_plumber_spark.plans.inspect import codegen_compiles  # noqa: E402
 from kafka_streams_plumber_spark.plans.session import get_spark  # noqa: E402
 from kafka_streams_plumber_spark.queries import QUERIES  # noqa: E402
 
@@ -152,9 +154,19 @@ def best_of(build: Callable, reps: int, *, include_construction: bool) -> float:
 
 def _warm(spark, names, sf_dir: str) -> None:
     """Run each plan once at the smallest SF available (else the bench
-    dir). Whole-stage codegen compiles per plan shape, not per dataset,
-    so this makes the measurement steady-state cost instead of one-time
-    JIT compile latency."""
+    dir), so the timed reps skip most first-run costs: Janino compiling
+    the plan's generated classes, class loading, JIT. Generated code
+    depends on the plan's shape, not on the data, but only while the
+    classes stay in Spark's codegen cache
+    (``plans.session.CODEGEN_CACHE_ENTRIES``). Compiles counted in a
+    full run with the bench dir at sf0.01: the warm pass compiles
+    about 1.66k classes; the timed writes then compile about 100 on the
+    first rep (plans whose shape differs at the bench scale, where AQE
+    picks another join or partitioning), about 40 on the second and 16
+    on the third (plans that build new code on every run). At Spark's
+    default of 100 classes the warm pass evicted itself: the first timed
+    rep recompiled about 1.95k classes, and the best of three came from
+    the later reps, which find their own query's classes still cached."""
     warm_dir = sf_dir
     if os.path.isdir(WARM_DIR) and os.path.abspath(WARM_DIR) != os.path.abspath(sf_dir):
         warm_dir = WARM_DIR
@@ -370,11 +382,16 @@ def measure_each(args: list[str]) -> None:
         times = []
         for _ in range(reps):
             before = {s["stageId"] for s in _stages(spark)}
+            compiles = codegen_compiles(spark)
             t = best_of(lambda: QUERIES[name](spark, sf_dir), 1, include_construction=True)
             times.append(round(t, 3))
+            compiles = codegen_compiles(spark) - compiles
         stage_lines = _stage_table(spark, before)
         spark.stop()
-        out[name] = {"reps": times, "min": min(times), "sf_dir": sf_dir, "load1_before": load1}
+        out[name] = {
+            "reps": times, "min": min(times), "compiles": compiles,
+            "sf_dir": sf_dir, "load1_before": load1,
+        }
         print(json.dumps({name: out[name]}))
         print("\n".join(stage_lines), flush=True)
     print(json.dumps({"summary": out}))

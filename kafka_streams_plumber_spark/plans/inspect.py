@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def plan_string(df: DataFrame) -> str:
@@ -93,3 +93,12 @@ def python_eval_count(df: DataFrame) -> int:
     every pure-expression operator in this engine."""
     p = plan_string(df)
     return p.count("BatchEvalPython") + p.count("ArrowEvalPython")
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the JVM behind ``spark`` has compiled from generated code
+    so far (Spark's ``CodegenMetrics`` compile count, driver and
+    local-mode executors together). A warm plan whose classes are still
+    in the codegen cache adds 0."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -5,6 +5,20 @@ for runtime re-planning (skew joins, partition coalescing), Arrow for any
 pandas-UDF hop, and a UTC session timezone so timestamp semantics are
 deterministic across engines (our DuckDB oracle treats naive parquet
 timestamps as UTC).
+
+Generated-code cache: Spark keeps at most ``spark.sql.codegen.cache.maxEntries``
+compiled classes (default 100) in one LRU per JVM, and one warm pass of
+perfbench's ``queries`` workload needs about 205. At 100 every class is
+evicted before its next use, so each warm pass recompiled every class
+with Janino (7-12 ms each) and ran the fresh classes un-JITted.
+:data:`CODEGEN_CACHE_ENTRIES` sizes the cache to hold a whole pass. It
+is a static conf, read once per JVM when ``CodeGenerator`` loads, so it
+rides the builder in :func:`get_spark`; :func:`tune` cannot apply it to a
+session someone else built (the driver contract's ``entry(spark)`` keeps
+Spark's 100). Memory cost: after one pass over all 316 ``QUERIES`` at
+sf0.001, heap in use after GC was 291 MB and Metaspace 216 MB at 4096
+entries, against 166 MB and 184 MB at 100, so about 40 KB per cached
+class. A session holds only the classes its plans used.
 """
 
 from __future__ import annotations
@@ -25,6 +39,13 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+#: Capacity of Spark's generated-code cache (see the module doc). Distinct
+#: classes counted: one perfbench ``queries`` pass about 205; bench.py's
+#: warm pass 1.66k at sf0.001 plus 110 more in a timed pass at sf0.1; one
+#: pass over all 316 QUERIES 5.1k. 2048 would leave bench.py's 1.77k less
+#: than 25% headroom.
+CODEGEN_CACHE_ENTRIES = 4096
 
 #: Runtime confs safe to set on an existing session (used by the driver
 #: contract in __spark_entry__.py, where the session is handed to us).
@@ -70,6 +91,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.driver.memory", driver_mem)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or (int(cpus) if cpus.isdigit() else 32)),

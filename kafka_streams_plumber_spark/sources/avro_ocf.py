@@ -20,9 +20,9 @@ Scale design: one task per archive via ``binaryFile`` (the
 sources/warc.py pattern) — OCF blocks are sequential within a file, so
 the parallel unit is the file, which is how these dumps are produced
 (many ~100 MB objects). Corrupt files fail closed: ``strict=False``
-(default) turns a file that fails its magic, a sync marker, a decode or
-ends mid-block into ONE audit row with ``_corrupt`` set; ``strict=True``
-raises.
+(default) turns a file that is empty, fails its magic, a sync marker, a
+decode or ends mid-block into ONE audit row with ``_corrupt`` set;
+``strict=True`` raises.
 """
 
 from __future__ import annotations
@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_streams_plumber_spark import jvm
+from kafka_streams_plumber_spark.plans.scale import inline_table
 from kafka_streams_plumber_spark.sources.avsc import avsc_to_struct
 
 
@@ -58,7 +59,14 @@ def read_avro_ocf(
     text = reader_schema if isinstance(reader_schema, str) else json.dumps(reader_schema)
     struct = avsc_to_struct(text)
     name = jvm.avro_function("ocf", text, T.ArrayType(struct))
-    files = spark.read.format("binaryFile").load(path)
+    listed = spark.read.format("binaryFile").load(path)
+    files = listed.select("path", "content")
+    empty = _empty_files(listed)
+    if empty:
+        # Spark's file scan drops zero-byte files before binaryFile reads
+        # them; hand them to the codec as empty content, so each gives its
+        # marker row (or fails a strict read) like any unreadable file
+        files = files.union(inline_table(spark, [(p, b"") for p in empty], files.schema))
     recs = F.call_function(name, files["content"], F.lit(text), F.lit(strict))
     # an unreadable file's NULL becomes its one all-NULL marker row; a
     # readable file with no records gives no row
@@ -68,3 +76,17 @@ def read_avro_ocf(
         F.col("_recs").isNull().alias("_corrupt"),
     )
     return rows.select("_rec.*", "_path", "_corrupt")
+
+
+def _empty_files(listed: DataFrame) -> list[str]:
+    """Paths of the zero-byte files in a ``binaryFile`` frame's file
+    index: the listing Spark already holds in memory, so no file is
+    stat'ed again."""
+    index = listed._jdf.queryExecution().analyzed().relation().location()  # noqa: SLF001
+    it = index.allFiles().iterator()
+    out = []
+    while it.hasNext():
+        status = it.next()
+        if status.getLen() == 0:
+            out.append(status.getPath().toString())
+    return out

@@ -143,6 +143,25 @@ def test_read_avro_ocf_corrupt_file_dead_letters(spark, tmp_path):
     assert bad[0]["_path"].endswith("trash.avro")
 
 
+def test_read_avro_ocf_empty_file_dead_letters(spark, tmp_path):
+    """Spark's file scan drops a zero-byte file before binaryFile reads
+    it; the reader still gives it its marker row, and a strict read
+    fails on it."""
+    d = tmp_path / "empty"
+    d.mkdir()
+    (d / "good.avro").write_bytes(write_ocf_bytes(RECORDS[:3], SCHEMA))
+    (d / "empty.avro").write_bytes(b"")
+    rows = read_avro_ocf(spark, str(d), SCHEMA).collect()
+    good = [r for r in rows if not r["_corrupt"]]
+    bad = [r for r in rows if r["_corrupt"]]
+    assert sorted(r["id"] for r in good) == [0, 1, 2]
+    assert len(bad) == 1 and bad[0]["_path"].endswith("empty.avro")
+    assert bad[0]["id"] is None and bad[0]["text"] is None
+    assert read_avro_ocf(spark, str(d / "empty.avro"), SCHEMA).count() == 1
+    with pytest.raises(Exception, match="unreadable Avro container file"):
+        read_avro_ocf(spark, str(d), SCHEMA, strict=True).collect()
+
+
 def test_read_avro_ocf_midfile_corruption_discards_prefix(spark, tmp_path):
     """A file that decodes N rows and THEN hits corruption must surface
     as exactly ONE marker row — the already-decoded prefix is discarded

@@ -8,6 +8,7 @@ import pytest
 
 from kafka_streams_plumber_spark.plans.inspect import (
     broadcast_join_count,
+    codegen_compiles,
     codegen_span_count,
     pushed_filters,
     python_eval_count,
@@ -657,3 +658,21 @@ def test_funnel_event_exchange_actually_reused(spark):
         ]
         assert len(mat) == 1, (name, mat)
         assert len(reused) >= 1, name
+
+
+def test_warm_plans_reuse_generated_code(spark):
+    """A second run of 150 plans, each with its own generated code,
+    compiles nothing: get_spark sizes Spark's codegen cache to hold a
+    whole query pass. At Spark's default of 100 classes the LRU evicts
+    every class before its next use and the second round recompiles all
+    of them."""
+    from pyspark.sql import functions as F
+
+    def run_all() -> int:
+        before = codegen_compiles(spark)
+        for k in range(150):
+            spark.range(8).select(F.col("id") * k + k).collect()
+        return codegen_compiles(spark) - before
+
+    assert run_all() > 100  # more classes than Spark's default cache holds
+    assert run_all() == 0
