@@ -7,9 +7,12 @@ import java.util.ArrayList;
 import java.util.Arrays;
 import java.util.Collection;
 import java.util.HashMap;
+import java.util.HashSet;
 import java.util.List;
 import java.util.Map;
+import java.util.Set;
 
+import org.apache.avro.Resolver;
 import org.apache.avro.Schema;
 import org.apache.avro.file.DataFileReader;
 import org.apache.avro.file.SeekableByteArrayInput;
@@ -23,8 +26,7 @@ import org.apache.avro.io.DecoderFactory;
 import org.apache.avro.io.EncoderFactory;
 import org.apache.spark.sql.Row;
 import org.apache.spark.sql.RowFactory;
-import org.apache.spark.sql.api.java.UDF3;
-import org.apache.spark.sql.api.java.UDF4;
+import org.apache.spark.sql.api.java.UDF1;
 
 /**
  * The Avro codec as Spark Java UDFs, so decode, encode and container-file
@@ -33,135 +35,224 @@ import org.apache.spark.sql.api.java.UDF4;
  * <p>Values take the Spark shape sources/avsc.py and conform's spark_type
  * give a schema: records are Rows, enums are strings, bytes are byte[], a
  * [null, T] union is a nullable T and an N-way union is a Row with one slot
- * per non-null branch, only the written branch set. Schema texts are
- * arguments, so the UDFs need nothing but their arguments on an executor;
- * each thread parses one reader or writer per schema text and keeps it.
+ * per non-null branch, only the written branch set. Each UDF takes one
+ * column; its schemas are constructor arguments, held parsed (a Schema is
+ * Serializable), so they ship with the plan, not with every row. Each task
+ * gets its own copy of a UDF and builds its Readers and Writers on first
+ * use; call is synchronized, as the driver's copy can run too (the
+ * optimizer folding a local relation). {@link #problems} is the package's
+ * only schema-resolution check, the verdicts of Avro's own Resolver.
  *
  * <p>The source stays inside the Java subset Janino compiles: raw generic
  * types with casts, anonymous classes instead of lambdas and method
- * references, one exception type per catch, and call(Object...) methods,
+ * references, one exception type per catch, and call(Object) methods,
  * because Janino emits no bridge methods.
  */
 public final class AvroCodec {
   private AvroCodec() {}
 
-  /** A thread-local HashMap, the per-thread cache of each UDF. */
-  static ThreadLocal perThread() {
-    return new ThreadLocal() {
-      protected Object initialValue() {
-        return new HashMap();
+  /**
+   * Why data written with writerText cannot be read as readerText, one
+   * reason each, led by its reader path ($.inner.x); none when it can: each
+   * error action of the tree Avro's Resolver builds (which is what
+   * GenericDatumReader(writer, reader) runs), and each writer enum symbol
+   * the reader lacks and has no default for.
+   */
+  public static String[] problems(String readerText, String writerText) {
+    Schema reader = new Schema.Parser().parse(readerText);
+    Schema writer = new Schema.Parser().parse(writerText);
+    List out = new ArrayList();
+    walk(Resolver.resolve(writer, reader, GenericData.get()), "$", out, new HashSet());
+    return (String[]) out.toArray(new String[0]);
+  }
+
+  /** Adds action a's problems at path to out; on holds what is being walked. */
+  private static void walk(Resolver.Action a, String path, List out, Set on) {
+    if (!on.add(a)) {
+      return; // a recursive record's action refers back to itself
+    }
+    if (a instanceof Resolver.ErrorAction) {
+      error((Resolver.ErrorAction) a, path, out, on);
+    } else if (a instanceof Resolver.EnumAdjust) {
+      int[] to = ((Resolver.EnumAdjust) a).adjustments;
+      List missing = new ArrayList();
+      for (int i = 0; i < to.length; i++) {
+        if (to[i] < 0) {
+          missing.add("'" + a.writer.getEnumSymbols().get(i) + "'");
+        }
       }
-    };
+      if (!missing.isEmpty()) {
+        out.add(path + ": writer enum symbols " + missing + " absent from reader");
+      }
+    } else if (a instanceof Resolver.Container) {
+      walk(((Resolver.Container) a).elementAction, path + ".items", out, on);
+    } else if (a instanceof Resolver.RecordAdjust) {
+      // the writer's fields, renamed to the reader's by its aliases
+      Resolver.Action[] fields = ((Resolver.RecordAdjust) a).fieldActions;
+      for (int i = 0; i < fields.length; i++) {
+        walk(fields[i], path + "." + ((Schema.Field) a.writer.getFields().get(i)).name(), out, on);
+      }
+    } else if (a instanceof Resolver.WriterUnion) {
+      for (Object branch : ((Resolver.WriterUnion) a).actions) {
+        walk((Resolver.Action) branch, path, out, on);
+      }
+    } else if (a instanceof Resolver.ReaderUnion) {
+      walk(((Resolver.ReaderUnion) a).actualAction, path, out, on);
+    } // else nothing to do: a promotion or a skipped writer field
+    on.remove(a);
+  }
+
+  private static void error(Resolver.ErrorAction e, String path, List out, Set on) {
+    String writer = "writer '" + e.writer.getType().getName() + "'";
+    switch (e.error) {
+      case MISSING_REQUIRED_FIELD:
+        // the Resolver stops a record at its first missing field: name
+        // each one, and resolve the fields both records have as well
+        if (on.add(e.reader)) { // else a recursive record
+          for (Object o : e.reader.getFields()) {
+            Schema.Field r = (Schema.Field) o;
+            Schema.Field w = e.writer.getField(r.name());
+            if (w != null) {
+              walk(Resolver.resolve(w.schema(), r.schema(), GenericData.get()), path + "." + r.name(), out, on);
+            } else if (!r.hasDefaultValue()) {
+              out.add(path + "." + r.name() + ": reader field absent from writer and has no default");
+            }
+          }
+          on.remove(e.reader);
+        }
+        break;
+      case INCOMPATIBLE_SCHEMA_TYPES:
+        out.add(path + ": " + writer + " cannot promote to reader '" + e.reader.getType().getName() + "'");
+        break;
+      case NO_MATCHING_BRANCH:
+        out.add(path + ": " + writer + " matches no branch of the reader union");
+        break;
+      default: // names or fixed sizes differ
+        out.add(path + ": " + e);
+    }
   }
 
   /**
-   * (payload, reader schema text, Confluent-framed, writers) -> decoded value.
+   * payload -> decoded value, read with the reader schema.
    *
-   * <p>With writers NULL the reader text is also the writer schema. Otherwise
-   * the payload is Confluent-framed and writers maps each registered schema id
-   * to [writer text, reader text for that writer], or to [the reason that
-   * writer cannot be read]; an id the map lacks fails naming the id. The map
-   * is read on every row and the Readers are cached by their schema texts,
-   * so plans whose registries number their writers alike never share one.
+   * <p>Without writers the reader is also the writer schema, and the payload
+   * carries the Confluent header when framed. With writers (a registry
+   * decode) every payload is framed, and writers maps each registered schema
+   * id to [writer text, reader text for that writer]; the constructor, on
+   * the driver, keeps instead the reason for each writer {@link #problems}
+   * refuses, raised when a record with that id arrives. An id the map lacks
+   * fails naming the id.
    */
-  public static final class Decode implements UDF4 {
-    /**
-     * Readers by their schema texts: a registry Reader by its [writer text,
-     * reader text] list, a pinned one by its reader text alone (a String
-     * never equals a List, so the two kinds of key cannot collide).
-     */
-    private static final ThreadLocal READERS = perThread();
+  public static final class Decode implements UDF1 {
+    private final boolean framed;
+    private final boolean byId;
+    /** schema id, or null for the reader alone -> [writer, reader] or why it cannot be read */
+    private final HashMap writers = new HashMap();
+    private transient HashMap readers;
 
-    public Object call(Object payload, Object readerText, Object framed, Object writers) {
+    public Decode(String readerText, boolean framed, Map writers) {
+      Schema reader = new Schema.Parser().parse(readerText);
+      this.byId = writers != null;
+      this.framed = framed || byId;
+      if (!byId) {
+        this.writers.put(null, new Schema[] {reader, reader});
+        return;
+      }
+      for (Object o : writers.entrySet()) {
+        Map.Entry e = (Map.Entry) o;
+        Integer id = Integer.valueOf(((Number) e.getKey()).intValue());
+        String w = (String) ((List) e.getValue()).get(0);
+        String r = (String) ((List) e.getValue()).get(1);
+        String[] problems = problems(r, w);
+        this.writers.put(id, problems.length == 0
+            ? (Object) new Schema[] {new Schema.Parser().parse(w), new Schema.Parser().parse(r)}
+            : "avro payload: schema id " + id + ": reader schema cannot read writer data:\n  "
+                + String.join("\n  ", Arrays.asList(problems)));
+      }
+    }
+
+    public synchronized Object call(Object payload) {
       if (payload == null) {
         return null;
       }
       byte[] b = (byte[]) payload;
-      boolean header = writers != null || ((Boolean) framed).booleanValue();
-      if (header && (b.length < 5 || b[0] != 0)) {
+      if (framed && (b.length < 5 || b[0] != 0)) {
         throw new IllegalArgumentException("not a Confluent-framed avro message");
       }
-      Object[] texts = writers == null
-          ? new Object[] {readerText, readerText}
-          : forWriter(Integer.valueOf(ByteBuffer.wrap(b, 1, 4).getInt()), (scala.collection.Map) writers);
-      Object key = writers == null ? readerText : Arrays.asList(texts);
-      Map readers = (Map) READERS.get();
-      Reader r = (Reader) readers.get(key);
-      if (r == null) {
-        r = new Reader((String) texts[0], (String) texts[1]);
-        readers.put(key, r);
+      Integer id = byId ? Integer.valueOf(ByteBuffer.wrap(b, 1, 4).getInt()) : null;
+      if (readers == null) {
+        readers = new HashMap();
       }
-      return r.decode(b, header ? 5 : 0);
+      Reader r = (Reader) readers.get(id);
+      if (r == null) {
+        Object schemas = writers.get(id);
+        if (schemas == null) {
+          throw new IllegalArgumentException("avro payload: schema id " + id
+              + " is not a version of the subject the plan was built with"
+              + " (a writer registered after that needs a restart)");
+        }
+        if (schemas instanceof String) {
+          throw new IllegalArgumentException((String) schemas);
+        }
+        r = new Reader(((Schema[]) schemas)[0], ((Schema[]) schemas)[1]);
+        readers.put(id, r);
+      }
+      return r.decode(b, framed ? 5 : 0);
     }
   }
 
-  /** writers' [writer text, reader text] for schema id ``id``. */
-  private static Object[] forWriter(Integer id, scala.collection.Map writers) {
-    scala.Option entry = writers.get(id);
-    if (entry.isEmpty()) {
-      throw new IllegalArgumentException("avro payload: schema id " + id
-          + " is not a version of the subject the plan was built with"
-          + " (a writer registered after that needs a restart)");
-    }
-    scala.collection.Seq texts = (scala.collection.Seq) entry.get();
-    if (texts.length() == 1) {
-      throw new IllegalArgumentException((String) texts.apply(0));
-    }
-    return new Object[] {texts.apply(0), texts.apply(1)};
-  }
+  /** value -> payload, Confluent-framed with schemaId unless it is null. */
+  public static final class Encode implements UDF1 {
+    private final Schema schema;
+    private final byte[] header;
+    private transient GenericDatumWriter writer;
+    private transient ByteArrayOutputStream out;
+    private transient BinaryEncoder encoder;
 
-  /** (value, schema text, schema id or null) -> payload, Confluent-framed when an id is given. */
-  public static final class Encode implements UDF3 {
-    private static final ThreadLocal WRITERS = perThread();
+    public Encode(String text, Integer schemaId) {
+      schema = new Schema.Parser().parse(text);
+      header = schemaId == null ? new byte[0]
+          : ByteBuffer.allocate(5).put((byte) 0).putInt(schemaId.intValue()).array();
+    }
 
-    public Object call(Object value, Object schemaText, Object schemaId) throws IOException {
+    public synchronized Object call(Object value) throws IOException {
       if (value == null) {
         return null;
       }
-      Map writers = (Map) WRITERS.get();
-      Writer w = (Writer) writers.get(schemaText);
-      if (w == null) {
-        w = new Writer((String) schemaText);
-        writers.put(schemaText, w);
+      if (writer == null) {
+        writer = new GenericDatumWriter(schema);
+        out = new ByteArrayOutputStream();
       }
-      w.out.reset();
-      if (schemaId != null) {
-        int id = ((Integer) schemaId).intValue();
-        w.out.write(0);
-        w.out.write(id >>> 24);
-        w.out.write(id >>> 16);
-        w.out.write(id >>> 8);
-        w.out.write(id);
-      }
-      w.encoder = EncoderFactory.get().directBinaryEncoder(w.out, w.encoder);
-      w.writer.write(toAvro(value, w.schema), w.encoder);
-      return w.out.toByteArray();
+      out.reset();
+      out.write(header);
+      encoder = EncoderFactory.get().directBinaryEncoder(out, encoder);
+      writer.write(toAvro(value, schema), encoder);
+      return out.toByteArray();
     }
   }
 
   /**
-   * (container file bytes, reader schema text, strict) -> the file's records
-   * as an array of reader-shaped Rows, each resolved from the file's own
-   * writer schema. A file that cannot be read whole gives NULL, or fails the
-   * query when strict.
+   * container file bytes -> the file's records as an array of reader-shaped
+   * Rows, each resolved from the file's own writer schema. A file that
+   * cannot be read whole gives NULL, or fails the query when strict.
    */
-  public static final class ReadContainer implements UDF3 {
-    private static final ThreadLocal SCHEMAS = perThread();
+  public static final class ReadContainer implements UDF1 {
+    private final Schema schema;
+    private final boolean strict;
 
-    public Object call(Object content, Object readerText, Object strict) {
+    public ReadContainer(String readerText, boolean strict) {
+      this.schema = new Schema.Parser().parse(readerText);
+      this.strict = strict;
+    }
+
+    public Object call(Object content) {
       if (content == null) {
         return null;
-      }
-      Map schemas = (Map) SCHEMAS.get();
-      Schema schema = (Schema) schemas.get(readerText);
-      if (schema == null) {
-        schema = new Schema.Parser().parse((String) readerText);
-        schemas.put(readerText, schema);
       }
       try {
         return readAll((byte[]) content, schema);
       } catch (Exception e) {
-        if (((Boolean) strict).booleanValue()) {
+        if (strict) {
           throw new IllegalArgumentException("unreadable Avro container file: " + e, e);
         }
         return null;
@@ -199,10 +290,9 @@ public final class AvroCodec {
     BinaryDecoder decoder;
     Object reuse;
 
-    Reader(String writerText, String readerText) {
-      schema = new Schema.Parser().parse(readerText);
-      Schema writer = writerText.equals(readerText) ? schema : new Schema.Parser().parse(writerText);
-      reader = new GenericDatumReader(writer, schema);
+    Reader(Schema writer, Schema reader) {
+      schema = reader;
+      this.reader = new GenericDatumReader(writer, reader);
     }
 
     Object decode(byte[] payload, int off) {
@@ -219,18 +309,6 @@ public final class AvroCodec {
         throw new IllegalArgumentException("avro payload: " + left + " trailing bytes");
       }
       return toSpark(reuse, schema);
-    }
-  }
-
-  private static final class Writer {
-    final Schema schema;
-    final GenericDatumWriter writer;
-    final ByteArrayOutputStream out = new ByteArrayOutputStream();
-    BinaryEncoder encoder;
-
-    Writer(String text) {
-      schema = new Schema.Parser().parse(text);
-      writer = new GenericDatumWriter(schema);
     }
   }
 

@@ -13,11 +13,13 @@ then rename). The source must stay inside the Java subset Janino compiles
 (see its class comment).
 
 Registration is lazy: the first Avro plan a session builds runs
-``ADD JAR`` and registers one function per kind and schema (by hash), so
-a session that never touches Avro pays nothing. Functions live in the
-session active on the calling thread, so build and run an Avro plan on
-that session; with none active, or a schema Avro's parser rejects, the
-plan is refused when it is built.
+``ADD JAR``, so a session that never touches Avro pays nothing, and each
+set of constructor arguments (a kind's schemas) registers one function
+instance, named by their hash, whose only argument is its column.
+Functions live in the session active on the calling thread, so build and
+run an Avro plan on that session; with none active, or a schema Avro's
+parser rejects, the plan is refused when it is built. :func:`problems`,
+the schema-resolution verdicts, needs the active session too.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ from __future__ import annotations
 import functools
 import glob
 import hashlib
+import json
 import os
 import tempfile
 import weakref
@@ -87,29 +90,54 @@ def codec_jar() -> str:
     return jar
 
 
-def avro_function(kind: str, avsc: str, return_type) -> str:
-    """The name of the active session's Java ``kind`` function ('decode',
-    'encode' or 'ocf') for schema ``avsc``, registering it (and adding the
-    jar) on first use. ValueError, with Avro's message, when Avro's parser
-    rejects ``avsc``; RuntimeError when no session is active."""
-    from py4j.protocol import Py4JJavaError
+def _session():
+    """The active session, the codec jar added to it on first use."""
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
     if spark is None:
         raise RuntimeError("an Avro plan needs an active Spark session: build and run it on one")
-    name = f"plumber_avro_{kind}_{hashlib.sha256(avsc.encode()).hexdigest()[:16]}"
-    done = _REGISTERED.setdefault(spark, set())
+    if spark not in _REGISTERED:
+        quoted = codec_jar().replace("\\", "\\\\").replace("'", "\\'")
+        spark.sql(f"ADD JAR '{quoted}'")
+        _REGISTERED[spark] = set()
+    return spark
+
+
+def _reflect(spark, owner: str, method: str | None, *args):
+    """The codec class ``owner``'s static ``method``, or its constructor,
+    called with ``args``; ValueError, with Avro's message, if it throws."""
+    from py4j.protocol import Py4JJavaError
+
+    cls = spark._jsparkSession.sharedState().jarClassLoader().loadClass(owner)  # noqa: SLF001
+    jargs = spark._jvm.java.util.ArrayList(list(args)).toArray()  # noqa: SLF001
+    try:
+        if method is None:
+            return cls.getConstructors()[0].newInstance(jargs)
+        return next(m for m in cls.getMethods() if m.getName() == method).invoke(None, jargs)
+    except Py4JJavaError as e:  # what the reflected call threw is its cause
+        cause = e.java_exception.getCause() or e.java_exception
+        raise ValueError(f"Avro rejects the schema: {cause.getMessage()}") from None
+
+
+def problems(reader: str, writer: str) -> list[str]:
+    """``AvroCodec.problems``: why ``writer``'s data cannot be read as ``reader``."""
+    return list(_reflect(_session(), "plumber.AvroCodec", "problems", reader, writer))
+
+
+def avro_function(kind: str, return_type, *args) -> str:
+    """The name of the active session's Java ``kind`` function ('decode',
+    'encode' or 'ocf') built with constructor ``args``, named by their
+    hash and registered (the jar added) on first use. ValueError, with
+    Avro's message, when Avro rejects a schema; RuntimeError when no
+    session is active."""
+    spark = _session()
+    digest = hashlib.sha256(json.dumps([kind, *args]).encode()).hexdigest()[:16]
+    name = f"plumber_avro_{kind}_{digest}"
+    done = _REGISTERED[spark]
     if name not in done:
-        try:
-            spark._jvm.org.apache.avro.Schema.Parser().parse(avsc)  # noqa: SLF001
-        except Py4JJavaError as e:
-            raise ValueError(f"Avro rejects the schema: {e.java_exception.getMessage()}") from None
         jspark = spark._jsparkSession  # noqa: SLF001
-        if not done:
-            quoted = codec_jar().replace("\\", "\\\\").replace("'", "\\'")
-            spark.sql(f"ADD JAR '{quoted}'")
-        udf = jspark.sharedState().jarClassLoader().loadClass(CLASSES[kind]).newInstance()
+        udf = _reflect(spark, CLASSES[kind], None, *args)
         jspark.udf().register(name, udf, jspark.parseDataType(return_type.json()))
         done.add(name)
     return name

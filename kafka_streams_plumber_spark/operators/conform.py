@@ -35,8 +35,7 @@ through a coercion no reference test exercises.
 
 from __future__ import annotations
 
-import enum
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -80,35 +79,17 @@ class Union:
         return any(_is_null(b) for b in self.branches)
 
 
-class _NoDefault(enum.Enum):
-    """``Field.default`` when the schema declares none (``None`` is a
-    real Avro default); an enum member, so it pickles by reference."""
-
-    NO_DEFAULT = 0
-
-    def __repr__(self) -> str:
-        return "NO_DEFAULT"
-
-
-NO_DEFAULT = _NoDefault.NO_DEFAULT
-
-
 @dataclass(frozen=True)
 class Field:
     name: str
     type: object  # DataType | Enum | Union | Record | Array
     nullable: bool = True
-    # declared Avro JSON default; not part of the type, so not compared
-    default: object = field(default=NO_DEFAULT, compare=False)
 
 
 @dataclass(frozen=True)
 class Record:
     fields: tuple[Field, ...]
     name: str = "record"
-
-    def field_map(self) -> dict[str, Field]:
-        return {f.name: f for f in self.fields}
 
 
 @dataclass(frozen=True)

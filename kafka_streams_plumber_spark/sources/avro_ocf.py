@@ -58,7 +58,7 @@ def read_avro_ocf(
     """
     text = reader_schema if isinstance(reader_schema, str) else json.dumps(reader_schema)
     struct = avsc_to_struct(text)
-    name = jvm.avro_function("ocf", text, T.ArrayType(struct))
+    name = jvm.avro_function("ocf", T.ArrayType(struct), text, strict)
     listed = spark.read.format("binaryFile").load(path)
     files = listed.select("path", "content")
     empty = _empty_files(listed)
@@ -67,7 +67,7 @@ def read_avro_ocf(
         # them; hand them to the codec as empty content, so each gives its
         # marker row (or fails a strict read) like any unreadable file
         files = files.union(inline_table(spark, [(p, b"") for p in empty], files.schema))
-    recs = F.call_function(name, files["content"], F.lit(text), F.lit(strict))
+    recs = F.call_function(name, files["content"])
     # an unreadable file's NULL becomes its one all-NULL marker row; a
     # readable file with no records gives no row
     rows = files.select(recs.alias("_recs"), files["path"].alias("_path")).select(

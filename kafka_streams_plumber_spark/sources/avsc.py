@@ -10,7 +10,8 @@ extension (BinaryType; the reference throws NotImplementedError,
 LuaMapper.scala:27). ``map``/``fixed``/logical types raise, matching the
 reference's explicit non-support (LuaMapper.scala:112).
 
-No Avro library needed: .avsc is plain JSON.
+The model needs no Avro library: .avsc is plain JSON. Schema resolution
+(:func:`schema_incompatibilities`) is Avro's own, in the JVM codec.
 """
 
 from __future__ import annotations
@@ -20,8 +21,8 @@ from typing import Any
 
 from pyspark.sql import types as T
 
+from kafka_streams_plumber_spark import jvm
 from kafka_streams_plumber_spark.operators.conform import (
-    NO_DEFAULT,
     Array,
     Enum,
     Field,
@@ -46,16 +47,18 @@ class UnsupportedAvroType(NotImplementedError):
     """Parity with LuaMapper.scala:27,112 — map/fixed/logical types."""
 
 
+def _loads(schema: str | dict | list) -> object:
+    """.avsc JSON text (or a bare primitive name like ``long``), decoded."""
+    if not isinstance(schema, str):
+        return schema
+    stripped = schema.strip()
+    return json.loads(stripped) if stripped.startswith(("{", "[", '"')) else stripped
+
+
 def parse_avsc(schema: str | dict | list) -> object:
     """Parse .avsc JSON (text or already-decoded) into the conform target
     model (Record / Union / Enum / Array / Spark DataType)."""
-    if isinstance(schema, str):
-        stripped = schema.strip()
-        if stripped.startswith(("{", "[", '"')):
-            schema = json.loads(stripped)
-        else:
-            schema = stripped  # bare primitive name like "long"
-    return _parse(schema, named={})
+    return _parse(_loads(schema), named={})
 
 
 def _parse(node: Any, named: dict[str, object]) -> object:
@@ -70,14 +73,7 @@ def _parse(node: Any, named: dict[str, object]) -> object:
     if isinstance(node, dict):
         t = node["type"]
         if t == "record":
-            fields = tuple(
-                Field(
-                    f["name"],
-                    _parse(f["type"], named),
-                    default=f.get("default", NO_DEFAULT),
-                )
-                for f in node["fields"]
-            )
+            fields = tuple(Field(f["name"], _parse(f["type"], named)) for f in node["fields"])
             rec = Record(fields, name=node.get("name", "record"))
             named[node.get("name", "record")] = rec
             return rec
@@ -102,104 +98,10 @@ def avsc_to_struct(schema: str | dict) -> T.StructType:
     return st
 
 
-# -------------------------------------------------------------------------
-# Schema resolution (Avro spec "Schema Resolution")
-# -------------------------------------------------------------------------
-
-#: writer -> reader promotions the Avro spec allows on read
-_PROMOTIONS = {
-    ("int", "long"), ("int", "float"), ("int", "double"), ("long", "float"),
-    ("long", "double"), ("float", "double"), ("string", "bytes"), ("bytes", "string"),
-}
-
-_TYPE_NAMES = {Record: "record", Enum: "enum", Array: "array", Union: "union"} | {
-    type(t): name for name, t in _PRIMITIVES.items()
-}
-
-
-def _type_name(model: object) -> str:
-    return _TYPE_NAMES.get(type(model), "?")
-
-
-def resolve(reader: object, writer: object, path: str = "$") -> list[str]:
-    """Every path-tagged reason data written with ``writer`` cannot be read
-    as ``reader`` (parsed models); empty when it can. The rules are the
-    Avro spec's, which the JVM codec's resolving reader applies:
-
-    - primitives: equal, or a spec-listed writer->reader promotion
-      (int->long/float/double, long->float/double, float->double,
-      string<->bytes);
-    - records: fields matched BY NAME; a reader field missing from the
-      writer needs a ``default``; writer-only fields are skipped;
-    - enums: every writer symbol must exist in the reader's symbol set;
-    - arrays: item schemas must resolve;
-    - unions: every writer branch must resolve against SOME reader
-      branch (a non-union writer is the one-branch case; a non-union
-      reader must accept every writer branch).
-    """
-    if isinstance(writer, Union):
-        return [
-            f"{path}: writer union branch {_type_name(branch)!r}"
-            " has no compatible reader branch"
-            for i, branch in enumerate(writer.branches)
-            if resolve(reader, branch, f"{path}[w-union:{i}]")
-        ]
-
-    wk = _type_name(writer)
-    if isinstance(reader, Union):
-        if any(not resolve(branch, writer, path) for branch in reader.branches):
-            return []
-        return [f"{path}: writer {wk!r} matches no branch of the reader union"]
-
-    rk = _type_name(reader)
-    if rk in _PRIMITIVES and wk in _PRIMITIVES:
-        if rk == wk or (wk, rk) in _PROMOTIONS:
-            return []
-        return [f"{path}: writer {wk!r} cannot promote to reader {rk!r}"]
-
-    if rk != wk:
-        return [f"{path}: reader is {rk!r} but writer is {wk!r}"]
-
-    if rk == "array":
-        return resolve(reader.element, writer.element, f"{path}.items")
-
-    if rk == "enum":
-        missing = [s for s in writer.symbols if s not in set(reader.symbols)]
-        return [f"{path}: writer enum symbols {missing} absent from reader"] if missing else []
-
-    if rk == "record":
-        w_fields = writer.field_map()
-        probs = []
-        for rf in reader.fields:
-            if rf.name in w_fields:
-                probs += resolve(rf.type, w_fields[rf.name].type, f"{path}.{rf.name}")
-            elif rf.default is NO_DEFAULT:
-                probs.append(
-                    f"{path}.{rf.name}: reader field absent from writer and"
-                    " has no default"
-                )
-        return probs
-
-    raise UnsupportedAvroType(f"cannot resolve avro type {rk!r}")
-
-
-def schema_incompatibilities(
-    reader: str | dict | list, writer: str | dict | list, path: str = "$"
-) -> list[str]:
-    """Why data written with ``writer`` can NOT be read as ``reader`` —
-    empty list means compatible: :func:`resolve`'s problem list, the
-    pre-flight every consumer upgrade needs BEFORE deploying against a
-    live topic (the registry tells you what producers wrote)."""
-    return resolve(parse_avsc(reader), parse_avsc(writer), path)
-
-
-def cannot_read(problems: list[str]) -> str:
-    """The one message for a writer whose data the reader cannot read."""
-    return "reader schema cannot read writer data:\n  " + "\n  ".join(problems)
-
-
-def assert_can_read(reader: str | dict, writer: str | dict) -> None:
-    """Raise ValueError listing every incompatibility (empty = return)."""
-    problems = schema_incompatibilities(reader, writer)
-    if problems:
-        raise ValueError(cannot_read(problems))
+def schema_incompatibilities(reader: str | dict | list, writer: str | dict | list) -> list[str]:
+    """Why data written with ``writer`` can NOT be read as ``reader``, one
+    path-tagged reason each (empty = compatible): the pre-flight every
+    consumer upgrade needs BEFORE deploying against a live topic. The
+    verdicts are Avro's own ``Resolver``'s, taken in the JVM codec
+    (``AvroCodec.problems``), so it needs an active Spark session."""
+    return jvm.problems(json.dumps(_loads(reader)), json.dumps(_loads(writer)))

@@ -15,7 +15,9 @@ two levels, both on the driver, once per plan:
   previous versions) carry different writer ids. The decode plan lists
   every version of the subject (:meth:`SchemaRegistryClient.subject_schemas`)
   and hands the id -> writer schema map to the JVM codec
-  (jvm/AvroCodec.java), which reads each record with Avro's resolving
+  (jvm/AvroCodec.java), which refuses a writer by the verdict of Avro's
+  ``Resolver`` (as :func:`check_reader_compatibility` does, so both need
+  an active session) and reads each record with Avro's resolving
   reader for its id. No registry call is made per record or on an
   executor; a writer registered after the plan was built needs a
   restart.
@@ -30,18 +32,16 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 
+from kafka_streams_plumber_spark.sources.avsc import schema_incompatibilities
+
 
 class SchemaNotFound(KeyError):
-    """Raised when the registry has no schema for an id or subject."""
+    """Raised when the registry has no such subject or version."""
 
 
 class SchemaRegistryClient:
-    """Interface: resolve schemas by id (decode path) and by subject
-    (reader-schema pinning / encode path)."""
-
-    def schema_by_id(self, schema_id: int) -> str:
-        """Avro schema JSON text for a registered schema id."""
-        raise NotImplementedError
+    """Interface: resolve schemas by subject: its latest version (reader
+    pinning, encode) and every version (the registry decode's writers)."""
 
     def latest_schema(self, subject: str) -> tuple[int, str]:
         """(schema_id, schema_text) of the subject's latest version."""
@@ -76,12 +76,6 @@ class FakeSchemaRegistry(SchemaRegistryClient):
         self._subjects.setdefault(subject, []).append(sid)
         return sid
 
-    def schema_by_id(self, schema_id: int) -> str:
-        try:
-            return self._by_id[schema_id]
-        except KeyError:
-            raise SchemaNotFound(f"schema id {schema_id}") from None
-
     def latest_schema(self, subject: str) -> tuple[int, str]:
         ids = self._subjects.get(subject)
         if not ids:
@@ -96,15 +90,12 @@ class FakeSchemaRegistry(SchemaRegistryClient):
 
 
 class HttpSchemaRegistryClient(SchemaRegistryClient):
-    """Confluent Schema Registry REST client (GET /schemas/ids/{id},
-    GET /subjects/{subject}/versions[/latest|/{version}]) with a cache:
-    ids are immutable, so cache hits never revalidate; subjects cache
-    only within this client instance's lifetime."""
+    """Confluent Schema Registry REST client (GET
+    /subjects/{subject}/versions[/latest|/{version}]), with no cache."""
 
     def __init__(self, base_url: str, *, timeout: float = 10.0):
         self.base_url = base_url.rstrip("/")
         self.timeout = timeout
-        self._id_cache: dict[int, str] = {}
 
     def _get(self, path: str) -> dict | list:
         import urllib.error
@@ -120,13 +111,6 @@ class HttpSchemaRegistryClient(SchemaRegistryClient):
                 raise SchemaNotFound(path) from None
             raise
 
-    def schema_by_id(self, schema_id: int) -> str:
-        if schema_id not in self._id_cache:
-            self._id_cache[schema_id] = self._get(f"/schemas/ids/{schema_id}")[
-                "schema"
-            ]
-        return self._id_cache[schema_id]
-
     def latest_schema(self, subject: str) -> tuple[int, str]:
         return self._version(subject, "latest")
 
@@ -135,9 +119,7 @@ class HttpSchemaRegistryClient(SchemaRegistryClient):
 
     def _version(self, subject: str, version) -> tuple[int, str]:
         doc = self._get(f"/subjects/{subject}/versions/{version}")
-        sid, schema = int(doc["id"]), doc["schema"]
-        self._id_cache[sid] = schema
-        return sid, schema
+        return int(doc["id"]), doc["schema"]
 
 
 def check_reader_compatibility(
@@ -149,9 +131,5 @@ def check_reader_compatibility(
     registry-side complement of the refuse-to-start golden-test gate —
     run both before attaching a streaming job to a production topic.
     """
-    from kafka_streams_plumber_spark.sources.avsc import (
-        schema_incompatibilities,
-    )
-
     _, writer_schema = client.latest_schema(subject)
     return schema_incompatibilities(reader_schema, writer_schema)

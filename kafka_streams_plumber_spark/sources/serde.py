@@ -2,7 +2,8 @@
 columns — parity with the reference's MappingType serde layer
 (TypeConversions.scala:12-35, GenericAvroSerializer.scala:9-73).
 
-Four wire types (SURVEY.md §1.2): long (8-byte big-endian), string
+Four wire types (SURVEY.md §1.2): long (8-byte big-endian; a payload of
+another length fails, as Kafka's LongSerde does), string
 (UTF-8), avro (schema from .avsc or the registry, optionally
 Confluent-framed), void (always NULL). long, string and void are column
 expressions. Avro is one Java UDF each way (jvm/AvroCodec.java, built and
@@ -16,13 +17,15 @@ JVM, in both modes of the reference's Avro serde.
   subject's latest schema as the reader. When a decode plan is built with
   a ``registry``, every version the subject has THEN is handed to the
   UDF, and each payload is read with the writer its embedded id names
-  (Avro's resolving reader). A writer registered after the plan was built
-  is unknown to it: its records fail naming the id, and the job needs a
-  restart to read them.
+  (Avro's resolving reader); a writer Avro's ``Resolver`` refuses fails
+  its records with the pre-flight's reasons. A writer registered after
+  the plan was built is unknown to it: its records fail naming the id,
+  and the job needs a restart to read them.
 
 The Java functions are registered in the Spark session active on the
-thread that builds the plan, so build and run an Avro plan on that
-session; with no active session the plan is refused when it is built.
+thread that builds the plan, one per set of schemas (the UDF's only
+argument is its column); build and run an Avro plan on that session;
+with no active session the plan is refused when it is built.
 
 Type strings parse exactly like the reference CLI (`string`,
 `long`, `avro=file.avsc`, `avro`, `void` — TypeConversions.scala:42-51):
@@ -39,11 +42,7 @@ from pyspark.sql import functions as F
 
 from kafka_streams_plumber_spark import jvm
 from kafka_streams_plumber_spark.operators.conform import spark_type
-from kafka_streams_plumber_spark.sources.avsc import (
-    cannot_read,
-    parse_avsc,
-    schema_incompatibilities,
-)
+from kafka_streams_plumber_spark.sources.avsc import parse_avsc
 
 _U64 = 1 << 64
 _I64_MAX = (1 << 63) - 1
@@ -121,8 +120,11 @@ def decode(
         # exceeds a py4j long, so it rides in as a decimal literal.
         u = F.conv(F.hex(col), 16, 10).cast("decimal(20,0)")
         wrap = F.lit(str(_U64)).cast("decimal(21,0)")
-        signed = F.when(u > _I64_MAX, u - wrap).otherwise(u)
-        return signed.cast("long")
+        signed = F.when(u > _I64_MAX, u - wrap).otherwise(u).cast("long")
+        # any other length fails, as Kafka's LongSerde does
+        size = F.octet_length(col)
+        bad = F.raise_error(F.format_string("long payload of %d bytes: a Kafka long is 8 bytes", size))
+        return F.when(size == 8, signed).when(col.isNotNull(), bad)
     if wt.kind == "avro":
         if wt.avsc is None:
             raise ValueError(
@@ -223,34 +225,24 @@ def _null_fill(reader, writer):
     return {**reader, "fields": fields}
 
 
-def _writers(wt: WireType, registry) -> Column:
-    """The registry decode's id -> writer map, a ``map<int,array<string>>``
-    literal over every version of ``wt``'s subject: [writer text, reader
-    text for that writer] (:func:`_null_fill`), or [why the reader cannot
-    read it], raised when a record with that id arrives. The pre-flight
-    here (``avsc.resolve``) only words that reason; Avro's resolving
-    reader in the JVM is the authority, so a writer it still refuses fails
-    its records as "truncated or corrupt"."""
+def _writers(wt: WireType, registry) -> dict[int, list[str]]:
+    """The registry decode's id -> writer map over every version of
+    ``wt``'s subject: [writer text, reader text for that writer]
+    (:func:`_null_fill`), a plain dict for the codec's constructor."""
     if wt.subject is None:
         raise ValueError("a registry decode needs the subject: pin the type "
                          "with resolve_registry_type()")
     reader = json.loads(wt.avsc)
-    entries = []
-    for sid, text in registry.subject_schemas(wt.subject):
-        own = json.dumps(_null_fill(reader, json.loads(text)))
-        problems = schema_incompatibilities(own, text)
-        texts = [cannot_read(problems)] if problems else [text, own]
-        entries += [F.lit(sid), F.array(*map(F.lit, texts))]
-    return F.create_map(*entries)
+    return {sid: [text, json.dumps(_null_fill(reader, json.loads(text)))]
+            for sid, text in registry.subject_schemas(wt.subject)}
 
 
 def _avro_decode(col: Column, wt: WireType, *, framed: bool, registry) -> Column:
     """The avro decode: the Java UDF over ``wt``'s schema, the writer of
     every payload unless a ``registry`` names one per id."""
-    name = jvm.avro_function("decode", wt.avsc, spark_type(wt.model))
-    writers = (F.lit(None).cast("map<int,array<string>>") if registry is None
-               else _writers(wt, registry))
-    return F.call_function(name, col, F.lit(wt.avsc), F.lit(framed), writers)
+    writers = None if registry is None else _writers(wt, registry)
+    name = jvm.avro_function("decode", spark_type(wt.model), wt.avsc, framed, writers)
+    return F.call_function(name, col)
 
 
 def _avro_encode(col: Column, wt: WireType, schema_id: int | None) -> Column:
@@ -258,5 +250,5 @@ def _avro_encode(col: Column, wt: WireType, schema_id: int | None) -> Column:
     every payload with its Confluent header."""
     from pyspark.sql import types as T
 
-    name = jvm.avro_function("encode", wt.avsc, T.BinaryType())
-    return F.call_function(name, col, F.lit(wt.avsc), F.lit(schema_id).cast("int"))
+    name = jvm.avro_function("encode", T.BinaryType(), wt.avsc, schema_id)
+    return F.call_function(name, col)

@@ -101,9 +101,9 @@ class PlumberJob:
     def _check_registered_writers(self) -> None:
         """Schema-evolution refuse-to-start: a file-pinned reader schema
         must resolve the subject's latest registered writer schema
-        (sources/avsc.py:schema_incompatibilities) — catching a consumer
-        deploy against an incompatibly-evolved topic BEFORE it streams
-        (otherwise the mismatch only surfaces as runtime decode drops).
+        (sources/avsc.py:schema_incompatibilities, Avro's own verdicts)
+        — catching a consumer deploy against an incompatibly-evolved
+        topic BEFORE it streams (otherwise it only surfaces at decode).
         """
         if self.registry is None:
             return

@@ -195,9 +195,8 @@ def test_avsc_union_and_enum_roundtrip():
         '{"name":"u","type":["null","boolean","int","long","float","double","string"]},'
         '{"name":"e","type":{"type":"enum","name":"Q","symbols":["A","B"]}}]}'
     )
-    u = model.field_map()["u"].type
+    u, e = (f.type for f in model.fields)
     assert isinstance(u, Union) and len(u.non_null) == 6 and u.nullable
-    e = model.field_map()["e"].type
     assert isinstance(e, Enum) and e.symbols == ("A", "B")
 
 

@@ -68,11 +68,8 @@ def test_fake_registry_contract():
     id2 = reg.register("t-value", V2)
     assert id1 != id2
     assert reg.register("t-value", V1) == id1  # idempotent
-    assert json.loads(reg.schema_by_id(id1)) == json.loads(V1)
     sid, text = reg.latest_schema("t-value")
     assert sid == id2 and json.loads(text) == json.loads(V2)
-    with pytest.raises(SchemaNotFound):
-        reg.schema_by_id(999)
     with pytest.raises(SchemaNotFound):
         reg.latest_schema("nope")
 
@@ -219,10 +216,7 @@ def _registry_http_server(reg: FakeSchemaRegistry):
 
         def do_GET(self):
             try:
-                if self.path.startswith("/schemas/ids/"):
-                    sid = int(self.path.rsplit("/", 1)[1])
-                    doc = {"schema": reg.schema_by_id(sid)}
-                elif self.path.startswith("/subjects/") and self.path.endswith(
+                if self.path.startswith("/subjects/") and self.path.endswith(
                     "/versions/latest"
                 ):
                     subject = self.path.split("/")[2]
@@ -262,14 +256,9 @@ def test_http_client_against_live_server():
     srv = _registry_http_server(reg)
     try:
         client = HttpSchemaRegistryClient(f"http://127.0.0.1:{srv.server_port}")
-        assert json.loads(client.schema_by_id(id1)) == json.loads(V1)
         sid, text = client.latest_schema("t-value")
         assert sid == id1 and json.loads(text) == json.loads(V1)
-        with pytest.raises(SchemaNotFound):
-            client.schema_by_id(12345)
-        # cache: survives server death for known ids
         srv.shutdown()
-        assert json.loads(client.schema_by_id(id1)) == json.loads(V1)
     finally:
         srv.server_close()
 
@@ -338,11 +327,11 @@ def test_registry_decode_schema_evolution_matrix(spark):
     string->bytes), enum SYMBOL ADDITION and a reader-only field with a
     non-null DEFAULT across three writer ids in ONE topic, all decoded
     against the pinned latest reader. The runtime resolution must
-    agree with the assert_can_read pre-flight: every writer the
+    agree with the schema_incompatibilities pre-flight: every writer the
     pre-flight accepts decodes losslessly by field NAME (order,
     width, and symbol set free to differ), and the evolutions the
     pre-flight rejects are exactly the ones with no resolution rule."""
-    from kafka_streams_plumber_spark.sources.avsc import assert_can_read
+    from kafka_streams_plumber_spark.sources.avsc import schema_incompatibilities
 
     enum_ab = {"type": "enum", "name": "ev", "symbols": ["A", "B"]}
     enum_abc = {"type": "enum", "name": "ev", "symbols": ["A", "B", "C"]}
@@ -409,16 +398,14 @@ def test_registry_decode_schema_evolution_matrix(spark):
 
     # the pre-flight accepts every writer in the matrix...
     for w in (w1, w2, w3):
-        assert_can_read(reader, w)
+        assert schema_incompatibilities(reader, w) == []
     # ...and rejects exactly the unresolvable evolutions
     bad_enum = w3.replace('"C"', '"D"')  # writer symbol D absent from reader
-    with pytest.raises(ValueError, match="absent from reader"):
-        assert_can_read(reader, bad_enum)
+    assert "absent from reader" in "\n".join(schema_incompatibilities(reader, bad_enum))
     bad_promo = w2.replace('"a", "type": "long"', '"a", "type": "string"')
-    with pytest.raises(ValueError, match="cannot promote"):
-        assert_can_read(reader, bad_promo)
-    with pytest.raises(ValueError, match="no default"):
-        assert_can_read(w2, w1)  # w2's b has no default -> w1 data illegal
+    assert "cannot promote" in "\n".join(schema_incompatibilities(reader, bad_promo))
+    # w2's b has no default -> w1 data illegal
+    assert "no default" in "\n".join(schema_incompatibilities(w2, w1))
 
     reg = FakeSchemaRegistry()
     id1 = reg.register("m-value", w1)
@@ -468,3 +455,90 @@ def test_registry_decode_schema_evolution_matrix(spark):
     )
     with pytest.raises(Exception, match="absent from reader"):
         bad.select(decode(F.col("value"), wt, registry=reg)).collect()
+
+
+def _rec(name, *fields):
+    return json.dumps({"type": "record", "name": name, "fields": list(fields)})
+
+
+def _enum(name, symbols, **kw):
+    return {"type": "enum", "name": name, "symbols": symbols, **kw}
+
+
+#: (reader, writer, the record written, the raw pre-flight's reason or
+#: None, what the registry decode gives or None when it refuses the writer)
+AGREEMENT = {
+    "enum with a reader default": (
+        _rec("m", {"name": "e", "type": _enum("E", ["A", "U"], default="U")}),
+        _rec("m", {"name": "e", "type": _enum("E", ["A", "B"])}),
+        {"e": "B"}, None, {"e": "U"}),
+    "field alias": (
+        _rec("m", {"name": "b", "type": "long", "aliases": ["a"]}),
+        _rec("m", {"name": "a", "type": "long"}),
+        {"a": 5}, None, {"b": 5}),
+    "enum symbol the reader lacks": (
+        _rec("m", {"name": "e", "type": _enum("E", ["A"])}),
+        _rec("m", {"name": "e", "type": _enum("E", ["A", "B"])}),
+        {"e": "B"}, "absent from reader", None),
+    "enum rename": (
+        _rec("m", {"name": "e", "type": _enum("F", ["A", "B"])}),
+        _rec("m", {"name": "e", "type": _enum("E", ["A", "B"])}),
+        {"e": "A"}, "Found E, expecting F", None),
+    "top-level record rename": (
+        _rec("n", {"name": "a", "type": "long"}),
+        _rec("m", {"name": "a", "type": "long"}),
+        {"a": 1}, None, {"a": 1}),
+    "nested record rename": (
+        _rec("m", {"name": "i", "type": json.loads(_rec("J", {"name": "x", "type": "long"}))}),
+        _rec("m", {"name": "i", "type": json.loads(_rec("I", {"name": "x", "type": "long"}))}),
+        {"i": {"x": 2}}, None, {"i": {"x": 2}}),
+    "int to long": (
+        _rec("m", {"name": "a", "type": "long"}),
+        _rec("m", {"name": "a", "type": "int"}),
+        {"a": 3}, None, {"a": 3}),
+    "long to int": (
+        _rec("m", {"name": "a", "type": "int"}),
+        _rec("m", {"name": "a", "type": "long"}),
+        {"a": 4}, "cannot promote", None),
+    # the registry decode null-fills the field for this writer, by policy
+    "reader field with no default": (
+        _rec("m", {"name": "a", "type": "long"}, {"name": "b", "type": "string"}),
+        _rec("m", {"name": "a", "type": "long"}),
+        {"a": 6}, "no default", {"a": 6, "b": None}),
+    "union narrowing": (
+        _rec("m", {"name": "v", "type": ["null", "long"]}),
+        _rec("m", {"name": "v", "type": ["null", "long", "string"]}),
+        {"v": {"long": 7, "string": None}}, "branch", None),
+}
+
+
+@pytest.mark.parametrize("case", AGREEMENT)
+def test_preflight_agrees_with_the_registry_decode(spark, case):
+    """The pre-flight and the registry decode take one verdict: a writer
+    the pre-flight accepts for the reader the decode resolves it with
+    (the reader, null-filled for that writer) decodes, and one it refuses
+    fails with the pre-flight's reasons, never as a corrupt payload. The
+    verdicts are the ones Avro's resolving reader acts on."""
+    from kafka_streams_plumber_spark.sources.avsc import schema_incompatibilities
+    from kafka_streams_plumber_spark.sources.serde import _null_fill
+
+    reader, writer, value, reason, want = AGREEMENT[case]
+    problems = schema_incompatibilities(reader, writer)
+    assert (reason in "\n".join(problems)) if reason else problems == [], problems
+
+    reg = FakeSchemaRegistry()
+    wid = reg.register("a-value", writer)
+    reg.register("a-value", reader)
+    wt = resolve_registry_type(parse_type("avro"), reg, "a-value")
+    df = spark.createDataFrame([(_framed(wid, writer, value),)], "value binary")
+    dec = df.select(decode(F.col("value"), wt, registry=reg).alias("v"))
+    own = json.dumps(_null_fill(json.loads(reader), json.loads(writer)))
+    refused = schema_incompatibilities(own, writer)
+    if want is None:
+        with pytest.raises(Exception) as e:
+            dec.collect()
+        assert refused and all(p in str(e.value) for p in refused), str(e.value)
+        assert "truncated or corrupt" not in str(e.value)
+    else:
+        assert refused == []
+        assert dec.collect()[0].v.asDict(recursive=True) == want

@@ -16,7 +16,7 @@ from pyspark.sql import Row
 from pyspark.sql import types as T
 
 from kafka_streams_plumber_spark import jvm
-from kafka_streams_plumber_spark.plans.inspect import python_eval_count
+from kafka_streams_plumber_spark.plans.inspect import plan_string, python_eval_count
 from kafka_streams_plumber_spark.sources.registry import FakeSchemaRegistry
 from kafka_streams_plumber_spark.sources.serde import (
     WireType,
@@ -117,6 +117,17 @@ def test_avro_confluent_framing_roundtrip(spark):
 def _decoded(spark, payload: bytes, wt, **kw):
     df = spark.createDataFrame([(payload,)], "b binary")
     return df.select(decode(F.col("b"), wt, **kw).alias("v")).collect()[0].v
+
+
+def test_long_decode_refuses_payloads_not_8_bytes(spark):
+    """Kafka's LongSerde throws on a payload that is not 8 bytes; the long
+    wire type fails the query naming the length, and NULL stays NULL."""
+    wt = WireType("long")
+    assert _decoded(spark, None, wt) is None
+    assert _decoded(spark, b"\xff" * 8, wt) == -1
+    for payload in (b"", b"\x01\x02", b"\x00" * 9):
+        with pytest.raises(Exception, match=f"long payload of {len(payload)} bytes"):
+            _decoded(spark, payload, wt)
 
 
 def test_avro_decode_record_rejects_trailing_and_truncated_payloads(spark):
@@ -245,7 +256,9 @@ def test_avro_encode_rejects_null_in_non_nullable_field(spark):
 def test_every_avro_path_plans_no_python(spark, tmp_path):
     """ROADMAP aim 3, pinned on the executed plans: file-pinned decode and
     encode, framed decode, registry decode and the container-file reader
-    all run in the JVM."""
+    all run in the JVM. Schemas ride in each codec function's instance,
+    not in the rows: no plan holds schema text, and each codec call's only
+    argument is its payload or value column."""
     from kafka_streams_plumber_spark.sources.avro_ocf import read_avro_ocf
 
     wt = WireType("avro", DEMO_AVSC)
@@ -255,14 +268,18 @@ def test_every_avro_path_plans_no_python(spark, tmp_path):
     framed = b"\x00" + sid.to_bytes(4, "big") + DEMO_X1
     raw = spark.createDataFrame([(DEMO_X1, framed)], "b binary, f binary")
     plans = {
-        "decode": raw.select(decode(F.col("b"), wt).alias("v")),
-        "encode": spark.createDataFrame([(Row(name="x", n=1),)], "v struct<name:string, n:long>")
-        .select(encode(F.col("v"), wt).alias("b")),
-        "framed decode": raw.select(decode(F.col("f"), wt, confluent_framing=True).alias("v")),
-        "registry decode": raw.select(decode(F.col("f"), rt, registry=reg).alias("v")),
+        "decode": (raw.select(decode(F.col("b"), wt).alias("v")), "b"),
+        "encode": (spark.createDataFrame([(Row(name="x", n=1),)], "v struct<name:string, n:long>")
+                   .select(encode(F.col("v"), wt).alias("b")), "v"),
+        "framed decode": (raw.select(decode(F.col("f"), wt, confluent_framing=True).alias("v")), "f"),
+        "registry decode": (raw.select(decode(F.col("f"), rt, registry=reg).alias("v")), "f"),
     }
-    for path, plan in plans.items():
+    for path, (plan, column) in plans.items():
         assert python_eval_count(plan) == 0, path
+        text = plan_string(plan)
+        calls = re.findall(r"plumber_avro_\w+\(([^()]*)\)", text)
+        assert "fields" not in text and calls, text
+        assert all(re.fullmatch(rf"{column}#\d+", c) for c in calls), text
         assert plan.collect()[0][0] in (Row(name="x", n=1), bytearray(DEMO_X1)), path
     (tmp_path / "trash.avro").write_bytes(b"not avro")
     ocf = read_avro_ocf(spark, str(tmp_path), DEMO_AVSC)
