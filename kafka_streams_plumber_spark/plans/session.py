@@ -19,6 +19,20 @@ Spark's 100). Memory cost: after one pass over all 316 ``QUERIES`` at
 sf0.001, heap in use after GC was 291 MB and Metaspace 216 MB at 4096
 entries, against 166 MB and 184 MB at 100, so about 40 KB per cached
 class. A session holds only the classes its plans used.
+
+Call-site capture: PySpark records the Python file:line of every
+DataFrame and ``F.*`` call for error messages, at several py4j round
+trips each. Building q_mood_median sent 2,226 py4j commands with it and
+676 without. :func:`get_spark` turns it off
+(``spark.python.sql.dataFrameDebugging.enabled``), a static conf that
+also rides the builder; the driver's ``entry(spark)`` session keeps
+Spark's default. The cost: the ``== DataFrame ==`` context of an error
+names a JVM frame instead of the Python file:line, and only ANSI errors
+carry that context at all, while :data:`RUNTIME_CONF` turns ANSI off.
+
+Table loading: :func:`load_tables` builds each table's Spark schema from
+the parquet footer pyarrow reads anyway and hands it to the reader, so
+loading launches no Spark job (schema inference launched one per table).
 """
 
 from __future__ import annotations
@@ -26,6 +40,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -62,6 +77,11 @@ RUNTIME_CONF = {
     # The driver's parquet stores TIMESTAMP(NANOS), which Spark's reader
     # rejects outright; read them as long and convert in load_tables.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Generated classes are cached by their source text, and by default
+    # that text names the whole-stage codegen id, which AQE hands out in
+    # the order stages get planned; that order varies from run to run, so
+    # a warm plan recompiled the same code under another class name.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 
@@ -92,6 +112,7 @@ def get_spark(
         .master(master)
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or (int(cpus) if cpus.isdigit() else 32)),
@@ -115,21 +136,31 @@ def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
     return sorted(tables)
 
 
-def _nanos_timestamp_cols(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) (driver testdata uses
-    them; Spark refuses to read them natively — PARQUET_TYPE_ILLEGAL)."""
-    try:
-        import pyarrow.parquet as pq
-        import pyarrow as pa
+def _footer_schema(path: str) -> tuple[T.StructType, list[str]]:
+    """Spark's read schema of the parquet file at ``path``, built from its
+    footer, and the columns stored as TIMESTAMP(NANOS).
 
-        schema = pq.read_schema(path)
-        return [
-            f.name
-            for f in schema
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
-    except Exception:
-        return []
+    Naive timestamps map to TIMESTAMP_NTZ and UTC-adjusted ones to
+    TIMESTAMP, as Spark infers them. TIMESTAMP(NANOS) maps to LONG: Spark
+    refuses to read it natively (PARQUET_TYPE_ILLEGAL) and reads it as
+    long under ``nanosAsLong``. An unreadable footer raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    try:
+        arrow = pq.read_schema(path)
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(f"cannot read the parquet footer of {path}: {e}") from e
+    fields, nanos = [], []
+    for f in arrow:
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
+            nanos.append(f.name)
+            dt = T.LongType()
+        else:
+            dt = from_arrow_type(f.type, prefer_timestamp_ntz=True)
+        fields.append(T.StructField(f.name, dt))
+    return T.StructType(fields), nanos
 
 
 #: (id(spark), sf_dir) -> (spark, tables). Holding the session ref keeps
@@ -145,9 +176,13 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     narrow. TIMESTAMP(NANOS) columns are read via nanosAsLong and converted
     to TimestampType (microsecond truncation — same as DuckDB's read).
 
-    Memoized per (session, dir): schema inference costs a JVM round-trip
-    per table, and query entry points each call this — a bench run would
-    otherwise pay hundreds of redundant parquet-footer reads. DataFrames
+    Each table is one parquet file. Its schema comes from the footer,
+    read once with pyarrow (:func:`_footer_schema`), and is handed to the
+    reader, so loading launches no Spark job; the first job runs when a
+    query does. An unreadable footer raises and names the file.
+
+    Memoized per (session, dir): query entry points each call this, and
+    every load still costs a few JVM round trips per table. DataFrames
     are immutable plans, safe to share across queries in one session.
     """
     from pyspark.sql import functions as F
@@ -157,15 +192,14 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     if hit is not None and hit[0] is spark:
         return dict(hit[1])
 
-    from pyspark.sql import types as T
-
     tune(spark)
     out: dict[str, DataFrame] = {}
     for name in TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
-            df = spark.read.parquet(path)
-            for c in _nanos_timestamp_cols(path):
+            schema, nanos = _footer_schema(path)
+            df = spark.read.schema(schema).parquet(path)
+            for c in nanos:
                 df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
             # Parquet written with isAdjustedToUTC=false arrives as
             # TIMESTAMP_NTZ, which time-arithmetic builtins (unix_millis,
@@ -173,7 +207,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             # cast to TimestampType reinterprets the same wall clock as
             # UTC — exactly how DuckDB (the oracle) reads naive parquet
             # timestamps — so downstream semantics are unchanged.
-            for f in df.schema.fields:
+            for f in schema.fields:
                 if isinstance(f.dataType, T.TimestampNTZType):
                     df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
             out[name] = df
