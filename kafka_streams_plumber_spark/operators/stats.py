@@ -2593,8 +2593,11 @@ def kendall_tau(
     )
     xs = cells.select("_x").distinct()
     ys = cells.select("_y").distinct()
+    # ys is bounded by the grid contract. Broadcasting it pins the nested
+    # loop join's build side: left to the planner, the side swapped from
+    # one run to the next in one session, and each swap compiled new code.
     grid = truncate_lineage(
-        xs.crossJoin(ys)
+        xs.crossJoin(F.broadcast(ys))
         .join(cells, ["_x", "_y"], "left")
         .select("_x", "_y", F.coalesce("_n", F.lit(0)).alias("_n")),
         checkpoint_dir,

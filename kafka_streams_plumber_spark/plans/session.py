@@ -30,6 +30,15 @@ Spark's default. The cost: the ``== DataFrame ==`` context of an error
 names a JVM frame instead of the Python file:line, and only ANSI errors
 carry that context at all, while :data:`RUNTIME_CONF` turns ANSI off.
 
+Stream starts: :func:`start_stream` starts a stream on a local checkpoint
+with Spark's ``FileSystemBasedCheckpointFileManager`` instead of the
+default ``FileContext`` one, whose local file system starts a
+``readlink`` process per link-status check when Hadoop's native library
+is missing (32 per 50k-record drain of the demo job). The choice is a
+session conf set around the start only; :data:`RUNTIME_CONF` and
+:func:`get_spark` do not carry it, because on HDFS that manager ignores
+``overwriteIfPossible``.
+
 Table loading: :func:`load_tables` builds each table's Spark schema from
 the parquet footer pyarrow reads anyway and hands it to the reader, so
 loading launches no Spark job (schema inference launched one per table).
@@ -38,9 +47,12 @@ loading launches no Spark job (schema inference launched one per table).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 TABLES = (
     "region",
@@ -83,6 +95,86 @@ RUNTIME_CONF = {
     # a warm plan recompiled the same code under another class name.
     "spark.sql.codegen.useIdInClassName": "false",
 }
+
+
+#: The session conf naming the class that writes a stream's offset and
+#: commit logs (Spark's ``SQLConf.STREAMING_CHECKPOINT_FILE_MANAGER_CLASS``).
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+#: Spark's manager that renames with ``FileSystem.rename``: on a local path
+#: that is ``File.renameTo``, an atomic POSIX rename.
+LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+#: How long :func:`start_stream` waits for a started query's sources.
+_SOURCES_WAIT_MS = 60_000
+
+
+def checkpoint_manager_class(checkpoint: str, default_fs: str) -> str | None:
+    """The checkpoint file manager a stream checkpointed at ``checkpoint``
+    should start with, or None for Spark's default.
+
+    The file system is resolved as Hadoop's ``Path`` does: a scheme is
+    the text before a ``:`` that comes before any ``/``, and a path
+    without one lives on ``default_fs`` (``fs.defaultFS``). Only the
+    local file system (``file``) gets :data:`LOCAL_CHECKPOINT_MANAGER`.
+    """
+    colon, slash = checkpoint.find(":"), checkpoint.find("/")
+    if colon != -1 and (slash == -1 or colon < slash):
+        scheme = checkpoint[:colon]
+    else:
+        default_fs = default_fs.strip()
+        scheme = "file" if default_fs == "local" else default_fs.partition(":")[0]
+    return LOCAL_CHECKPOINT_MANAGER if scheme.lower() == "file" else None
+
+
+def start_stream(
+    spark: SparkSession, checkpoint: str, start: Callable[[], StreamingQuery]
+) -> StreamingQuery:
+    """Call ``start()``, which starts a stream checkpointed at
+    ``checkpoint`` and returns its query, with the checkpoint file
+    manager :func:`checkpoint_manager_class` picks, and return the query.
+
+    Spark's default manager (``FileContextBasedCheckpointFileManager``)
+    goes through Hadoop's ``FileContext``. Without the Hadoop native
+    library, the local file system answers each of its link-status
+    checks with a ``readlink`` process, 8 per checkpoint write.
+    :data:`LOCAL_CHECKPOINT_MANAGER` renames with ``File.renameTo`` and
+    starts none. A checkpoint that is not local keeps Spark's default:
+    on HDFS the other manager does not overwrite when asked to
+    (``overwriteIfPossible``, used for state-store delta files).
+
+    The session conf is set only for the start and then unset; the query
+    keeps the manager of each log it made meanwhile. The stream's thread
+    makes its sources' and sink's logs before the query counts as
+    initialized (``awaitInitialization``), and its offset and commit logs
+    lazily, after that. They are made here instead, while the conf is
+    still set, so the unset cannot race them. A value already set, in
+    the session conf or in the Hadoop conf, is left alone. Only a
+    PySpark ``StreamingQuery`` is waited for: a ``sink_factory`` may hand
+    back any object with its ``stop`` and ``awaitTermination``, which is
+    all ``PlumberJob.run`` uses.
+    """
+    hadoop = spark._jsparkSession.sessionState().newHadoopConf()
+    manager = checkpoint_manager_class(checkpoint, hadoop.get("fs.defaultFS", "file:///"))
+    if manager is None or hadoop.get(CHECKPOINT_MANAGER_CONF) is not None:
+        return start()
+    spark.conf.set(CHECKPOINT_MANAGER_CONF, manager)
+    try:
+        query = start()
+        if isinstance(query, StreamingQuery):
+            jq = query._jsq.streamingQuery()
+            try:
+                jq.awaitInitialization(_SOURCES_WAIT_MS)
+            except Py4JJavaError:
+                pass  # the query died starting; awaitTermination raises why
+            jq.offsetLog()
+            jq.commitLog()
+        return query
+    finally:
+        spark.conf.unset(CHECKPOINT_MANAGER_CONF)
 
 
 def tune(spark: SparkSession) -> SparkSession:

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_streams_plumber_spark.operators.sampling import split_bucket
+from kafka_streams_plumber_spark.plans.session import start_stream
 
 
 def shard_export_batch_fn(
@@ -98,15 +99,10 @@ def shard_stream(
 ):
     """Wire a streaming DataFrame into the shard layout. Returns the
     started StreamingQuery."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            shard_export_batch_fn(
-                out_dir, id_col, n_shards=n_shards, token_col=token_col
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    w = stream_df.writeStream.foreachBatch(
+        shard_export_batch_fn(out_dir, id_col, n_shards=n_shards, token_col=token_col)
+    ).option("checkpointLocation", checkpoint)
+    return start_stream(stream_df.sparkSession, checkpoint, w.start)
 
 
 def read_manifest(spark, out_dir: str) -> DataFrame:

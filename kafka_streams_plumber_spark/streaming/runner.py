@@ -8,18 +8,27 @@ Streaming (Plumber.scala:26-86; SURVEY.md §3 entry point 1):
 The golden gate is the defining behavior: a job whose pipeline does not
 reproduce its declared fixtures REFUSES to start streaming
 (Plumber.scala:41-50).
+
+The sink starts through ``plans.session.start_stream``: on a local
+``checkpoint`` the query writes its offset and commit logs with Spark's
+``FileSystemBasedCheckpointFileManager``, which starts no ``readlink``
+process per write where Hadoop's native library is missing. A
+``sink_factory`` should checkpoint at ``checkpoint``, the path that
+choice is made for.
 """
 
 from __future__ import annotations
 
 import signal
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 from kafka_streams_plumber_spark.operators.conform import conform
 from kafka_streams_plumber_spark.operators.pipeline import Pipeline
+from kafka_streams_plumber_spark.plans.session import start_stream
 from kafka_streams_plumber_spark.sources.kafka import (
     kafka_sink,
     kafka_sink_options,
@@ -217,15 +226,17 @@ class PlumberJob:
             )
         out = self._transformed(src)
         if self.sink_factory is not None:
-            query = self.sink_factory(out)
+            start = partial(self.sink_factory, out)
         else:
-            query = kafka_sink(
+            start = partial(
+                kafka_sink,
                 out,
                 spec["sink"]["options"],
                 key_type=self.output_key,
                 value_type=self.output_value,
                 confluent_framing=self.confluent_framing,
             )
+        query = start_stream(self.spark, self.checkpoint, start)
         # graceful shutdown (Plumber.scala:79-83)
         def _stop(signum, frame):
             query.stop()

@@ -18,6 +18,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.query import StreamingQuery
 
+from kafka_streams_plumber_spark.plans.session import start_stream
+
 
 def partitioned_parquet_sink(path: str) -> Callable[[DataFrame, int], None]:
     """foreachBatch function writing each micro-batch to
@@ -51,4 +53,4 @@ def start_foreach_batch(
         w = w.queryName(query_name)
     if trigger_once:
         w = w.trigger(availableNow=True)
-    return w.start()
+    return start_stream(df.sparkSession, checkpoint, w.start)

@@ -144,3 +144,16 @@ def test_identical_codegen_stages_compile_once(spark, tmp_path):
     both = compiles(branch(1, c + 2).union(branch(2, c + 2)))
     assert single > 0
     assert both == single
+
+
+def test_kendall_warm_runs_compile_nothing(spark):
+    """q_kendall's cross join of the grid axes broadcasts one side, so its
+    build side stays put from run to run and warm runs in one session
+    find every class in the code cache."""
+    from kafka_streams_plumber_spark.plans.inspect import codegen_compiles
+
+    QUERIES["q_kendall"](spark, SF_DIR).collect()
+    before = codegen_compiles(spark)
+    for _ in range(5):
+        QUERIES["q_kendall"](spark, SF_DIR).collect()
+    assert codegen_compiles(spark) - before == 0
